@@ -15,6 +15,11 @@ import graft.functions.GraftFunctions._
   * measurement surface; this main exists so OPTIMIZATION_r06.md numbers are
   * reproducible. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchExtra [plansDir]"
+  * SPARK_GRAFT_EXTRA_SECTIONS (comma list, default
+  * "q19b,q17,q29,q26,q35,q20,misc") picks the sections. The q14 shape A/B
+  * is not in the default set: run it with SPARK_GRAFT_EXTRA_SECTIONS=q14ab,
+  * and set SPARK_GRAFT_Q14_ORDER (default "plain,fanout,barrier") to
+  * measure the variants in both orders.
   */
 object BenchExtra {
 

@@ -145,10 +145,14 @@ object Pipeline {
     val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
     // Stage boundaries truncate lineage: parquet commit when resumable
     // checkpointing is on (keyed by a config fingerprint so a config change
-    // recomputes instead of serving stale stages), LAZY localCheckpoint
-    // otherwise — each stage materialises exactly once at its first action
-    // and is reused after, but without eager per-stage driver barriers
-    // (round-1 bench showed the serial barriers dominating local wall).
+    // recomputes instead of serving stale stages), localCheckpoint(eager =
+    // false) otherwise. That is not fully lazy under AQE (on in PipelineMain
+    // and the bench): the call plans and compiles the stage's subplan and
+    // runs every shuffle map stage in it at once; only the final stage waits
+    // for the first action, and the result is reused after. So an in-memory
+    // run pays a stage's shuffles even when nothing reads the stage (run()'s
+    // `refined`). Eager barriers (localCheckpoint(true)) were measured
+    // slower: the serial barriers dominated local wall.
     // Reference analogue: per-stage temp-table materialisation,
     // sql_pipeline/runner.py:471-491.
     val fp = configFingerprint(cfg)

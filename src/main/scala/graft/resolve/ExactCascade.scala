@@ -24,7 +24,8 @@ import graft.functions.GraftFunctions._
   *      executor and dies exactly at the scale it matters), every token
   *      suffix up to `maxDepth` becomes a join key; the trie walk "descend
   *      as deep as possible, succeed iff the subtree holds exactly one id"
-  *      is a max-k window over the suffix join with an n_cand = 1 gate.
+  *      is a max-k window over the suffix join with a min == max
+  *      uniqueness gate on the candidate id (one distinct candidate).
   *      Same semantics, but distributed, AQE-planned and skew-handled like
   *      every other join in the engine.
   *

@@ -100,13 +100,14 @@ object Scoring {
   def tfProduct(histL: Column, histR: Column): Column = {
     // NOTE (round-5 measured NEGATIVE result): rewriting this as
     // array_intersect(map_keys, map_keys) + element_at lookups per shared
-    // key — the pattern that won in refine (DistinguishingTokens.scala:45)
-    // — is ~27% SLOWER here (best-of-6 scoring reps 2.87 s vs 2.08 s at
-    // 130k pairs, clean probes both runs). Refine's win came from folds
-    // over POOL maps (hundreds of entries); these per-record hists are
-    // small (~tens), where map_filter's single pass beats intersect's
-    // two map_keys allocations + TWO linear element_at scans per shared
-    // key (the entry fold gets vL for free). Keep the map_filter form.
+    // key — the pattern that won in refine's former column plan (now the
+    // test oracle RefineColumnOracle) — is ~27% SLOWER here (best-of-6
+    // scoring reps 2.87 s vs 2.08 s at 130k pairs, clean probes both runs).
+    // Refine's win came from folds over POOL maps (hundreds of entries);
+    // these per-record hists are small (~tens), where map_filter's single
+    // pass beats intersect's two map_keys allocations + TWO linear
+    // element_at scans per shared key (the entry fold gets vL for free).
+    // Keep the map_filter form.
     val shared = map_filter(histL, (k, _) => map_contains_key(histR, k))
     aggregate(
       map_entries(shared),
