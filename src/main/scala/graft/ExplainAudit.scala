@@ -61,8 +61,9 @@ object ExplainAudit {
     }
     dump("pipeline signatures (turns -> per-conversation features)",
       sigs,
-      "Want: single shuffle for the conversation groupBy; TF attach joins " +
-        "as BroadcastHashJoin (vocabulary-sized table).")
+      "Want: single shuffle for the conversation groupBy, then one UDF " +
+        "projection per kernel (signatures, TF attach); no join, explode or " +
+        "second shuffle (TF is a broadcast vocabulary-sized map).")
 
     dump("self-dedup cascade (one-window collapse)",
       graft.resolve.ExactCascade.selfExactLinks(

@@ -160,11 +160,9 @@ object Pipeline {
       ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
 
     // 1. signatures (+ TF attach). s0 is materialised once inside the
-    // stage: tokenFrequencies, attachTf's per-token explode and the final
-    // feature join are three more instances of the signatures subplan —
-    // exchange reuse shares the conversation shuffle but each instance
-    // recomputed the heavy post-aggregate projection (measured as the
-    // dominant pipeline stage at 30k convs).
+    // stage: it has two readers, the TF table (collected to the driver by
+    // attachTf) and the attach projection, and without the barrier each
+    // would recompute the per-conversation signature kernel.
     val sigs = staged("signatures") {
       val s0 = Signatures.signatures(turns).localCheckpoint(false)
       val tf = Signatures.tokenFrequencies(s0)

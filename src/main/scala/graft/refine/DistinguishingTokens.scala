@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructType}
+import graft.functions.Utf8Order
 
 /** Second pass: adjust pairwise match weights using tokens that distinguish
   * candidates within each candidate group (reference:
@@ -110,25 +111,6 @@ object DistinguishingTokens {
     val h = mutable.HashMap.empty[String, Int]
     elems.foreach(e => h.update(e, h.getOrElse(e, 0) + 1))
     h
-  }
-
-  /** Spark's string order: UTF-8 byte order, which is code point order.
-    * String.compareTo orders by UTF-16 unit and puts supplementary
-    * characters (surrogates D800-DFFF) below U+E000-U+FFFF.
-    */
-  private object Utf8Order extends Ordering[String] {
-    private def codePointRank(c: Char): Int =
-      if (c < 0xd800) c else if (c < 0xe000) c + 0x2000 else c - 0x800
-    def compare(a: String, b: String): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val (x, y) = (a.charAt(i), b.charAt(i))
-        if (x != y) return codePointRank(x) - codePointRank(y)
-        i += 1
-      }
-      a.length - b.length
-    }
   }
 
   /** Steps 5-7 and the final adjustment for one messy record's top-N

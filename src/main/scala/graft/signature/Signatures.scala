@@ -1,13 +1,22 @@
 package graft.signature
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import java.util.regex.Pattern
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.api.java.{UDF1, UDF2}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Utf8Order
 
 /** Per-conversation signature derivation — the transcript analogue of the
   * reference's cleaning pipeline (reference: cleaning/pipelines.py:35-63,
-  * term_frequencies.py), re-expressed as one declarative Spark plan.
+  * term_frequencies.py).
   *
   * Input: one row per turn (conv_id, turn_idx, role, text, tool, ts).
   * Output: one row per conversation:
@@ -21,6 +30,15 @@ import graft.functions.GraftFunctions._
   *   - tokens, token TF features, salient (rarest) tokens 1..3
   *     (numeric_token_1..3 analogue, reference tokenisation.py:22-36).
   *   - minhash signature + LSH band keys (north_star blocking keys).
+  *
+  * Scale shape: one shuffle (the conversation collect), then one plain-Scala
+  * function per conversation for every signature column, and one per row
+  * for the TF columns against a broadcast token->rel_freq map: no explode,
+  * join or groupBy. Each is a UDF returning a struct, expanded once. The
+  * kernels follow Spark's own text rules (ICU-aware upper-casing,
+  * java.util.regex patterns, UTF8String.trim, lengths in code points,
+  * UTF-8 string order), so their output is bit-identical to the
+  * column-expression plan kept as the test oracle SignaturesColumnOracle.
   */
 object Signatures {
 
@@ -31,92 +49,105 @@ object Signatures {
   /** TF-attach miss default (reference: term_frequencies.py:104-111). */
   val DefaultRelFreq = 5e-5
 
-  /** Aggregate turns into ordered per-conversation rows. */
-  def conversations(turns: DataFrame): DataFrame = {
-    val collected = turns
-      .select(col("conv_id"), struct(col("turn_idx"), col("role"), col("text"), col("ts")).as("t"))
-      .groupBy(col("conv_id"))
-      .agg(array_sort(collect_list(col("t"))).as("ts_sorted"))
-    collected.select(
-      col("conv_id"),
-      size(col("ts_sorted")).as("n_turns"),
-      transform(col("ts_sorted"), t => normText(t.getField("text"))).as("turn_texts"),
-      transform(col("ts_sorted"), t => t.getField("role")).as("roles"),
-      concat_ws("", transform(col("ts_sorted"),
-        t => upper(substring(t.getField("role"), 1, 1)))).as("role_seq"))
+  private val Punct = Pattern.compile("[\\p{Punct}]")
+  private val Whitespace = Pattern.compile("\\s+")
+  /** xxhash64(lit(seed), shingle) hashes the seed first, from Spark's 42. */
+  private val SeedHashes = Array.tabulate(MinhashK)(s => XXH64.hashInt(s, 42L))
+
+  /** Spark's upper(): `icu` is spark.sql.icu.caseMappings.enabled (with it,
+    * "ß" becomes "SS").
+    */
+  private def upper(s: UTF8String, icu: Boolean): String =
+    CollationSupport.Upper.exec(s, CollationFactory.UTF8_BINARY_COLLATION_ID, icu).toString
+
+  /** GraftFunctions.normText on one string: upper-case, punctuation to a
+    * space, whitespace runs to one space, trim. UTF8String.trim strips
+    * spaces only; String.trim would also strip control characters.
+    */
+  private def normText(s: String, icu: Boolean): String = {
+    val spaced = Punct.matcher(upper(UTF8String.fromString(s), icu)).replaceAll(" ")
+    UTF8String.fromString(Whitespace.matcher(spaced).replaceAll(" ")).trim().toString
+  }
+
+  private val SignatureSchema = StructType(Seq(
+    StructField("n_turns", IntegerType, nullable = false),
+    StructField("turn_texts", ArrayType(StringType), nullable = false),
+    StructField("roles", ArrayType(StringType), nullable = false),
+    StructField("role_seq", StringType, nullable = false),
+    StructField("sig_text", StringType, nullable = false),
+    StructField("tokens", ArrayType(StringType), nullable = false),
+    StructField("numeric_token_1", StringType),
+    StructField("numeric_token_2", StringType),
+    StructField("numeric_token_3", StringType),
+    StructField("len_band", IntegerType),
+    StructField("bk_role_len", StringType, nullable = false),
+    StructField("minhash_sig", ArrayType(LongType)),
+    StructField("minhash_bands", ArrayType(StringType))))
+
+  /** Every signature column of one conversation from its roles and texts in
+    * turn order.
+    */
+  private def signatureRow(roles: Seq[String], texts: Seq[String], icu: Boolean): Row = {
+    // a null text stays null here and is skipped in sig_text (concat_ws)
+    val turnTexts = texts.map(t => if (t == null) null else normText(t, icu))
+    val roleSeq = roles.iterator.filter(_ != null)
+      .map(r => upper(UTF8String.fromString(r).substringSQL(1, 1), icu)).mkString
+    val sigText = turnTexts.iterator.filter(_ != null).mkString(" ")
+    // "" tokens are dropped: a punctuation-only turn normalises to "", and
+    // sig_text keeps that empty element (a leading or doubled space). A
+    // rare "" would otherwise become a salient token and co-block
+    // unrelated records. sig_text itself stays as concat_ws builds it: it
+    // is the exact-match / length surface, not the token surface.
+    val tokens = sigText.split(" ").filter(_.nonEmpty)
+    // positional numeric tokens (reference: numeric_token_1..3,
+    // cleaning/steps/tokenisation.py:22-36) — document order, so filler
+    // text cannot displace them the way it can displace rarity-ranked
+    // salient tokens
+    val numeric = tokens.iterator.filter(_.forall(c => c >= '0' && c <= '9')).take(3).toArray
+    val nChars = math.max(sigText.codePointCount(0, sigText.length), 1)
+    val lenBand = math.floor(StrictMath.log(nChars) / StrictMath.log(2.0)).toInt
+    // MinHash over distinct word-3-gram shingles (not unigram tokens):
+    // unrelated records sharing a vocabulary still have near-disjoint
+    // shingle sets, so LSH bands stay selective (candidate-pair count is
+    // THE scale driver). A conversation with <3 tokens has no shingles,
+    // hence NULL minhash_sig and NULL band keys: the un-blockable
+    // convention every other feature follows (blocking drops null keys),
+    // rather than a shared sentinel that would glue every short
+    // conversation into one giant block per band.
+    val (minhash, bands) =
+      if (tokens.length < 3) (null, null)
+      else {
+        val mins = Array.fill(MinhashK)(Long.MaxValue)
+        Iterator.range(0, tokens.length - 2)
+          .map(i => s"${tokens(i)} ${tokens(i + 1)} ${tokens(i + 2)}").distinct
+          .foreach { shingle =>
+            val bytes = UTF8String.fromString(shingle)
+            var k = 0
+            while (k < MinhashK) {
+              mins(k) = math.min(mins(k), XXH64.hashUTF8String(bytes, SeedHashes(k)))
+              k += 1
+            }
+          }
+        // GraftFunctions.minhashBandKeys: "<band>_<slot>_..._<slot>"
+        (mins, Array.tabulate(Bands)(b =>
+          s"${b}_" + mins.slice(b * RowsPerBand, (b + 1) * RowsPerBand).mkString("_")))
+      }
+    Row(texts.length, turnTexts, roles, roleSeq, sigText, tokens.toSeq,
+      numeric.lift(0).orNull, numeric.lift(1).orNull, numeric.lift(2).orNull,
+      lenBand, s"$roleSeq#$lenBand", minhash, bands)
   }
 
   /** Full signature table from raw turns. */
   def signatures(turns: DataFrame): DataFrame = {
-    val conv = conversations(turns)
-    val withText = conv
-      .withColumn("sig_text", concat_ws(" ", col("turn_texts")))
-      // "" elements are filtered out of tokens: a punctuation-only turn
-      // normalises to "", concat_ws keeps the empty element, and split
-      // would emit a "" token that then poisons TF/rarity (a rare ""
-      // becomes salient_token_1 of every such conversation and co-blocks
-      // unrelated records). sig_text itself is left byte-identical — it is
-      // the exact-match / length surface, not the token surface.
-      .withColumn("tokens",
-        when(length(col("sig_text")) === 0, array().cast("array<string>"))
-          .otherwise(filter(split(col("sig_text"), " "), t => length(t) > 0)))
-    // positional numeric tokens (reference: numeric_token_1..3,
-    // cleaning/steps/tokenisation.py:22-36) — document-order, so filler
-    // text cannot displace them the way it can displace rarity-ranked
-    // salient tokens
-    // all-digits test as a translate-to-empty check, not a regex — at none
-    // of the per-token regex cost. The explicit length(t) > 0 guard matches
-    // rlike("^[0-9]+$")'s one-or-more: "" tokens ARE reachable (a
-    // punctuation-only turn normalises to "", concat_ws keeps empty
-    // elements, split emits ""), and without the guard two unrelated
-    // conversations would "match" on numeric_token_1 = ""
-    val numericToks = filter(col("tokens"),
-      t => length(t) > 0 && length(translate(t, "0123456789", "")) === 0)
-    val base = withText
-      .withColumn("numeric_token_1", try_element_at(numericToks, lit(1)))
-      .withColumn("numeric_token_2", try_element_at(numericToks, lit(2)))
-      .withColumn("numeric_token_3", try_element_at(numericToks, lit(3)))
-      .withColumn("len_band", floor(log2(greatest(length(col("sig_text")), lit(1)))).cast("int"))
-      .withColumn("bk_role_len", concat_ws("#", col("role_seq"), col("len_band")))
-    // MinHash over word-3-gram shingles (not unigram tokens): unrelated
-    // records sharing a vocabulary still have near-disjoint shingle sets,
-    // so LSH bands stay selective (candidate-pair count is THE scale
-    // driver; shingle->minhash->band is the standard near-dup design).
-    // Computed via explode+groupBy-min — the Column-expression form
-    // re-inlines the shingle pipeline once per hash seed (see
-    // GraftFunctions.minhashAggregate).
-    //
-    // base is MATERIALISED once (lazy localCheckpoint) before the minhash
-    // branch: base and mh are two instances of the same subplan joined
-    // together, so without the barrier the post-aggregate projection (the
-    // per-turn normText chain + tokenise + shingle) is computed once per
-    // instance, and the explode inside minhashAggregate additionally
-    // re-inlines the shingle chain into its inferred size(__sh) > 0
-    // filter (guide §1.2; measured 11.9 s -> ~5 s for the signatures
-    // stage at 30k convs). Fresh RDD per call — no cross-run caching.
-    val baseSh = base
-      .withColumn("__sh", array_distinct(wordNgrams(col("tokens"), 3)))
-      .localCheckpoint(false)
-    val mh = minhashAggregate(
-      baseSh.select(col("conv_id"), col("__sh")),
-      "conv_id", col("__sh"), MinhashK)
-    baseSh.drop("__sh").join(mh, Seq("conv_id"), "left")
-      // band keys from the RAW (nullable) signature: a conversation with
-      // <3 tokens has no shingles, hence no minhash — its band keys must
-      // be NULL (the un-blockable convention every other feature follows;
-      // blocking filters null keys before the shuffle) rather than a
-      // shared sentinel that would glue every short conversation in the
-      // corpus into one giant block per band (explicit when(): concat_ws
-      // inside minhashBandKeys skips nulls, so it would NOT null-propagate)
-      .withColumn("minhash_bands",
-        when(col("minhash_sig").isNull, lit(null).cast("array<string>"))
-          .otherwise(minhashBandKeys(col("minhash_sig"), Bands, RowsPerBand)))
-    // minhash_sig stays NULL for shingle-less (<3-token) conversations —
-    // the un-blockable convention minhash_bands follows. The old
-    // Long.MaxValue sentinel fill had no in-pipeline consumer and two
-    // shingle-less records carried IDENTICAL sentinel signatures, so any
-    // future consumer comparing minhash_sig directly would silently
-    // re-introduce the glue-everything bug (ADVICE r5).
+    val icu = turns.sparkSession.conf.get(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key).toBoolean
+    val kernel: UDF2[Seq[String], Seq[String], Row] = signatureRow(_, _, icu)
+    turns
+      .select(col("conv_id"), struct(col("turn_idx"), col("role"), col("text"), col("ts")).as("t"))
+      .groupBy(col("conv_id"))
+      .agg(array_sort(collect_list(col("t"))).as("ts_sorted"))
+      .select(col("conv_id"), udf(kernel, SignatureSchema).asNonNullable()(
+        col("ts_sorted.role"), col("ts_sorted.text")).as("__sig"))
+      .select(col("conv_id"), col("__sig.*"))
   }
 
   /** Corpus-level common END tokens: tokens that terminate more than
@@ -150,69 +181,74 @@ object Signatures {
       .select(col("token"), (col("cnt") / col("__total")).as("rel_freq"))
   }
 
-  /** Attach TF features: token->rel_freq map, salient (rarest) tokens 1..3,
-    * and frequency-banded unusual-token arrays (reference:
+  private val TfSchema = StructType(Seq(
+    StructField("token_freq_hist", MapType(StringType,
+      StructType(Seq(StructField("cnt", IntegerType, nullable = false),
+        StructField("rel_freq", DoubleType))), valueContainsNull = false)),
+    StructField("unusual_tokens", ArrayType(StringType)),
+    StructField("very_unusual_tokens", ArrayType(StringType)),
+    StructField("extremely_unusual_tokens", ArrayType(StringType)),
+    StructField("salient_token_1", StringType),
+    StructField("salient_token_2", StringType),
+    StructField("salient_token_3", StringType)))
+
+  private final case class TokenTf(token: String, cnt: Int, relFreq: Double)
+
+  /** Rarity order: rel_freq ascending, then token in Spark's string order
+    * (the reference's list_grade_up, term_frequencies.py:272-305).
+    */
+  private object RarityOrder extends Ordering[TokenTf] {
+    def compare(a: TokenTf, b: TokenTf): Int = {
+      val byFreq = SQLOrderingUtil.compareDoubles(a.relFreq, b.relFreq)
+      if (byFreq != 0) byFreq else Utf8Order.compare(a.token, b.token)
+    }
+  }
+
+  /** The TF columns of one conversation's tokens; NULL when it has none. */
+  private def tfRow(tokens: Seq[String], freqs: Map[String, Double],
+      unusualMax: Double, veryUnusualMax: Double, extremelyUnusualMax: Double): Row = {
+    if (tokens == null || tokens.isEmpty) return null
+    val counts = mutable.HashMap.empty[String, Int]
+    tokens.foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
+    val tfs = counts.iterator
+      .map { case (t, n) => TokenTf(t, n, freqs.getOrElse(t, DefaultRelFreq)) }
+      .toArray.sorted(RarityOrder)
+    // insertion order is the map's entry order: Scoring.tfProduct folds
+    // the entries in it
+    val hist = new java.util.LinkedHashMap[String, Row]()
+    tfs.foreach(e => hist.put(e.token, Row(e.cnt, e.relFreq)))
+    def bandTokens(lo: Double, hi: Double): Array[String] =
+      tfs.filter(e => e.relFreq < hi && e.relFreq >= lo).map(_.token)
+    def salient(i: Int): String = if (i < tfs.length) tfs(i).token else null
+    Row(hist, bandTokens(veryUnusualMax, unusualMax),
+      bandTokens(extremelyUnusualMax, veryUnusualMax), bandTokens(0.0, extremelyUnusualMax),
+      salient(0), salient(1), salient(2))
+  }
+
+  /** Attach TF features: token->(cnt, rel_freq) map, salient (rarest)
+    * tokens 1..3, and frequency-banded unusual-token arrays (reference:
     * term_frequencies.py:264-307 bands at 1e-4 / 5e-5 / 1e-7, retuned as
     * corpus-relative quantile-ish thresholds configurable by caller).
+    * A token missing from `tf` gets DefaultRelFreq; a conversation without
+    * tokens gets NULL in all seven columns.
     *
-    * The TF table is broadcast when small (reference TF ~300k rows); at
-    * 100 TB the TF table itself stays small (vocabulary-sized), so
-    * broadcast is the scale-correct default.
+    * `tf` is collected into a map on the driver and broadcast (reference
+    * TF ~300k rows; at 100 TB the TF table itself stays vocabulary-sized),
+    * then every row derives its columns from its own tokens: no explode,
+    * join or groupBy.
     */
   def attachTf(
       sigs: DataFrame,
       tf: DataFrame,
       unusualMax: Double = 1e-3,
       veryUnusualMax: Double = 1e-4,
-      extremelyUnusualMax: Double = 1e-5,
-      broadcastTf: Boolean = true): DataFrame = {
-    val tfSide = if (broadcastTf) broadcast(tf) else tf
-    // Aggregate at (conv, token) level first: counts are map-side
-    // combinable and the downstream per-conversation array is one entry per
-    // DISTINCT token — every derived feature (hist map, rarity bands,
-    // salient tokens) needs exactly that granularity. The reference builds
-    // a per-occurrence array and histograms it later
-    // (term_frequencies.py:49-61, 354-355); aggregating first is the
-    // shuffle-light equivalent.
-    val perToken = sigs
-      .select(col("conv_id"), explode(col("tokens")).as("token"))
-      .join(tfSide, Seq("token"), "left")
-      .withColumn("rel_freq", coalesce(col("rel_freq"), lit(DefaultRelFreq)))
-      .groupBy(col("conv_id"), col("token"))
-      .agg(count(lit(1)).cast("int").as("cnt"), first(col("rel_freq")).as("rel_freq"))
-
-    // one collect per conversation; array_sort on the struct's natural
-    // field order (rel_freq asc, token asc) replaces comparator lambdas —
-    // far smaller generated code, same rarity ordering as the reference's
-    // list_grade_up (term_frequencies.py:272-305)
-    val perConv = perToken
-      .groupBy(col("conv_id"))
-      .agg(array_sort(collect_list(
-        struct(col("rel_freq"), col("token"), col("cnt")))).as("tf_arr"))
-
-    def bandTokens(lo: Double, hi: Double): Column =
-      transform(
-        filter(col("tf_arr"), x => x.getField("rel_freq") < hi && x.getField("rel_freq") >= lo),
-        x => x.getField("token"))
-
-    val withBands = perConv
-      .withColumn("token_freq_hist",
-        map_from_entries(transform(col("tf_arr"), x =>
-          struct(x.getField("token").as("key"),
-            struct(x.getField("cnt").as("cnt"),
-              x.getField("rel_freq").as("rel_freq")).as("value")))))
-      .withColumn("unusual_tokens", bandTokens(veryUnusualMax, unusualMax))
-      .withColumn("very_unusual_tokens", bandTokens(extremelyUnusualMax, veryUnusualMax))
-      .withColumn("extremely_unusual_tokens", bandTokens(0.0, extremelyUnusualMax))
-      // salient tokens = 3 rarest distinct tokens (numeric_token_1..3 analogue)
-      .withColumn("salient_token_1",
-        try_element_at(col("tf_arr"), lit(1)).getField("token"))
-      .withColumn("salient_token_2",
-        try_element_at(col("tf_arr"), lit(2)).getField("token"))
-      .withColumn("salient_token_3",
-        try_element_at(col("tf_arr"), lit(3)).getField("token"))
-      .drop("tf_arr")
-
-    sigs.join(withBands, Seq("conv_id"), "left")
+      extremelyUnusualMax: Double = 1e-5): DataFrame = {
+    val freqs = tf.select(col("token"), col("rel_freq").cast("double")).collect()
+      .collect { case Row(t: String, f: Double) => t -> f }.toMap
+    val bc = sigs.sparkSession.sparkContext.broadcast(freqs)
+    val kernel: UDF1[Seq[String], Row] =
+      tfRow(_, bc.value, unusualMax, veryUnusualMax, extremelyUnusualMax)
+    sigs.select(col("*"), udf(kernel, TfSchema)(col("tokens")).as("__tf"))
+      .select(sigs.columns.toSeq.map(col) :+ col("__tf.*"): _*)
   }
 }
