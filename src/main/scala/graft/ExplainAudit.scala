@@ -119,8 +119,8 @@ object ExplainAudit {
 
     dump("q35 link-mode merge",
       SparkEntry.queries("q35_link_merge")(spark, sfDir),
-      "Want: cascade joins (dedupe-then-join, unique-shingle aggregate " +
-        "gates), carry-forward anti-joins, rule joins with exclusion " +
+      "Want: the cascade (ExactCascade.run) materialised once and read " +
+        "as a scan, carry-forward anti-joins, rule joins with exclusion " +
         "filters, best-match rank window, deterministic-wins anti-join " +
         "before the union.")
 

@@ -92,15 +92,6 @@ object GraftFunctions {
     when(sz < n, array().cast("array<string>")).otherwise(joined)
   }
 
-  /** Character n-grams of a string (reference trigram stage:
-    * linking_model/exact_matching/resolve_with_trigrams.py:10-20).
-    */
-  def charNgrams(c: Column, n: Int): Column = {
-    val len = length(c)
-    when(len < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), len - (n - 1)), i => c.substr(i, lit(n))))
-  }
-
   // ---------------------------------------------------------------------
   // MinHash / SimHash (north_star: MinHash of concatenated turn text).
   // ---------------------------------------------------------------------

@@ -1,8 +1,12 @@
 package graft.resolve
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.util.hashing.MurmurHash3
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
+import org.apache.spark.sql.types._
+import graft.functions.Utf8Order
 
 /** Deterministic exact-match cascade — the cheap first pass that removes
   * easy matches before probabilistic scoring (reference:
@@ -10,12 +14,13 @@ import graft.functions.GraftFunctions._
   * SURVEY.md §3.2).
   *
   * Stage order (first match wins, like the reference's ordered stage list):
-  *   1. exact: normalised sig_text + blocking key equality, canonical side
-  *      deduped first (reference LATERAL ... LIMIT 1 rewritten as
-  *      row_number()=1 dedupe-then-join, annotate_exact_matches.py:31-58);
-  *   2. unique_shingle: a char-5-gram of the messy text that maps to
-  *      exactly one canonical record within the block key (reference
-  *      trigram stage, resolve_with_trigrams.py:54-157);
+  *   1. exact: sig_text + blocking key equality against the canonical side
+  *      deduped to its min id (reference LATERAL ... LIMIT 1,
+  *      annotate_exact_matches.py:31-58);
+  *   2. unique_shingle: the char-5-grams of the messy text that belong to
+  *      exactly one canonical record of its block all point at the same
+  *      canonical record, with at least 3 such hits (reference trigram
+  *      stage, resolve_with_trigrams.py:54-157);
   *   3. (optional) suffix_trie: deepest-unique token-suffix resolution —
   *      the reference's trie fallback (resolve_with_trie.py:16-56, whose
   *      build_suffix_trie/find_address UDFs are external stubs even there)
@@ -29,8 +34,22 @@ import graft.functions.GraftFunctions._
   *      Same semantics, but distributed, AQE-planned and skew-handled like
   *      every other join in the engine.
   *
-  * Between stages, unmatched rows carry forward via left_anti
-  * (matching_stages.py:173-183); results accumulate via unionByName.
+  * Stages 1-2 run as one block kernel (`exactAndShingleLinks`). The
+  * reference carries unmatched rows forward between stages (left_anti,
+  * matching_stages.py:173-183) and reduces the canonical side to the
+  * blocks those rows occupy (input_filters.py:40-96). That reduction only
+  * drops blocks no remaining record is in, so a record's stage-2 result
+  * does not depend on which other records matched in stage 1: the kernel
+  * computes both stages for every record and applies the precedence per
+  * id at the end. Stage 3 still carries forward with left_anti.
+  *
+  * Scale shape of stages 1-2: one small aggregate of rows per block key;
+  * one shuffle of (id, sig_text) on (block_key, bucket); one map-side
+  * combined aggregate on the messy id. A block of more than `maxBlockRows`
+  * rows is split into S = ceil(rows / maxBlockRows) buckets by the hash of
+  * each shingle (its exact key by the hash of sig_text), so no task holds
+  * a hot block whole; a record of a split block ships its sig_text to
+  * each bucket its shingles fall in.
   */
 object ExactCascade {
 
@@ -112,69 +131,19 @@ object ExactCascade {
       .withColumn("match_reason", lit("exact_match"))
   }
 
-  /** Link messy -> canonical. Both frames need (id, sig_text, block_key).
-    * Returns (id, resolved_canonical_id, match_reason) for matched rows.
+  /** Link messy -> canonical. Both frames need (id, sig_text, block_key),
+    * the ids of one type: a string or an integral type. Returns (id,
+    * resolved_canonical_id, match_reason) for matched rows. Blocks of more
+    * than `maxBlockRows` rows are split for stages 1-2; the output does
+    * not depend on it.
     */
   def run(
       messy: DataFrame,
       canonical: DataFrame,
       idCol: String = "conv_id",
-      useSuffixStage: Boolean = false): DataFrame = {
-    // Stage 1: exact match on (sig_text, block_key), dedup canonical first.
-    val canonDedup = canonical
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("sig_text"), col("block_key"))
-          .orderBy(col(idCol).asc)))
-      .filter(col("__rn") === 1)
-      .select(col(idCol).as("resolved_canonical_id"), col("sig_text"), col("block_key"))
-
-    val exact = messy
-      .join(canonDedup, Seq("sig_text", "block_key"), "inner")
-      .select(col(idCol), col("resolved_canonical_id"),
-        lit("exact_match").as("match_reason"))
-
-    // Stage 2 input: rows not matched by stage 1.
-    val remaining = messy.join(exact.select(idCol), Seq(idCol), "left_anti")
-
-    // Stage 2: unique char-5-gram within block key. Semi-join canonical to
-    // observed messy block keys first (reference input_filters.py:40-96).
-    val canonFiltered = canonical
-      .join(remaining.select(col("block_key")).distinct(), Seq("block_key"), "left_semi")
-
-    val canonShingles = canonFiltered
-      .select(col(idCol).as("cand_id"), col("block_key"),
-        explode(array_distinct(charNgrams(col("sig_text"), 5))).as("shingle"))
-    // shingles unique to ONE canonical record within the block.
-    // min == max replaces countDistinct == 1 (identical gate on the
-    // non-null cand_id; when it holds, first == min == max) — avoids the
-    // extra Exchange of the two-level distinct aggregate (see
-    // resolveWithSuffixes' note).
-    val uniqueShingles = canonShingles
-      .groupBy(col("block_key"), col("shingle"))
-      .agg(min(col("cand_id")).as("cand_id"), max(col("cand_id")).as("__cand_max"))
-      .filter(col("cand_id") === col("__cand_max"))
-      .select(col("block_key"), col("shingle"), col("cand_id"))
-
-    val messyShingles = remaining
-      .select(col(idCol), col("block_key"),
-        explode(array_distinct(charNgrams(col("sig_text"), 5))).as("shingle"))
-
-    // one-to-one gate: every unique shingle of the messy record points at
-    // the same single canonical, with at least `minHits` supporting
-    // shingles (resolve_with_trigrams.py:121-134).
-    val minHits = 3
-    val shingleMatch = messyShingles
-      .join(uniqueShingles, Seq("block_key", "shingle"))
-      .groupBy(col(idCol))
-      .agg(min(col("cand_id")).as("resolved_canonical_id"),
-        max(col("cand_id")).as("__cand_max"), count(lit(1)).as("hits"))
-      .filter(col("resolved_canonical_id") === col("__cand_max") &&
-        col("hits") >= minHits)
-      .select(col(idCol), col("resolved_canonical_id"),
-        lit("unique_shingle").as("match_reason"))
-
-    val stage12 = exact.unionByName(shingleMatch)
+      useSuffixStage: Boolean = false,
+      maxBlockRows: Int = 200): DataFrame = {
+    val stage12 = exactAndShingleLinks(messy, canonical, idCol, maxBlockRows)
     if (!useSuffixStage) stage12
     else {
       // Stage 3: trie fallback on rows stages 1-2 left unmatched.
@@ -185,6 +154,165 @@ object ExactCascade {
         .select(col(idCol), col("resolved_canonical_id"), col("match_reason"))
       stage12.unionByName(trieMatch)
     }
+  }
+
+  private val ShingleLen = 5
+  private val MinHits = 3 // resolve_with_trigrams.py:121-134
+
+  /** Stages 1-2 (see object doc), with the semantics of the reference
+    * column plan (row_number dedupe + join, left_anti, shingle explode,
+    * min/max gates; `CascadeColumnOracle` in the test tree):
+    *   - shingles are the distinct 5-grams by code point (Spark's
+    *     length/substr), none under 5 code points;
+    *   - a NULL sig_text or block_key matches nothing;
+    *   - the exact dedupe orders ids NULLs first, then by Spark's order
+    *     (UTF-8 bytes for strings); shingle ownership skips NULL ids, as
+    *     min/max do;
+    *   - left_anti never removes a NULL messy id, so it can get both an
+    *     exact and a unique_shingle row.
+    * Messy ids are record keys: an id with several rows gets one exact
+    * row, its min candidate (the column plan emits one per matched row).
+    */
+  private def exactAndShingleLinks(
+      messy: DataFrame,
+      canonical: DataFrame,
+      idCol: String,
+      maxBlockRows: Int): DataFrame = {
+    require(maxBlockRows > 0, s"maxBlockRows must be positive, got $maxBlockRows")
+    def side(df: DataFrame, isMessy: Boolean) = df
+      .filter(col("sig_text").isNotNull && col("block_key").isNotNull)
+      .select(col("block_key"), lit(isMessy).as("__messy"), col(idCol).as("__id"),
+        col("sig_text"))
+    val in = side(messy, isMessy = true).unionByName(side(canonical, isMessy = false))
+    val idType = in.schema("__id").dataType
+    val idOrder = sparkOrder(idType)
+
+    // Block sizes: only split blocks are collected, with their bucket count.
+    val buckets: Map[Any, Int] = in.groupBy(col("block_key")).count()
+      .filter(col("count") > maxBlockRows).collect()
+      .map(r => r.get(0) -> ((r.getLong(1) + maxBlockRows - 1) / maxBlockRows).toInt).toMap
+
+    val routedSchema = StructType(Seq(in.schema("block_key"),
+      StructField("__bucket", IntegerType, nullable = false))) ++ in.schema.tail
+    val routed = in.flatMap { r =>
+      val to = buckets.get(r.get(0)) match {
+        case None => Set(0)
+        case Some(s) =>
+          val text = r.getString(3)
+          shingles(text).map(bucketOf(_, s)).toSet + bucketOf(text, s)
+      }
+      to.iterator.map(b => Row.fromSeq(r.get(0) +: b +: r.toSeq.tail))
+    }(Encoders.row(StructType(routedSchema)))
+
+    val partialSchema = StructType(Seq(
+      StructField("__id", idType),
+      StructField("__exact", BooleanType, nullable = false),
+      StructField("__exact_cand", idType),
+      StructField("__cand_min", idType),
+      StructField("__cand_max", idType),
+      StructField("__hits", LongType, nullable = false)))
+    val partials = routed.groupBy(col("block_key"), col("__bucket"))
+      .as(Encoders.row(StructType(routedSchema.take(2))), Encoders.row(StructType(routedSchema)))
+      .flatMapSortedGroups(col("__messy"))((key: Row, group: Iterator[Row]) =>
+        linkBucket(key.getInt(1), buckets.getOrElse(key.get(0), 1), group, idOrder)
+      )(Encoders.row(partialSchema))
+      .toDF()
+
+    val outSchema = StructType(Seq(
+      StructField(idCol, idType),
+      StructField("resolved_canonical_id", idType),
+      StructField("match_reason", StringType, nullable = false)))
+    partials.groupBy(col("__id"))
+      .agg(max(col("__exact")).as("__exact"), min(col("__exact_cand")).as("__exact_cand"),
+        min(col("__cand_min")).as("__cand_min"), max(col("__cand_max")).as("__cand_max"),
+        sum(col("__hits")).as("__hits"))
+      .flatMap { r =>
+        val id = r.get(0)
+        val exact = r.getBoolean(1)
+        val unique = !r.isNullAt(3) && r.get(3) == r.get(4) && r.getLong(5) >= MinHits
+        (if (exact) Iterator(Row(id, r.get(2), "exact_match")) else Iterator.empty) ++
+          (if ((!exact || id == null) && unique) Iterator(Row(id, r.get(3), "unique_shingle"))
+           else Iterator.empty)
+      }(Encoders.row(outSchema))
+      .toDF()
+  }
+
+  /** One (block_key, bucket) group, canonical rows first (`__messy`
+    * sorts false first). Emits (id, exact, exact_cand, cand_min,
+    * cand_max, hits) for each messy row with an exact hit or a unique
+    * shingle hit in this bucket.
+    */
+  private def linkBucket(
+      bucket: Int,
+      nBuckets: Int,
+      group: Iterator[Row],
+      idOrder: Ordering[Any]): Iterator[Row] = {
+    def mine(key: String) = nBuckets == 1 || bucketOf(key, nBuckets) == bucket
+    val minIdOfText = mutable.HashMap.empty[String, Any]
+    val ownerOf = mutable.HashMap.empty[String, Any]
+    val seen = mutable.HashSet.empty[String]
+    group.flatMap { r =>
+      val id = r.get(3)
+      val text = r.getString(4)
+      if (!r.getBoolean(2)) {
+        if (mine(text)) minIdOfText.get(text) match {
+          case Some(m) if m == null || (id != null && idOrder.gteq(id, m)) =>
+          case _ => minIdOfText.update(text, id)
+        }
+        if (id != null) shingles(text).foreach { s =>
+          if (mine(s)) ownerOf.get(s) match {
+            case None => ownerOf.update(s, id)
+            case Some(o) => if (o != Ambiguous && o != id) ownerOf.update(s, Ambiguous)
+          }
+        }
+        Iterator.empty
+      } else {
+        val exact = mine(text) && minIdOfText.contains(text)
+        var hits = 0L
+        var lo: Any = null
+        var hi: Any = null
+        seen.clear()
+        shingles(text).foreach { s =>
+          if (mine(s) && seen.add(s)) ownerOf.get(s) match {
+            case Some(o) if o != Ambiguous =>
+              hits += 1
+              if (lo == null || idOrder.lt(o, lo)) lo = o
+              if (hi == null || idOrder.gt(o, hi)) hi = o
+            case _ =>
+          }
+        }
+        if (!exact && hits == 0) Iterator.empty
+        else Iterator(Row(id, exact, if (exact) minIdOfText(text) else null, lo, hi, hits))
+      }
+    }
+  }
+
+  /** Marks a shingle held by more than one canonical id. */
+  private case object Ambiguous
+
+  private def bucketOf(key: String, nBuckets: Int): Int =
+    Math.floorMod(MurmurHash3.stringHash(key), nBuckets)
+
+  /** The char-5-grams of `text` by code point, in order, with repeats. */
+  private def shingles(text: String): Array[String] = {
+    val n = text.codePointCount(0, text.length)
+    if (n < ShingleLen) Array.empty
+    else if (n == text.length)
+      Array.tabulate(n - ShingleLen + 1)(i => text.substring(i, i + ShingleLen))
+    else {
+      val at = new Array[Int](n + 1) // UTF-16 offset of each code point
+      for (k <- 1 to n) at(k) = text.offsetByCodePoints(at(k - 1), 1)
+      Array.tabulate(n - ShingleLen + 1)(i => text.substring(at(i), at(i + ShingleLen)))
+    }
+  }
+
+  /** Spark's order for an id type, on the values a Row holds. */
+  private def sparkOrder(t: DataType): Ordering[Any] = t match {
+    case StringType => Utf8Order.on[Any](_.asInstanceOf[String])
+    case ByteType | ShortType | IntegerType | LongType =>
+      Ordering.Long.on[Any](_.asInstanceOf[Number].longValue)
+    case other => throw new IllegalArgumentException(
+      s"ExactCascade ids must be a string or an integral type, got ${other.simpleString}")
   }
 
   /** Annotate the full messy table with cascade results (unmatched rows get

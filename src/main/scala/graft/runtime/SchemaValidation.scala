@@ -1,7 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.apache.spark.sql.types._
 
 /** Input schema validation with aggregated, readable errors — the
@@ -19,6 +19,9 @@ import org.apache.spark.sql.types._
   *                                  string->timestamp allowed like the
   *                                  reference's to_timestamp normalisation)
   *   - anything else             -> error
+  *   - non-null                  -> a NULL value fails the first action
+  *                                  that reads the column (a lazy guard
+  *                                  in the returned projection, no job)
   * Extra columns pass through untouched (the reference keeps payload cols).
   */
 object SchemaValidation {
@@ -26,14 +29,16 @@ object SchemaValidation {
   final case class ColumnSpec(
       name: String,
       dataType: DataType,
-      required: Boolean = true)
+      required: Boolean = true,
+      nonNull: Boolean = false)
 
   /** The transcript turns contract (BASELINE.json input_hint):
-    * (conv_id string, turn_idx int, role string, text string,
-    *  tool string nullable, ts timestamp).
+    * (conv_id string non-null, turn_idx int, role string, text string,
+    *  tool string nullable, ts timestamp). A NULL conv_id would fold every
+    * id-less turn into one conversation.
     */
   val turnsSchema: Seq[ColumnSpec] = Seq(
-    ColumnSpec("conv_id", StringType),
+    ColumnSpec("conv_id", StringType, nonNull = true),
     ColumnSpec("turn_idx", IntegerType),
     ColumnSpec("role", StringType),
     ColumnSpec("text", StringType),
@@ -67,8 +72,7 @@ object SchemaValidation {
           None
         case None =>
           Some((d: DataFrame) =>
-            d.withColumn(spec.name, org.apache.spark.sql.functions.lit(null)
-              .cast(spec.dataType)))
+            d.withColumn(spec.name, lit(null).cast(spec.dataType)))
         case Some(dt) if dt == spec.dataType => None
         case Some(dt) if coercible(dt, spec.dataType) =>
           Some((d: DataFrame) =>
@@ -80,9 +84,14 @@ object SchemaValidation {
       }
     }
 
+    val guards = specs.filter(s => s.nonNull && present.contains(s.name)).map { spec =>
+      (d: DataFrame) => d.withColumn(spec.name, when(col(spec.name).isNull,
+        raise_error(lit(s"column '${spec.name}' must not be NULL"))).otherwise(col(spec.name)))
+    }
+
     val errs = errors.result()
     if (errs.nonEmpty) Left(errs)
-    else Right(fixes.foldLeft(df)((d, f) => f(d)))
+    else Right((fixes ++ guards).foldLeft(df)((d, f) => f(d)))
   }
 
   /** Validate-or-throw with every problem in one message (the reference

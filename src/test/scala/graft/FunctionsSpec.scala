@@ -42,8 +42,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.select(tokens($"s")).as[Seq[String]].head() === Seq("A", "B", "A", "C"))
     assert(df.select(wordNgrams(tokens($"s"), 2)).as[Seq[String]].head() ===
       Seq("A B", "B A", "A C"))
-    assert(Seq("abcd").toDF("s").select(charNgrams($"s", 3)).as[Seq[String]].head() ===
-      Seq("abc", "bcd"))
     val hm = df.select(histMap(tokens($"s"))).as[Map[String, Int]].head()
     assert(hm === Map("A" -> 2, "B" -> 1, "C" -> 1))
   }

@@ -62,6 +62,19 @@ class SchemaValidationSpec extends AnyFunSuite {
     assert(narrowing.isLeft)
   }
 
+  test("a NULL conv_id fails the first action, naming the column") {
+    val df = Seq(("c1", 0, "user", "hi"), (null, 1, "user", "hi"))
+      .toDF("conv_id", "turn_idx", "role", "text")
+    val out = SchemaValidation.validate(df, SchemaValidation.turnsSchema)
+    assert(out.isRight) // the check is lazy: no job runs in validate
+    val v = out.toOption.get
+    assert(v.schema("conv_id").dataType === StringType)
+    val err = intercept[Exception](v.collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage))
+    assert(messages.exists(_.contains("column 'conv_id' must not be NULL")))
+  }
+
   test("extra columns pass through untouched") {
     val df = Seq(("c1", 0, "user", "hi", "payload"))
       .toDF("conv_id", "turn_idx", "role", "text", "extra")
