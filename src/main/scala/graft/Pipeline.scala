@@ -39,9 +39,7 @@ object Pipeline {
       /** hot-block tiering (north_rule "salted hot-block splitting"):
         * blocks <= maxBlockRows join plainly, <= maxBlockRows*maxSaltFactor
         * join salted (no recall loss), above that sorted-neighborhood
-        * salvage on sig_text order replaces the round-1 drop-at-cap. In
-        * link mode it also caps the block the exact cascade holds in one
-        * task (`ExactCascade.run`).
+        * salvage on sig_text order replaces the round-1 drop-at-cap.
         */
       maxBlockRows: Int = 200,
       maxSaltFactor: Int = 8,
@@ -286,7 +284,7 @@ object Pipeline {
       ExactCascade.run(
         messySigs.select(col("conv_id"), col("sig_text"), col("block_key")),
         canonSigs.select(col("conv_id"), col("sig_text"), col("block_key")),
-        useSuffixStage = cfg.useSuffixStage, maxBlockRows = cfg.maxBlockRows)
+        useSuffixStage = cfg.useSuffixStage)
     }
 
     // 3. blocking on the carry-forward (unmatched messy records only);

@@ -43,13 +43,15 @@ import graft.functions.Utf8Order
   * computes both stages for every record and applies the precedence per
   * id at the end. Stage 3 still carries forward with left_anti.
   *
-  * Scale shape of stages 1-2: one small aggregate of rows per block key;
-  * one shuffle of (id, sig_text) on (block_key, bucket); one map-side
-  * combined aggregate on the messy id. A block of more than `maxBlockRows`
-  * rows is split into S = ceil(rows / maxBlockRows) buckets by the hash of
-  * each shingle (its exact key by the hash of sig_text), so no task holds
-  * a hot block whole; a record of a split block ships its sig_text to
-  * each bucket its shingles fall in.
+  * Scale shape of stages 1-2: one small aggregate of rows per block key,
+  * broadcast back as the bucket count of each large block; one shuffle of
+  * (id, sig_text) on (block_key, bucket); one map-side combined aggregate
+  * on the messy id. A block of more than 200 rows is split into
+  * S = ceil(rows / 200) buckets by the hash of each shingle (its exact key
+  * by the hash of sig_text), so no task holds a hot block whole; a record
+  * of a split block ships each bucket only the shingles that hash there,
+  * so its shuffled bytes do not grow with S (its row count grows as
+  * min(shingles, S)).
   */
 object ExactCascade {
 
@@ -133,17 +135,16 @@ object ExactCascade {
 
   /** Link messy -> canonical. Both frames need (id, sig_text, block_key),
     * the ids of one type: a string or an integral type. Returns (id,
-    * resolved_canonical_id, match_reason) for matched rows. Blocks of more
-    * than `maxBlockRows` rows are split for stages 1-2; the output does
-    * not depend on it.
+    * resolved_canonical_id, match_reason) for matched rows. Lazy: no Spark
+    * job runs until the result is read; reading it scans each input twice
+    * (once for the block sizes), so pass materialised inputs.
     */
   def run(
       messy: DataFrame,
       canonical: DataFrame,
       idCol: String = "conv_id",
-      useSuffixStage: Boolean = false,
-      maxBlockRows: Int = 200): DataFrame = {
-    val stage12 = exactAndShingleLinks(messy, canonical, idCol, maxBlockRows)
+      useSuffixStage: Boolean = false): DataFrame = {
+    val stage12 = exactAndShingleLinks(messy, canonical, idCol)
     if (!useSuffixStage) stage12
     else {
       // Stage 3: trie fallback on rows stages 1-2 left unmatched.
@@ -158,6 +159,10 @@ object ExactCascade {
 
   private val ShingleLen = 5
   private val MinHits = 3 // resolve_with_trigrams.py:121-134
+  /** Most rows of one block a stage 1-2 group holds; a larger block is
+    * split into ceil(rows / BlockRows) buckets.
+    */
+  private val BlockRows = 200
 
   /** Stages 1-2 (see object doc), with the semantics of the reference
     * column plan (row_number dedupe + join, left_anti, shingle explode,
@@ -170,15 +175,16 @@ object ExactCascade {
     *     min/max do;
     *   - left_anti never removes a NULL messy id, so it can get both an
     *     exact and a unique_shingle row.
-    * Messy ids are record keys: an id with several rows gets one exact
-    * row, its min candidate (the column plan emits one per matched row).
+    * One deliberate difference: messy ids are record keys. An id with
+    * several rows gets one exact row, its min non-NULL candidate, where
+    * the column plan emits one per matched row; all NULL messy ids group
+    * together, so several NULL-id rows with exact matches also give one
+    * exact row.
     */
   private def exactAndShingleLinks(
       messy: DataFrame,
       canonical: DataFrame,
-      idCol: String,
-      maxBlockRows: Int): DataFrame = {
-    require(maxBlockRows > 0, s"maxBlockRows must be positive, got $maxBlockRows")
+      idCol: String): DataFrame = {
     def side(df: DataFrame, isMessy: Boolean) = df
       .filter(col("sig_text").isNotNull && col("block_key").isNotNull)
       .select(col("block_key"), lit(isMessy).as("__messy"), col(idCol).as("__id"),
@@ -187,22 +193,34 @@ object ExactCascade {
     val idType = in.schema("__id").dataType
     val idOrder = sparkOrder(idType)
 
-    // Block sizes: only split blocks are collected, with their bucket count.
-    val buckets: Map[Any, Int] = in.groupBy(col("block_key")).count()
-      .filter(col("count") > maxBlockRows).collect()
-      .map(r => r.get(0) -> ((r.getLong(1) + maxBlockRows - 1) / maxBlockRows).toInt).toMap
+    // Bucket count of each split block, broadcast to its rows; a NULL
+    // __buckets means one bucket.
+    val split = in.groupBy(col("block_key")).count()
+      .filter(col("count") > BlockRows)
+      .select(col("block_key"), ceil(col("count") / BlockRows).cast(IntegerType).as("__buckets"))
+    val sized = in.join(broadcast(split), Seq("block_key"), "left")
 
+    // A row of a one-bucket block ships sig_text, its shingles derived in
+    // the group. A row of a split block ships to each bucket only the
+    // distinct shingles that hash there, concatenated (each is 5 code
+    // points), and sig_text only to the bucket of its exact key: its
+    // shuffle is O(length) bytes plus one row per bucket it reaches.
     val routedSchema = StructType(Seq(in.schema("block_key"),
-      StructField("__bucket", IntegerType, nullable = false))) ++ in.schema.tail
-    val routed = in.flatMap { r =>
-      val to = buckets.get(r.get(0)) match {
-        case None => Set(0)
-        case Some(s) =>
-          val text = r.getString(3)
-          shingles(text).map(bucketOf(_, s)).toSet + bucketOf(text, s)
+      StructField("__bucket", IntegerType, nullable = false)) ++ in.schema.tail.map {
+        case f if f.name == "sig_text" => f.copy(nullable = true)
+        case f => f
+      } :+ StructField("__shingles", StringType))
+    val routed = sized.flatMap { r =>
+      val (key, isMessy, id, text) = (r.get(0), r.get(1), r.get(2), r.getString(3))
+      if (r.isNullAt(4)) Iterator(Row(key, 0, isMessy, id, text, null))
+      else {
+        val s = r.getInt(4)
+        val exactAt = bucketOf(text, s)
+        val byBucket = shingles(text).distinct.groupBy(bucketOf(_, s))
+        (byBucket.keySet + exactAt).iterator.map(b => Row(key, b, isMessy, id,
+          if (b == exactAt) text else null, byBucket.getOrElse(b, Array.empty[String]).mkString))
       }
-      to.iterator.map(b => Row.fromSeq(r.get(0) +: b +: r.toSeq.tail))
-    }(Encoders.row(StructType(routedSchema)))
+    }(Encoders.row(routedSchema))
 
     val partialSchema = StructType(Seq(
       StructField("__id", idType),
@@ -212,9 +230,9 @@ object ExactCascade {
       StructField("__cand_max", idType),
       StructField("__hits", LongType, nullable = false)))
     val partials = routed.groupBy(col("block_key"), col("__bucket"))
-      .as(Encoders.row(StructType(routedSchema.take(2))), Encoders.row(StructType(routedSchema)))
-      .flatMapSortedGroups(col("__messy"))((key: Row, group: Iterator[Row]) =>
-        linkBucket(key.getInt(1), buckets.getOrElse(key.get(0), 1), group, idOrder)
+      .as(Encoders.row(StructType(routedSchema.take(2))), Encoders.row(routedSchema))
+      .flatMapSortedGroups(col("__messy"))((_: Row, group: Iterator[Row]) =>
+        linkBucket(group, idOrder)
       )(Encoders.row(partialSchema))
       .toDF()
 
@@ -238,42 +256,41 @@ object ExactCascade {
   }
 
   /** One (block_key, bucket) group, canonical rows first (`__messy`
-    * sorts false first). Emits (id, exact, exact_cand, cand_min,
-    * cand_max, hits) for each messy row with an exact hit or a unique
-    * shingle hit in this bucket.
+    * sorts false first). A row's shingles are its packed `__shingles`
+    * in a split block, else derived from its sig_text; a NULL
+    * sig_text means its exact key is in another bucket. Emits (id, exact,
+    * exact_cand, cand_min, cand_max, hits) for each messy row with an
+    * exact hit or a unique shingle hit in this bucket.
     */
-  private def linkBucket(
-      bucket: Int,
-      nBuckets: Int,
-      group: Iterator[Row],
-      idOrder: Ordering[Any]): Iterator[Row] = {
-    def mine(key: String) = nBuckets == 1 || bucketOf(key, nBuckets) == bucket
+  private def linkBucket(group: Iterator[Row], idOrder: Ordering[Any]): Iterator[Row] = {
     val minIdOfText = mutable.HashMap.empty[String, Any]
     val ownerOf = mutable.HashMap.empty[String, Any]
     val seen = mutable.HashSet.empty[String]
     group.flatMap { r =>
       val id = r.get(3)
       val text = r.getString(4)
+      val grams: Iterable[String] =
+        if (r.isNullAt(5)) shingles(text) else unpack(r.getString(5))
       if (!r.getBoolean(2)) {
-        if (mine(text)) minIdOfText.get(text) match {
+        if (text != null) minIdOfText.get(text) match {
           case Some(m) if m == null || (id != null && idOrder.gteq(id, m)) =>
           case _ => minIdOfText.update(text, id)
         }
-        if (id != null) shingles(text).foreach { s =>
-          if (mine(s)) ownerOf.get(s) match {
+        if (id != null) grams.foreach { s =>
+          ownerOf.get(s) match {
             case None => ownerOf.update(s, id)
             case Some(o) => if (o != Ambiguous && o != id) ownerOf.update(s, Ambiguous)
           }
         }
         Iterator.empty
       } else {
-        val exact = mine(text) && minIdOfText.contains(text)
+        val exact = text != null && minIdOfText.contains(text)
         var hits = 0L
         var lo: Any = null
         var hi: Any = null
         seen.clear()
-        shingles(text).foreach { s =>
-          if (mine(s) && seen.add(s)) ownerOf.get(s) match {
+        grams.foreach { s =>
+          if (seen.add(s)) ownerOf.get(s) match {
             case Some(o) if o != Ambiguous =>
               hits += 1
               if (lo == null || idOrder.lt(o, lo)) lo = o
@@ -305,6 +322,18 @@ object ExactCascade {
       Array.tabulate(n - ShingleLen + 1)(i => text.substring(at(i), at(i + ShingleLen)))
     }
   }
+
+  /** The shingles of a `__shingles` string: consecutive runs of 5 code
+    * points.
+    */
+  private def unpack(packed: String): Seq[String] =
+    Iterator.unfold(0) { i =>
+      if (i == packed.length) None
+      else {
+        val j = packed.offsetByCodePoints(i, ShingleLen)
+        Some((packed.substring(i, j), j))
+      }
+    }.toSeq
 
   /** Spark's order for an id type, on the values a Row holds. */
   private def sparkOrder(t: DataType): Ordering[Any] = t match {

@@ -9,7 +9,8 @@ import graft.signature.Signatures
 
 /** Stages 1-2 of `ExactCascade.run` (the block kernel) against the
   * column-expression reference (CascadeColumnOracle): the same schema and
-  * the same rows as a multiset, at every bucket split.
+  * the same rows as a multiset, on blocks of one bucket and on blocks of
+  * more than 200 rows, which the kernel splits into buckets.
   */
 class CascadeOracleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -17,16 +18,15 @@ class CascadeOracleSpec extends AnyFunSuite {
 
   /** Asserts kernel == oracle and returns the oracle's rows. */
   private def assertMatchesOracle(
-      messy: DataFrame, canonical: DataFrame, idCol: String, maxBlockRows: Int): Seq[Row] = {
-    val kernel = ExactCascade.run(messy, canonical, idCol, maxBlockRows = maxBlockRows)
+      messy: DataFrame, canonical: DataFrame, idCol: String): Seq[Row] = {
+    val kernel = ExactCascade.run(messy, canonical, idCol)
     val oracle = CascadeColumnOracle.run(messy, canonical, idCol)
     assert(kernel.schema.map(f => (f.name, f.dataType)) ===
       oracle.schema.map(f => (f.name, f.dataType)))
     val onlyKernel = kernel.exceptAll(oracle).collect()
     val onlyOracle = oracle.exceptAll(kernel).collect()
     assert(onlyKernel.isEmpty && onlyOracle.isEmpty,
-      s"maxBlockRows=$maxBlockRows: kernel-only ${onlyKernel.take(5).toSeq}; " +
-        s"oracle-only ${onlyOracle.take(5).toSeq}")
+      s"kernel-only ${onlyKernel.take(5).toSeq}; oracle-only ${onlyOracle.take(5).toSeq}")
     oracle.collect().toSeq
   }
 
@@ -42,18 +42,20 @@ class CascadeOracleSpec extends AnyFunSuite {
   }
 
   test("kernel equals the column oracle on TranscriptGen link signatures") {
-    val turns = TranscriptGen.turnsDF(spark, 400, seed = 1L)
+    val turns = TranscriptGen.turnsDF(spark, 1200, seed = 1L)
     val variant = substring(col("conv_id"), 2, 10).cast("long") % 4
     def sigs(t: DataFrame) = Signatures.signatures(t)
       .select(col("conv_id"), col("sig_text"), col("bk_role_len").as("block_key"))
       .localCheckpoint()
     val messy = sigs(turns.filter(variant =!= 0))
     val canonical = sigs(turns.filter(variant === 0))
-    // 4 rows: every block of more than 4 rows is split
-    for (m <- Seq(200, 4)) {
-      val rows = assertMatchesOracle(messy, canonical, "conv_id", m)
-      assert(reasons(rows) === Set("exact_match", "unique_shingle"))
-    }
+    val rows = assertMatchesOracle(messy, canonical, "conv_id")
+    assert(reasons(rows) === Set("exact_match", "unique_shingle"))
+    // one block of every row: split into ceil(rows / 200) > 1 buckets
+    def oneBlock(df: DataFrame) = df.withColumn("block_key", lit("all"))
+    assert(messy.count() + canonical.count() > 800)
+    val oneBlockRows = assertMatchesOracle(oneBlock(messy), oneBlock(canonical), "conv_id")
+    assert(reasons(oneBlockRows) === Set("exact_match", "unique_shingle"))
   }
 
   private val canonicalRows: Seq[(String, String, String)] = Seq(
@@ -105,7 +107,7 @@ class CascadeOracleSpec extends AnyFunSuite {
     ("mp", "PRECEDENCE TEXT", "P")) // exact wins over its unique shingles
 
   /** One 1,000-row block: exact copies, one-character misses and
-    * unrelated texts, so the default maxBlockRows splits it.
+    * unrelated texts, so the kernel splits it into 5 buckets.
     */
   private val bigBlock: (Seq[(String, String, String)], Seq[(String, String, String)]) = {
     def text(i: Int) = f"BIG CANON $i%04d KEY ${i * 7919 % 10007}%05d"
@@ -121,12 +123,22 @@ class CascadeOracleSpec extends AnyFunSuite {
     (canon, messy)
   }
 
+  /** `rows` plus `n` canonical filler rows in each non-NULL block key,
+    * which then holds more than 200 rows and is split. The filler texts
+    * share no 5-gram with the hand-built texts.
+    */
+  private def padded(rows: Seq[(String, String, String)], n: Int) =
+    rows ++ rows.map(_._3).filter(_ != null).distinct.flatMap { k =>
+      (0 until n).map(i => (f"f$k$i%04d", f"filler $i%04d", k))
+    }
+
   test("kernel equals the column oracle on hand-built edge cases") {
     val cols = Seq("conv_id", "sig_text", "block_key")
-    val canonical = (canonicalRows ++ bigBlock._1).toDF(cols: _*)
     val messy = (messyRows ++ bigBlock._2).toDF(cols: _*)
-    for (m <- Seq(200, 4, 1)) {
-      val rows = assertMatchesOracle(messy, canonical, "conv_id", m)
+    // plain: only the 1,000-row block is split; padded: every block is
+    for (canon <- Seq(canonicalRows, padded(canonicalRows, 400))) {
+      val canonical = (canon ++ bigBlock._1).toDF(cols: _*)
+      val rows = assertMatchesOracle(messy, canonical, "conv_id")
       val got = rows.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       // the cases above are live: each shows in the oracle's output
       assert(Set(("md", "d1", "exact_match"), ("mu", "Ａ", "exact_match"),
@@ -147,29 +159,42 @@ class CascadeOracleSpec extends AnyFunSuite {
     val none = Seq.empty[(String, String, String)].toDF(cols: _*)
     val canonical = canonicalRows.toDF(cols: _*)
     val messy = messyRows.toDF(cols: _*)
-    assert(assertMatchesOracle(none, canonical, "conv_id", 200).isEmpty)
-    assert(assertMatchesOracle(messy, none, "conv_id", 200).isEmpty)
+    assert(assertMatchesOracle(none, canonical, "conv_id").isEmpty)
+    assert(assertMatchesOracle(messy, none, "conv_id").isEmpty)
   }
 
   test("kernel equals the column oracle on BIGINT ids") {
     val cols = Seq("doc_id", "sig_text", "block_key")
-    val canonical = Seq[(Option[Long], String, String)](
+    val canonRows = Seq[(Option[Long], String, String)](
       (Some(10L), "BIGINT EXACT TEXT", "L"),
       (Some(3L), "BIGINT EXACT TEXT", "L"), // numeric min 3; "10" < "3" as strings
       (Some(100L), "LONG NEAR MISS CANDIDATE", "L"),
       (None, "LONG NEAR MISS CANDIDATE", "L"),
-      (Some(7L), "SHORT", "L")
-    ).toDF(cols: _*)
+      (Some(7L), "SHORT", "L"))
     val messy = Seq[(Option[Long], String, String)](
       (Some(1L), "BIGINT EXACT TEXT", "L"),
       (Some(2L), "LONG NEAR MISS CANDIDATF", "L"),
       (Some(4L), "SHORT", "L"),
       (Some(5L), "UNRELATED", "L")
     ).toDF(cols: _*)
-    for (m <- Seq(200, 1)) {
-      val rows = assertMatchesOracle(messy, canonical, "doc_id", m)
+    val filler = (0 until 400).map(i => (Some(1000L + i), f"filler $i%04d", "L"))
+    for (canon <- Seq(canonRows, canonRows ++ filler)) {
+      val rows = assertMatchesOracle(messy, canon.toDF(cols: _*), "doc_id")
       assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet ===
         Set((1L, 3L, "exact_match"), (2L, 100L, "unique_shingle"), (4L, 7L, "exact_match")))
     }
+  }
+
+  test("NULL messy ids with exact matches collapse to one row (documented difference)") {
+    val cols = Seq("conv_id", "sig_text", "block_key")
+    val canonical = Seq(("c1", "FIRST EXACT TEXT", "K"), ("c2", "SECOND EXACT TEXT", "K"))
+      .toDF(cols: _*)
+    val messy = Seq[(String, String, String)](
+      (null, "SECOND EXACT TEXT", "K"), (null, "FIRST EXACT TEXT", "K")).toDF(cols: _*)
+    val exactOf = (df: DataFrame) => df.filter(col("match_reason") === "exact_match")
+      .select("resolved_canonical_id").as[String].collect().sorted.toSeq
+    assert(exactOf(CascadeColumnOracle.run(messy, canonical)) === Seq("c1", "c2"))
+    // the kernel keys on the messy id: one exact row, the min candidate
+    assert(exactOf(ExactCascade.run(messy, canonical)) === Seq("c1"))
   }
 }
