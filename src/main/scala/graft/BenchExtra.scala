@@ -2,9 +2,10 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.runtime.{Session, StageMetricsListener}
 
 /** Optimization-round probe harness (guide §1.4): times sub-pieces of the
   * expensive declared queries in isolation with the noop sink (so the
@@ -26,42 +27,14 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val plansDir = args.headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus(32)
+    val spark = Session.builder("graft-bench-extra", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.FATAL)
 
-    val stageCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val verboseStages = sys.env.get("SPARK_GRAFT_EXTRA_STAGELOG").contains("1")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageCounter.incrementAndGet()
-        if (verboseStages) {
-          val i = s.stageInfo
-          val ms = for {a <- i.completionTime; b <- i.submissionTime} yield a - b
-          val m = i.taskMetrics
-          println(f"[stagelog] id=${i.stageId}%4d tasks=${i.numTasks}%4d " +
-            f"wall_ms=${ms.getOrElse(-1L)}%6d run_ms=${m.executorRunTime}%6d " +
-            f"cpu_ms=${m.executorCpuTime / 1000000}%6d " +
-            f"deser_ms=${m.executorDeserializeTime}%5d ${i.name.take(60)}")
-          if (m.executorRunTime > 1000)
-            println("[stagedetail] " + i.details.linesIterator
-              .filter(l => l.contains("graft") || l.contains("Dataset") || l.contains("RDD"))
-              .take(6).mkString(" | "))
-        }
-        ()
-      }
-    })
+    val metrics = new StageMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
 
     /** noop-sink timing, `reps` times; prints every rep (first is warm-up).
       * The DataFrame is BUILT inside the timed region: query fns that use
@@ -72,13 +45,13 @@ object BenchExtra {
     def timeNoop(name: String, reps: Int = 3)(mk: => DataFrame): Unit = {
       val times = (1 to reps).map { _ =>
         spark.sparkContext.setJobDescription(name)
-        val s0 = stageCounter.get()
+        val s0 = metrics.stageCount
         val t0 = System.nanoTime()
         val df = mk
         df.write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(200)
-        (sec, stageCounter.get() - s0)
+        (sec, metrics.stageCount - s0)
       }
       spark.sparkContext.setJobDescription(null)
       println(f"[extra] $name%-28s ${times.map(t => f"${t._1}%7.2f").mkString(" ")}" +
@@ -218,12 +191,12 @@ object BenchExtra {
       def pad(i: org.apache.spark.sql.Column) = lpad(i.cast("string"), 9, "0")
       val hub = spark.range(1, hubDeg.toLong + 1)
         .select(lit("000000000").as("src"), pad(col("id")).as("dst"))
-        .repartition(cpus.toInt).localCheckpoint(true)
+        .repartition(cpus).localCheckpoint(true)
       val uniform = spark.range(0, hubDeg.toLong)
         .select(pad(pmod(xxhash64(col("id")), lit(hubDeg))).as("src"),
           pad(pmod(xxhash64(col("id") + lit(hubDeg)), lit(hubDeg))).as("dst"))
         .filter(col("src") =!= col("dst"))
-        .repartition(cpus.toInt).localCheckpoint(true)
+        .repartition(cpus).localCheckpoint(true)
       timeNoop("cchub.hub_window", reps = 3)(
         graft.resolve.ConnectedComponents.starRound(hub))
       timeNoop("cchub.hub_agg", reps = 3)(

@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.runtime.{Session, StageMetricsListener}
 
-/** One pipeline run under whatever --master spark-submit supplies — built
+/** One pipeline run under whatever --master spark-submit supplies
+  * (`local[SPARK_GRAFT_CPUS]` without one, `runtime.Session`) — built
   * for `local-cluster[N, cores, mem]`, Spark's real-multi-executor local
   * mode (separate executor JVMs, netty shuffle), which is the closest this
   * sandbox gets to the BASELINE.json criterion "N and 4N EXECUTORS":
-  * thread-scaling inside one JVM (graft.ScalingBench) under-states true
-  * cluster scaling because all threads share one heap, allocator and GC.
+  * thread-scaling inside one JVM under-states true cluster scaling
+  * because all threads share one heap, allocator and GC.
+  * `scripts/cluster_pairs.sh` drives the N/4N pairs.
   *
   * Usage (interleave pairs in a driving script, >= 3 per config):
   *   SPARK_HOME=/opt/spark spark-submit \
@@ -20,14 +22,6 @@ import org.apache.spark.sql.SparkSession
   * rule at every size: 2 x total cores (AQE coalesces back down).
   */
 object ClusterScalingBench {
-
-  private final class CpuListener extends org.apache.spark.scheduler.SparkListener {
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val nConvIds = args.headOption.map(_.toLong).getOrElse(100000L)
@@ -48,12 +42,7 @@ object ClusterScalingBench {
           "before launching, or lower SPARK_GRAFT_MIN_FREE_GB")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName("graft-cluster-scaling")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder("graft-cluster-scaling", Session.cpus(8))
       // wait for the FULL cluster before scheduling: standalone defaults to
       // scheduling on the first registered executor, so the cached input
       // lands lopsided on the early JVMs and locality pins every downstream
@@ -79,13 +68,13 @@ object ClusterScalingBench {
     // the small stages back down. Same rule a real 100-TB job uses.
     val shufflePartitions = math.max(cores * 2, (nConvIds / 10000L).toInt)
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    val cpu = new CpuListener
-    spark.sparkContext.addSparkListener(cpu)
+    val metrics = new StageMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
 
     val turns = graft.ingest.TranscriptGen.turnsDF(spark, nConvIds)
       .repartition(math.max(cores, (nConvIds / 20000L).toInt)).cache()
     val nTurns = turns.count()
-    val cpu0 = cpu.cpuNs.get() // exclude input generation
+    val cpu0 = metrics.cpuNanos // exclude input generation
 
     // Steal probes bracket every timed section (same xorshift workload and
     // rationale as graft.Bench): on this shared host, identical sections
@@ -135,7 +124,7 @@ object ClusterScalingBench {
     // the clock here) keeps ~0.35 s of probe work — ~1 s+ under steal —
     // out of the headline number
     val wall = secPairs + secRefined + secClusters
-    val cpuSec = (cpu.cpuNs.get() - cpu0) / 1e9
+    val cpuSec = (metrics.cpuNanos - cpu0) / 1e9
 
     // BASELINE.json's scaled throughput IS candidate-pairs-scored/sec: time
     // the isolated scoring surface (feature-attach joins + codegen'd

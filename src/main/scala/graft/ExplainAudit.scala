@@ -2,8 +2,8 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.runtime.Session
 
 /** Dumps formatted physical plans for the load-bearing queries/stages to
   * PLANS.md — the audit trail for scan pruning (ReadSchema / PushedFilters),
@@ -14,14 +14,9 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed local[8] / 8 shuffle partitions, whatever SPARK_GRAFT_CPUS
+    // says: PLANS.md diffs across commits then show plan changes only
+    val spark = Session.builder("graft-explain", cpus = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val pw = new PrintWriter(new File(out))

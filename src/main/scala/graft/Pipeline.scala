@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.blocking.Blocking
+import graft.blocking.{Blocking, BlockingResult, RuleTierStats}
 import graft.refine.DistinguishingTokens
 import graft.resolve.{ConnectedComponents, ExactCascade}
 import graft.runtime.Checkpoints
@@ -71,7 +71,7 @@ object Pipeline {
         * pairs stage was resumed from checkpoint — then the stats live in
         * the checkpoint's `_info_pairs.json` sidecar)
         */
-      tierStats: Seq[blocking.RuleTierStats] = Nil,
+      tierStats: Seq[RuleTierStats] = Nil,
       nBlockingRules: Int = 0) {
     /** Pairs that took the SNM salvage path (match_key >= #rules) — the
       * observable volume of lossy ultra-hot handling in this run. Counting
@@ -90,7 +90,7 @@ object Pipeline {
       scored: DataFrame,
       bestMatches: DataFrame,
       merged: DataFrame,
-      tierStats: Seq[blocking.RuleTierStats] = Nil,
+      tierStats: Seq[RuleTierStats] = Nil,
       nBlockingRules: Int = 0) {
     def salvagePairCount: Long = pairs.filter(col("match_key") >= nBlockingRules).count()
   }
@@ -107,7 +107,42 @@ object Pipeline {
       .map("%02x".format(_)).mkString
   }
 
-  private def tierStatsJson(stats: Seq[blocking.RuleTierStats]): String =
+  /** Stage boundaries of `run` and `runLink`; each truncates lineage.
+    *
+    * With a checkpoint dir a stage commits to parquet, keyed by the config
+    * fingerprint so a config change recomputes instead of serving stale
+    * stages. Without one it is a localCheckpoint(eager = false). That is
+    * not fully lazy under AQE (on in PipelineMain and the bench): the call
+    * plans and compiles the stage's subplan and runs every shuffle map
+    * stage in it at once; only the final stage waits for the first action,
+    * and the result is reused after. So an in-memory run pays a stage's
+    * shuffles even when nothing reads the stage (run()'s `refined`). Eager
+    * barriers (localCheckpoint(true)) were measured slower: the serial
+    * barriers dominated local wall.
+    * Reference analogue: per-stage temp-table materialisation,
+    * sql_pipeline/runner.py:471-491.
+    */
+  private final class Stages(spark: SparkSession, cfg: Config) {
+    private val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
+    private val fp = configFingerprint(cfg)
+
+    def apply(name: String)(compute: => DataFrame): DataFrame =
+      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+
+    /** A blocking stage: its pairs, and the per-rule tier stats when this
+      * run computed them (empty on resume). Skew observability survives in
+      * the checkpoint dir next to the stage.
+      */
+    def blocking(name: String)(
+        compute: => BlockingResult): (DataFrame, Seq[RuleTierStats]) = {
+      var stats: Seq[RuleTierStats] = Nil
+      val pairs = apply(name) { val res = compute; stats = res.tierStats; res.pairs }
+      if (stats.nonEmpty) ckpt.foreach(_.writeInfo(name, tierStatsJson(stats)))
+      (pairs, stats)
+    }
+  }
+
+  private def tierStatsJson(stats: Seq[RuleTierStats]): String =
     stats.map(t =>
       s"""{"rule":${t.rule},"n_salt_keys":${t.nSaltKeys},"n_ultra_keys":${t.nUltraKeys},""" +
         s""""n_one_sided_hot_keys":${t.nOneSidedHotKeys}}""")
@@ -137,45 +172,59 @@ object Pipeline {
   def scorePairs(lSigs: DataFrame, rSigs: DataFrame, pairs: DataFrame, prior: Double): DataFrame =
     Scoring.scoreDefault(attachScoreCols(lSigs, rSigs, pairs), prior)
 
+  /** Signatures stage body: per-conversation signatures, TF features from
+    * `tfSource`'s token frequencies (the side's own signatures when None)
+    * and the cascade/blocking `block_key`. s0 is materialised once: in
+    * self mode it has two readers, the TF table (collected to the driver
+    * by attachTf) and the attach projection, and without the barrier each
+    * would recompute the per-conversation signature kernel.
+    */
+  private def signaturesWithTf(turns: DataFrame, tfSource: Option[DataFrame] = None): DataFrame = {
+    val s0 = Signatures.signatures(turns).localCheckpoint(false)
+    Signatures.attachTf(s0, Signatures.tokenFrequencies(tfSource.getOrElse(s0)))
+      .withColumn("block_key", col("bk_role_len"))
+  }
+
+  private def skewConfig(cfg: Config): Blocking.SkewConfig =
+    Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
+      snmSortCol = Some("sig_text"))
+
+  /** Scoring stage body: first-pass scores above `predictThreshold`,
+    * narrow (features are attached here, not carried across boundaries).
+    */
+  private def scoreAbove(
+      lSigs: DataFrame, rSigs: DataFrame, pairs: DataFrame, cfg: Config): DataFrame =
+    Scoring.scoreDefault(attachScoreCols(lSigs, rSigs, pairs), cfg.prior)
+      .filter(col("match_weight") > cfg.predictThreshold)
+      .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
+        "match_probability", "sig_text_l", "sig_text_r")
+
+  /** Refine stage body: the second pass keeping `keep`, or the first-pass
+    * scores unchanged when it is off.
+    */
+  private def refine(scored: DataFrame, cfg: Config, keep: Seq[String]): DataFrame =
+    if (!cfg.useSecondPass) scored
+    else DistinguishingTokens.improve(scored,
+      DistinguishingTokens.Params(
+        matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
+      .select(keep.map(col): _*)
+
   def run(spark: SparkSession, turnsIn: DataFrame, cfg: Config = Config()): Result = {
     // fail fast with ALL schema problems aggregated (reference:
     // validation.py enforced before the deterministic pass)
     val turns = runtime.SchemaValidation.validateOrThrow(
       turnsIn, runtime.SchemaValidation.turnsSchema, "turns")
-    val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
-    // Stage boundaries truncate lineage: parquet commit when resumable
-    // checkpointing is on (keyed by a config fingerprint so a config change
-    // recomputes instead of serving stale stages), localCheckpoint(eager =
-    // false) otherwise. That is not fully lazy under AQE (on in PipelineMain
-    // and the bench): the call plans and compiles the stage's subplan and
-    // runs every shuffle map stage in it at once; only the final stage waits
-    // for the first action, and the result is reused after. So an in-memory
-    // run pays a stage's shuffles even when nothing reads the stage (run()'s
-    // `refined`). Eager barriers (localCheckpoint(true)) were measured
-    // slower: the serial barriers dominated local wall.
-    // Reference analogue: per-stage temp-table materialisation,
-    // sql_pipeline/runner.py:471-491.
-    val fp = configFingerprint(cfg)
-    def staged(name: String)(compute: => DataFrame): DataFrame =
-      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+    val stage = new Stages(spark, cfg)
 
-    // 1. signatures (+ TF attach). s0 is materialised once inside the
-    // stage: it has two readers, the TF table (collected to the driver by
-    // attachTf) and the attach projection, and without the barrier each
-    // would recompute the per-conversation signature kernel.
-    val sigs = staged("signatures") {
-      val s0 = Signatures.signatures(turns).localCheckpoint(false)
-      val tf = Signatures.tokenFrequencies(s0)
-      Signatures.attachTf(s0, tf)
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
+    // 1. signatures (+ TF attach from the corpus itself)
+    val sigs = stage("signatures")(signaturesWithTf(turns)).persist()
 
     // 2. deterministic cascade (self-dedup: canonical side = all records;
     // exact duplicates collapse to the min id immediately). Self mode uses
     // the proven one-shuffle collapse of the full cascade — identical
     // output (ExactCascade.selfExactLinks doc + CascadeSpec equivalence
     // test), ~10 fewer serial stages (VERDICT r3 #4).
-    val cascade = staged("cascade") {
+    val cascade = stage("cascade") {
       ExactCascade.selfExactLinks(
         sigs.select(col("conv_id"), col("sig_text"), col("block_key")))
     }
@@ -186,38 +235,21 @@ object Pipeline {
     // boundary measured ~100 s at 250k convs — the features are attached
     // inside the scoring stage instead, which emits a narrow result.
     val rules = Blocking.defaultRules(Signatures.Bands)
-    var tierStats: Seq[blocking.RuleTierStats] = Nil
-    val pairs = staged("pairs") {
-      val res = Blocking.candidatePairsSelfWithStats(
-        sigs, "conv_id", rules,
-        Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
-          snmSortCol = Some("sig_text")))
-      tierStats = res.tierStats
-      res.pairs
+    val (pairs, tierStats) = stage.blocking("pairs") {
+      Blocking.candidatePairsSelfWithStats(sigs, "conv_id", rules, skewConfig(cfg))
     }
-    // skew observability survives in the checkpoint dir next to the stage
-    if (tierStats.nonEmpty) ckpt.foreach(_.writeInfo("pairs", tierStatsJson(tierStats)))
 
     // 4. score (carry features joined in from the persisted signatures)
-    val scored = staged("scored") {
-      Scoring.scoreDefault(attachScoreCols(sigs, sigs, pairs), cfg.prior)
-        .filter(col("match_weight") > cfg.predictThreshold)
-        .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
-          "match_probability", "sig_text_l", "sig_text_r")
-    }
+    val scored = stage("scored")(scoreAbove(sigs, sigs, pairs, cfg))
 
     // 5. second pass
-    val refined = staged("refined") {
-      if (!cfg.useSecondPass) scored
-      else DistinguishingTokens.improve(scored,
-        DistinguishingTokens.Params(
-          matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
-        .select("conv_id_l", "conv_id_r", "match_weight", "match_weight_original",
-          "mw_adjustment")
+    val refined = stage("refined") {
+      refine(scored, cfg,
+        Seq("conv_id_l", "conv_id_r", "match_weight", "match_weight_original", "mw_adjustment"))
     }
 
     // 6. edges = confident first-pass pairs + deterministic cascade links
-    val clusters = staged("clusters") {
+    val clusters = stage("clusters") {
       val scoredEdges = scored.filter(col("match_weight") > cfg.edgeThreshold)
         .select(col("conv_id_l"), col("conv_id_r"))
       val cascadeEdges = cascade.select(
@@ -259,28 +291,17 @@ object Pipeline {
       messyTurnsIn, runtime.SchemaValidation.turnsSchema, "messy turns")
     val canonicalTurns = runtime.SchemaValidation.validateOrThrow(
       canonicalTurnsIn, runtime.SchemaValidation.turnsSchema, "canonical turns")
-    val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
-    val fp = configFingerprint(cfg)
-    def staged(name: String)(compute: => DataFrame): DataFrame =
-      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+    val stage = new Stages(spark, cfg)
 
     // 1. signatures; one TF table (canonical corpus) applied to both sides
     // so a token's rarity means the same thing on each side of a pair.
-    val canonSigs = staged("link_canon_sigs") {
-      // s0 materialised once — see run()'s signatures stage note
-      val s0 = Signatures.signatures(canonicalTurns).localCheckpoint(false)
-      Signatures.attachTf(s0, Signatures.tokenFrequencies(s0))
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
-    val messySigs = staged("link_messy_sigs") {
-      val s0 = Signatures.signatures(messyTurns).localCheckpoint(false)
-      // TF from the already-materialised canonical signatures (tokens col)
-      Signatures.attachTf(s0, Signatures.tokenFrequencies(canonSigs))
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
+    val canonSigs = stage("link_canon_sigs")(signaturesWithTf(canonicalTurns)).persist()
+    // TF from the already-materialised canonical signatures (tokens col)
+    val messySigs = stage("link_messy_sigs")(
+      signaturesWithTf(messyTurns, tfSource = Some(canonSigs))).persist()
 
     // 2. deterministic cascade
-    val det = staged("link_cascade") {
+    val det = stage("link_cascade") {
       ExactCascade.run(
         messySigs.select(col("conv_id"), col("sig_text"), col("block_key")),
         canonSigs.select(col("conv_id"), col("sig_text"), col("block_key")),
@@ -290,38 +311,22 @@ object Pipeline {
     // 3. blocking on the carry-forward (unmatched messy records only);
     // narrow pairs boundary, features joined at scoring time (see run()).
     val rules = Blocking.defaultRules(Signatures.Bands)
-    var tierStats: Seq[blocking.RuleTierStats] = Nil
-    val pairs = staged("link_pairs") {
+    val (pairs, tierStats) = stage.blocking("link_pairs") {
       val remaining = messySigs.join(det.select("conv_id"), Seq("conv_id"), "left_anti")
-      val res = Blocking.candidatePairsLinkWithStats(
-        canonSigs, remaining, "conv_id", rules,
-        Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
-          snmSortCol = Some("sig_text")))
-      tierStats = res.tierStats
-      res.pairs
+      Blocking.candidatePairsLinkWithStats(canonSigs, remaining, "conv_id", rules, skewConfig(cfg))
     }
-    if (tierStats.nonEmpty) ckpt.foreach(_.writeInfo("link_pairs", tierStatsJson(tierStats)))
 
     // 4. score + second pass
-    val scored = staged("link_scored") {
-      Scoring.scoreDefault(attachScoreCols(canonSigs, messySigs, pairs), cfg.prior)
-        .filter(col("match_weight") > cfg.predictThreshold)
-        .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
-          "match_probability", "sig_text_l", "sig_text_r")
-    }
-    val refined = staged("link_refined") {
-      if (!cfg.useSecondPass) scored
-      else DistinguishingTokens.improve(scored,
-        DistinguishingTokens.Params(
-          matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
-        .select("conv_id_l", "conv_id_r", "match_weight")
+    val scored = stage("link_scored")(scoreAbove(canonSigs, messySigs, pairs, cfg))
+    val refined = stage("link_refined") {
+      refine(scored, cfg, Seq("conv_id_l", "conv_id_r", "match_weight"))
     }
 
     // 5-6. best match + merge
-    val best = staged("link_best") {
+    val best = stage("link_best") {
       graft.evaluate.Evaluate.bestMatches(refined)
     }
-    val merged = staged("link_merged") {
+    val merged = stage("link_merged") {
       graft.evaluate.Evaluate.mergeMatches(det, best)
     }
     LinkResult(messySigs, canonSigs, det, pairs, scored, best, merged, tierStats, rules.length)

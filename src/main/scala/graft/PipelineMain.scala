@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import graft.runtime.StageMetricsListener
+import graft.runtime.{Session, StageMetricsListener}
 
 /** Deployable entrypoint (north_rule: "runs via spark-submit with explicit
   * repartitioning, AQE skew-join handling ... resumable from checkpoint
@@ -17,9 +16,10 @@ import graft.runtime.StageMetricsListener
   *   (benchmark mode); otherwise reads a parquet turn table with the
   *   (conv_id, turn_idx, role, text, tool, ts) contract.
   * - every stage commits to <checkpointDir>; a rerun after a crash resumes
-  *   from the last committed stage (manifest.jsonl).
-  * - task-level metrics + per-partition record counts land in
-  *   <outDir>/stage_metrics.jsonl; cluster assignments in <outDir>/clusters.
+  *   from the last committed stage (`_manifest_<stage>.json` per stage).
+  * - per-stage task metrics land in <outDir>/stage_metrics.jsonl,
+  *   per-partition record counts in <outDir>/partition_lineage.jsonl and
+  *   cluster assignments in <outDir>/clusters.
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
@@ -28,17 +28,11 @@ object PipelineMain {
     val (input, ckptDir, outDir) = (args(0), args(1), args(2))
     val edgeThreshold = args.lift(3).map(_.toDouble).getOrElse(-6.0)
 
-    // In a real deployment spark-submit provides master/conf; local default
-    // keeps the entrypoint self-contained for the sandbox.
-    val builder = SparkSession.builder().appName("graft-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
+    // spark-submit's master and confs win; without a master the run is
+    // local[SPARK_GRAFT_CPUS] (runtime.Session)
+    val spark = Session.builder("graft-pipeline", Session.cpus(8))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    val spark = (if (sys.env.contains("MASTER")) builder
-      else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.ui.enabled", "false")).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val listener = new StageMetricsListener

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Opaque-binary (multimodal) column plumbing as an oracle-checked query:
   * payload byte length, header-prefix hex, content hash, fixed-size chunk
-  * count — the metadata layer of graft.multimodal over a binary column
-  * derived deterministically from the documents table.
+  * count over a binary column derived deterministically from the
+  * documents table.
   */
 object BinaryQueries {
   import Tables.load

@@ -33,20 +33,15 @@ final class Checkpoints(spark: SparkSession, dir: String) {
 
   private def manifestPath(stage: String) = new Path(s"$dir/_manifest_$stage.json")
 
-  private def readManifest(stage: String): Option[String] = {
-    val p = manifestPath(stage)
+  private def readFile(p: Path): Option[String] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
     }
-  }
+
+  private def readManifest(stage: String): Option[String] = readFile(manifestPath(stage))
 
   private def writeManifest(stage: String, json: String): Unit = {
     val out = fs.create(manifestPath(stage), true)
@@ -105,20 +100,7 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     finally out.close()
   }
 
-  def readInfo(stage: String): Option[String] = {
-    val p = new Path(s"$dir/_info_$stage.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
+  def readInfo(stage: String): Option[String] = readFile(new Path(s"$dir/_info_$stage.json"))
 
   /** Stages committed so far (manifest files present), by modification time. */
   def committedStages(): Seq[String] = {
@@ -127,54 +109,5 @@ final class Checkpoints(spark: SparkSession, dir: String) {
       .sortBy(_.getModificationTime)
       .map(_.getPath.getName.stripPrefix("_manifest_").stripSuffix(".json"))
       .toSeq
-  }
-}
-
-/** Per-partition lineage + per-stage metrics via SparkListener (north_rule:
-  * "emit per-partition lineage and stage metrics"). Collects task-level
-  * records-read/written and bytes per stage; dump with `report()`.
-  */
-final class StageMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  import scala.collection.mutable
-
-  final case class StageAgg(
-      var tasks: Int = 0, var recordsRead: Long = 0, var recordsWritten: Long = 0,
-      var shuffleReadBytes: Long = 0, var shuffleWriteBytes: Long = 0,
-      var cpuTimeNs: Long = 0)
-
-  val stages: mutable.Map[Int, StageAgg] = mutable.Map()
-  /** per (stageId, partitionId) record counts — the per-partition lineage */
-  val partitions: mutable.Map[(Int, Int), Long] = mutable.Map()
-
-  override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-    synchronized {
-      val agg = stages.getOrElseUpdate(te.stageId, StageAgg())
-      val m = te.taskMetrics
-      if (m != null) {
-        agg.tasks += 1
-        agg.recordsRead += m.inputMetrics.recordsRead
-        agg.recordsWritten += m.outputMetrics.recordsWritten
-        agg.shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
-        agg.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-        agg.cpuTimeNs += m.executorCpuTime
-        partitions((te.stageId, te.taskInfo.index)) =
-          m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead
-      }
-    }
-
-  def report(): String = synchronized {
-    val lines = stages.toSeq.sortBy(_._1).map { case (id, a) =>
-      s"""{"stage":$id,"tasks":${a.tasks},"recordsRead":${a.recordsRead},""" +
-        s""""recordsWritten":${a.recordsWritten},"shuffleReadBytes":${a.shuffleReadBytes},""" +
-        s""""shuffleWriteBytes":${a.shuffleWriteBytes},"cpuMs":${a.cpuTimeNs / 1000000}}"""
-    }
-    lines.mkString("\n")
-  }
-
-  /** Per-partition lineage lines: records seen by each (stage, partition). */
-  def partitionLineage(): String = synchronized {
-    partitions.toSeq.sorted.map { case ((stage, part), recs) =>
-      s"""{"stage":$stage,"partition":$part,"records":$recs}"""
-    }.mkString("\n")
   }
 }

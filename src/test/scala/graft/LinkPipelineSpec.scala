@@ -43,23 +43,25 @@ class LinkPipelineSpec extends AnyFunSuite {
     "assistant" -> "baseline comparison shows a persistent upward drift",
     "user" -> "archive the dataset under code 55902")
 
-  test("runLink: exact duplicate -> deterministic, near-dup -> probabilistic, unique -> unmatched") {
-    val canonical = turnsOf("c_a", convA) ++ turnsOf("c_b", convB) ++ turnsOf("c_c", convC)
-    // m_exact: identical to convA (deterministic cascade must claim it)
-    // m_fuzzy: convB with one in-vocabulary token swapped (storm ->
-    // lighthouse, both known to the canonical TF so the salient-token
-    // ranking is undisturbed) AND one turn's role relabeled (assistant ->
-    // tool). The role change moves it out of the cascade's block key
-    // (role_seq#len_band), forcing the probabilistic path; intact salient
-    // tokens let the salient-composite blocking rule fire.
-    val fuzzyB = convB
-      .updated(2, "user" -> "make the final couplet mention the november lighthouse")
-      .updated(3, "tool" -> convB(3)._2)
-    val messy = turnsOf("m_exact", convA) ++ turnsOf("m_fuzzy", fuzzyB) ++
-      turnsOf("m_unique", convD)
+  // convB with one in-vocabulary token swapped (storm -> lighthouse, both
+  // known to the canonical TF so the salient-token ranking is undisturbed)
+  // AND one turn's role relabeled (assistant -> tool). The role change
+  // moves it out of the cascade's block key (role_seq#len_band), forcing
+  // the probabilistic path; intact salient tokens let the salient-composite
+  // blocking rule fire.
+  private val fuzzyB = convB
+    .updated(2, "user" -> "make the final couplet mention the november lighthouse")
+    .updated(3, "tool" -> convB(3)._2)
 
-    val messyDf = messy.toDF("conv_id", "turn_idx", "role", "text")
-    val canonDf = canonical.toDF("conv_id", "turn_idx", "role", "text")
+  // m_exact: identical to convA (deterministic cascade must claim it);
+  // m_fuzzy: fuzzyB; m_unique: no canonical counterpart
+  private def canonDf = (turnsOf("c_a", convA) ++ turnsOf("c_b", convB) ++ turnsOf("c_c", convC))
+    .toDF("conv_id", "turn_idx", "role", "text")
+  private def messyDf = (turnsOf("m_exact", convA) ++ turnsOf("m_fuzzy", fuzzyB) ++
+      turnsOf("m_unique", convD))
+    .toDF("conv_id", "turn_idx", "role", "text")
+
+  test("runLink: exact duplicate -> deterministic, near-dup -> probabilistic, unique -> unmatched") {
     // tool/ts omitted: schema validation must add them as typed nulls
     val res = Pipeline.runLink(spark, messyDf, canonDf,
       Pipeline.Config(predictThreshold = -20, edgeThreshold = -6))
@@ -104,6 +106,33 @@ class LinkPipelineSpec extends AnyFunSuite {
       .select("conv_id_l", "match_reason").as[(String, String)].collect()
     assert(rows.length === 1)
     assert(rows.head === ("c_a", "exact_match"))
+  }
+
+  test("runLink resumes from its checkpoint; a changed Config recomputes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_link_ckpt")
+    val cfg = Pipeline.Config(predictThreshold = -20, checkpointDir = Some(dir.toString))
+    val stages = Seq("link_canon_sigs", "link_messy_sigs", "link_cascade", "link_pairs",
+      "link_scored", "link_refined", "link_best", "link_merged")
+    def merged(r: Pipeline.LinkResult) = r.merged.collect().map(_.toString).sorted.toSeq
+
+    val r1 = Pipeline.runLink(spark, messyDf, canonDf, cfg)
+    val m1 = merged(r1)
+    val ck = new graft.runtime.Checkpoints(spark, dir.toString)
+    assert(stages.forall(ck.isCommitted))
+    if (r1.tierStats.nonEmpty)
+      assert(ck.readInfo("link_pairs").exists(_.contains("n_salt_keys")))
+
+    // recomputing a stage overwrites its directory, deleting this marker
+    def kept(stage: String) = java.nio.file.Files.exists(dir.resolve(stage).resolve("_kept"))
+    stages.foreach(s => java.nio.file.Files.createFile(dir.resolve(s).resolve("_kept")))
+
+    val r2 = Pipeline.runLink(spark, messyDf, canonDf, cfg)
+    assert(merged(r2) === m1)
+    assert(stages.forall(kept), s"recomputed: ${stages.filterNot(kept)}")
+
+    Pipeline.runLink(spark, messyDf, canonDf, cfg.copy(predictThreshold = -19))
+    assert(stages.forall(ck.isCommitted))
+    assert(stages.forall(s => !kept(s)), s"reused under a changed Config: ${stages.filter(kept)}")
   }
 
   test("runLink rejects malformed input with aggregated schema errors") {
