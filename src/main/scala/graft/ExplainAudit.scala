@@ -67,20 +67,20 @@ object ExplainAudit {
         "filter — no joins, no explode; the round-4 collapse of the " +
         "10-stage self-mode cascade (proof in selfExactLinks Scaladoc).")
 
-    val pairs = graft.blocking.Blocking.candidatePairsSelf(
+    val pairs = graft.blocking.Blocking.candidatePairsSelfWithStats(
       sigs.localCheckpoint(true), "conv_id",
       graft.blocking.Blocking.defaultRules(graft.signature.Signatures.Bands),
-      graft.blocking.Blocking.SkewConfig(maxBlockRows = 200, snmSortCol = Some("sig_text")),
-      carryCols = Seq("sig_text", "turn_texts", "role_seq", "len_band",
-        "salient_token_1", "salient_token_2", "salient_token_3", "token_freq_hist",
-        "very_unusual_tokens", "extremely_unusual_tokens", "n_turns",
-        "numeric_token_1", "numeric_token_2", "numeric_token_3"))
+      graft.blocking.Blocking.SkewConfig(maxBlockRows = 200, snmSortCol = Some("sig_text")))
+      .pairs
     dump("blocking union-of-rules",
       pairs,
-      "Want: one equi-join per rule on its composite string key (SMJ or " +
-        "shuffled hash) over NARROW (id + keys) frames, carry columns " +
-        "attached once post-union via two id-joins, hot-key anti-joins " +
-        "broadcast, union of rule outputs.")
+      "Want: the narrow (id_l, id_r, match_key) pairs the pipeline's `pairs` " +
+        "stage commits: per side one projection of id + the array of every " +
+        "rule's string key, posexplode to (rule, key), ONE equi-join on " +
+        "(rule, key) for all rules (broadcast at this size, shuffled at " +
+        "scale; salt joins only when a key is over cap) with the " +
+        "earlier-rule exclusion in its condition; no feature columns " +
+        "(scoring attaches them).")
 
     dump("q34 tiered hot-block blocking (salt + SNM salvage)",
       SparkEntry.queries("q34_salted_blocking")(spark, sfDir),

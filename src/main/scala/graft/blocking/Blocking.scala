@@ -112,51 +112,32 @@ object Blocking {
       snmWindow: Int = 20,
       snmSortCol: Option[String] = None)
 
-  /** Generate candidate pairs for self-dedup: `id_l < id_r`, one row per
-    * pair with the first matching rule's index as `match_key` (ultra-hot
-    * SNM salvage pairs get rules.length + ruleIndex).
+  /** Self-dedup pair generation: `id_l < id_r`, one row per pair with the
+    * first matching rule's index as `match_key` (ultra-hot SNM salvage
+    * pairs get rules.length + ruleIndex), plus per-rule skew-tier stats.
     */
-  def candidatePairsSelf(
-      sigs: DataFrame,
-      idCol: String,
-      rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): DataFrame =
-    candidatePairsSelfWithStats(sigs, idCol, rules, skew, carryCols).pairs
-
-  /** Self-dedup pair generation, also returning per-rule skew-tier stats. */
   def candidatePairsSelfWithStats(
       sigs: DataFrame,
       idCol: String,
       rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): BlockingResult = {
+      skew: SkewConfig = SkewConfig()): BlockingResult = {
     val l = sigs.toDF(sigs.columns.map(_ + "_l"): _*)
     val r = sigs.toDF(sigs.columns.map(_ + "_r"): _*)
-    candidatePairs(l, r, idCol, rules, skew, selfDedup = true, carryCols)
+    candidatePairs(l, r, idCol, rules, skew, selfDedup = true)
   }
 
-  /** Link-mode (messy x canonical) pair generation. */
-  def candidatePairsLink(
-      left: DataFrame,
-      right: DataFrame,
-      idCol: String,
-      rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): DataFrame =
-    candidatePairsLinkWithStats(left, right, idCol, rules, skew, carryCols).pairs
-
-  /** Link-mode pair generation, also returning per-rule skew-tier stats. */
+  /** Link-mode (left x right) pair generation, plus per-rule skew-tier
+    * stats.
+    */
   def candidatePairsLinkWithStats(
       left: DataFrame,
       right: DataFrame,
       idCol: String,
       rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): BlockingResult = {
+      skew: SkewConfig = SkewConfig()): BlockingResult = {
     val l = left.toDF(left.columns.map(_ + "_l"): _*)
     val r = right.toDF(right.columns.map(_ + "_r"): _*)
-    candidatePairs(l, r, idCol, rules, skew, selfDedup = false, carryCols)
+    candidatePairs(l, r, idCol, rules, skew, selfDedup = false)
   }
 
   /** Sorted-neighborhood pairing inside a (possibly hot) block: sort block
@@ -189,22 +170,13 @@ object Blocking {
       .distinct()
   }
 
-  /** Size-based join-side hint (north_star: "skew-aware broadcast-or-sort-
-    * merge block join"): broadcast the smaller side when it fits, else let
-    * Catalyst/AQE pick sort-merge. `rowsHint` should come from a cheap
-    * count on an already-materialised stage boundary.
-    */
-  def broadcastIfSmall(df: DataFrame, rowsHint: Long, maxBroadcastRows: Long = 1000000L): DataFrame =
-    if (rowsHint >= 0 && rowsHint <= maxBroadcastRows) broadcast(df) else df
-
   private def candidatePairs(
       l: DataFrame,
       r: DataFrame,
       idCol: String,
       rules: Seq[BlockingRule],
       skew: SkewConfig,
-      selfDedup: Boolean,
-      carryCols: Seq[String]): BlockingResult = {
+      selfDedup: Boolean): BlockingResult = {
     val cap = skew.maxBlockRows
     val ultraCap = cap.toLong * skew.maxSaltFactor
 
@@ -218,15 +190,11 @@ object Blocking {
       df.withColumn(s"__bk_$i", rule.rightKey.cast("string"))
     }
 
-    val outCols =
-      Seq(col(s"${idCol}_l"), col(s"${idCol}_r"), col("match_key")) ++
-        carryCols.flatMap(c => Seq(col(c + "_l"), col(c + "_r")))
-
-    // NARROW frames for the joins: id + rule keys only. The heavy carry
-    // columns (turn texts, TF hist maps, ...) are attached ONCE after the
-    // union with two id-joins — shuffling them through every rule join
-    // multiplied the blocking stage's bytes by the carry width (measured
-    // 45 s -> the dominant pipeline stage at 30k convs).
+    // NARROW frames for the joins: id + rule keys only. Feature columns
+    // are attached in the scoring stage (Pipeline.attachScoreCols) —
+    // shuffling them through the rule join multiplied the blocking stage's
+    // bytes by their width (measured 45 s -> the dominant pipeline stage at
+    // 30k convs).
     val lNarrow = lKeyed.select(
       (col(s"${idCol}_l") +: rules.indices.map(i => col(s"__bk_$i"))): _*)
     val rNarrow = rKeyed.select(
@@ -423,20 +391,7 @@ object Blocking {
           mainPairs.unionByName(dedup.select(idPair: _*))
       }
 
-    // attach carry columns once, post-union (one row per id on each side)
-    val out =
-      if (carryCols.isEmpty) allPairs.select(outCols: _*)
-      else {
-        val lCarry = lKeyed.select(
-          (col(s"${idCol}_l") +: carryCols.map(c => col(c + "_l"))): _*)
-        val rCarry = rKeyed.select(
-          (col(s"${idCol}_r") +: carryCols.map(c => col(c + "_r"))): _*)
-        allPairs
-          .join(lCarry, Seq(s"${idCol}_l"))
-          .join(rCarry, Seq(s"${idCol}_r"))
-          .select(outCols: _*)
-      }
-    BlockingResult(out, statsOut)
+    BlockingResult(allPairs, statsOut)
   }
 
   /** Sorted-neighborhood pairs for rows whose rule-key is ultra-hot:

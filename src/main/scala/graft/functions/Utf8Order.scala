@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+
 /** Spark's string order: UTF-8 byte order, which is code point order.
   * String.compareTo orders by UTF-16 unit and puts supplementary
   * characters (surrogates D800-DFFF) below U+E000-U+FFFF.
@@ -16,5 +18,20 @@ object Utf8Order extends Ordering[String] {
       i += 1
     }
     a.length - b.length
+  }
+}
+
+/** Spark's order for an id type, on the values a Row holds: the order of
+  * `least`/`min` over the column. Driver code that must pick the same id
+  * as a Spark plan compares with this; types other than strings and
+  * integral numbers are rejected rather than guessed.
+  */
+object SparkOrder {
+  def apply(t: DataType): Ordering[Any] = t match {
+    case StringType => Utf8Order.on[Any](_.asInstanceOf[String])
+    case ByteType | ShortType | IntegerType | LongType =>
+      Ordering.Long.on[Any](_.asInstanceOf[Number].longValue)
+    case other => throw new IllegalArgumentException(
+      s"ids must be a string or an integral type, got ${other.simpleString}")
   }
 }

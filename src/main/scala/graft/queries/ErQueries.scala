@@ -280,10 +280,10 @@ object ErQueries {
       "q34_salted_blocking",
       (s, dir) => {
         val d = load(s, dir, "documents").select(col("doc_id"), col("lang"))
-        Blocking.candidatePairsSelf(
+        Blocking.candidatePairsSelfWithStats(
           d, "doc_id",
           Seq(BlockingRule("lang", col("lang_l"), col("lang_r"))),
-          Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 2, snmWindow = 5))
+          Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 2, snmWindow = 5)).pairs
       },
       Some("""
         WITH cnt AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),

@@ -34,7 +34,7 @@ object Tables {
     *
     * Fan-out is opt-IN per call site because it costs one extra exchange:
     * a matched-window A/B over the scan->shuffle-immediate queries
-    * (BenchExtra `cheap`) measured the blanket form LOSING 0.2-0.8 s per
+    * (OPTIMIZATION_r06.md §1) measured the blanket form LOSING 0.2-0.8 s per
     * query (q10 0.31->1.07 s, q08 0.60->1.46 s, q24 0.57->1.11 s — the
     * per-row work those scans feed is trivial, so the added exchange is
     * pure overhead), while the heavy-chain queries (shingle/minhash/
@@ -44,8 +44,7 @@ object Tables {
     * Round-robin keeps results identical — every declared query's output
     * is row-order-deterministic and the driver hashes sorted rows — and
     * Spark's sort-before-repartition keeps the assignment reproducible
-    * under task retry. SPARK_GRAFT_SCAN_FANOUT=0 force-disables (A/B
-    * escape hatch; the default path is what the driver measures).
+    * under task retry.
     */
   def load(
       spark: SparkSession,
@@ -54,7 +53,7 @@ object Tables {
       fanout: Boolean = false): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val df = spark.read.parquet(path)
-    if (!fanout || sys.env.get("SPARK_GRAFT_SCAN_FANOUT").contains("0")) return df
+    if (!fanout) return df
     val cores = spark.sparkContext.defaultParallelism
     val bytes =
       try {

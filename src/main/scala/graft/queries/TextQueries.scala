@@ -115,9 +115,10 @@ object TextQueries {
     QueryDef(
       "q14_bigrams_top",
       (s, dir) => {
-        // round-6 A/B (BenchExtra `q14ab`, count action, both JIT orders):
-        // steady-state the fan-out + pre-explode-barrier treatment ties the
-        // plain r5 shape (~2.0 s vs ~2.3 s, within the 1.9-2.5 s spread),
+        // round-6 A/B (OPTIMIZATION_r06.md q14 note; count action, both
+        // JIT orders): steady-state the fan-out + pre-explode-barrier
+        // treatment ties the plain r5 shape (~2.0 s vs ~2.3 s, within the
+        // 1.9-2.5 s spread),
         // and in bench context the plain shape reads faster because it
         // shares warm codegen with q12/q13 (which reverted in a104b9b for
         // the same reason) — so q14 keeps the plain round-5 plan.

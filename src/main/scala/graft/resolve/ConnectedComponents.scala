@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.SparkOrder
 
 /** Transitive closure of match edges into entity clusters via alternating
   * large-star / small-star (Kiveris et al., "Connected Components in
@@ -64,7 +65,10 @@ object ConnectedComponents {
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the driver finish's id order, taken before anything runs so an
+    // unsupported id type fails whichever path the edge count selects
+    val idOrder = SparkOrder(e.schema("src").dataType)
+    e = e.persist(StorageLevel.MEMORY_AND_DISK)
 
     // (count, order-independent hash-sum) signature; decimal sum so the
     // aggregate cannot overflow under ANSI mode
@@ -86,7 +90,7 @@ object ConnectedComponents {
     var prevSig: (Long, String) = sigOf(e)
 
     if (prevSig._1 <= driverFinishMaxEdges) {
-      val assign = driverUnionFind(spark, e)
+      val assign = driverUnionFind(spark, e, idOrder)
       e.unpersist()
       return assign
     }
@@ -128,7 +132,7 @@ object ConnectedComponents {
       // contracted edge set yields the same components and min-id roots.
       // sig._1 is the edge count the convergence signature already paid for.
       if (!converged && sig._1 <= driverFinishMaxEdges) {
-        val assign = driverUnionFind(spark, e)
+        val assign = driverUnionFind(spark, e, idOrder)
         e.unpersist()
         return assign
       }
@@ -164,10 +168,11 @@ object ConnectedComponents {
     * bounded upstream by the blocking caps that generate these edges.
     * For UNBOUNDED edge inputs (run/assignAll as a public component) the
     * hub-skew question was settled by a planted-hub A/B in round 6: the
-    * window form beat the groupBy(min)+join alternative up to 4M-degree
-    * hubs (see starRoundAgg's doc for numbers); callers whose hubs exceed
-    * a single task's spillable sort can swap in starRoundAgg, which is
-    * equivalence-tested against this form.
+    * window form beat the groupBy(min)+join-back alternative on 1M- and
+    * 4M-degree hubs and on uniform graphs of equal edge count
+    * (OPTIMIZATION_r06.md §4): the join-back's extra exchange and two
+    * sort-merge sorts cost more than a hub's single-task sort, which
+    * spills rather than failing.
     * Large-star's output is NOT deduplicated: duplicates cannot change the
     * small-star minima and the single distinct below canonicalises the
     * round's output — one fewer shuffle for a bounded (≤2x) transient
@@ -209,81 +214,20 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** starRound with per-node neighbourhood minima computed via
-    * groupBy(min) + join-back instead of a window min over
-    * partitionBy(u). Emission logic is expression-identical, so the
-    * output edge multiset is the same (ConnectedComponentsSpec
-    * equivalence test).
-    *
-    * Settles VERDICT r5 #2 (hub-skew question) by measurement, not
-    * speculation: this form's min is map-side partially aggregated (a
-    * hub's minima collapse per map task before the shuffle) and the join
-    * back is AQE-skew-splittable, where the window form sorts a hub's
-    * whole neighbourhood in ONE task. But the planted-hub A/B
-    * (BenchExtra `cchub`, OPTIMIZATION_r06.md) measured the WINDOW form
-    * faster on BOTH shapes at both sizes tried — 1M-degree hub 6.7 s vs
-    * 7.0 s, 4M-degree hub 24.8 s vs 30.9 s, 1M/4M uniform 2.2/4.4 s vs
-    * 11.1/8.6 s — because the join-back costs an extra exchange + two
-    * sort-merge sorts that outweigh the hub partition's single-task sort,
-    * which spills gracefully rather than OOMing. The loop therefore keeps
-    * the window form; this variant stays as the measured, equivalence-
-    * tested alternative for workloads whose hub neighbourhoods exceed
-    * what one task's spillable sort should carry.
-    */
-  private[graft] def starRoundAgg(e: DataFrame): DataFrame = {
-    def bothDirections(edges: DataFrame): DataFrame =
-      edges.select(explode(array(
-        struct(col("src").as("u"), col("dst").as("v")),
-        struct(col("dst").as("u"), col("src").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-    // ---- large-star: connect every v in N(u), v > u, to m = min(N(u) ∪ {u})
-    val bdE = bothDirections(e)
-    val minE = bdE.groupBy(col("u")).agg(min(col("v")).as("mv"))
-    val large = bdE.join(minE, Seq("u"))
-      .withColumn("m", least(col("mv"), col("u")))
-      .filter(col("v") > col("u"))
-      .select(least(col("v"), col("m")).as("src"), greatest(col("v"), col("m")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // ---- small-star: connect every v in N(u), v <= u, plus u itself, to m
-    val bdL = bothDirections(large)
-    val minL = bdL.groupBy(col("u")).agg(min(col("v")).as("mv"))
-    bdL.join(minL, Seq("u"))
-      .withColumn("m", least(col("mv"), col("u")))
-      .select(explode(filter(array(
-        struct(least(col("v"), col("m")).as("s"), greatest(col("v"), col("m")).as("d"),
-          (col("v") <= col("u")).as("keep")),
-        struct(least(col("u"), col("m")).as("s"), greatest(col("u"), col("m")).as("d"),
-          (col("v") === col("mv")).as("keep"))),
-        x => x.getField("keep"))).as("edge"))
-      .select(col("edge.s").as("src"), col("edge.d").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-  }
-
   /** Exact driver-side finish for small edge sets: union-find with
     * min-id roots — identical output to the large/small-star fixpoint
     * (every node maps to its component's minimum id), in one collect
-    * instead of 3-5 four-shuffle rounds. Comparison matches the distributed
-    * least()/min() path EXACTLY: numeric ids by value; string ids by UTF-8
-    * BINARY byte order (Spark's UTF8String comparison) — Java's String `<`
-    * is UTF-16 code-unit order, which disagrees for supplementary code
-    * points vs U+E000..U+FFFF, so the two paths could otherwise pick
-    * different component roots depending on which one the edge-count
-    * threshold selected (ADVICE r3).
+    * instead of 3-5 four-shuffle rounds. `idOrder` is Spark's order for the
+    * id type (`SparkOrder`), so the root is the one the distributed
+    * least()/min() path picks: numeric ids by value, string ids by UTF-8
+    * byte order (Java's String `<` is UTF-16 code-unit order, which
+    * disagrees for supplementary code points). Otherwise the root would
+    * depend on which path the edge-count gate selected.
     */
-  private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
+  private def driverUnionFind(spark: SparkSession, e: DataFrame, idOrder: Ordering[Any]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.spark.sql.types.{StructField, StructType}
     val dt = e.schema(0).dataType
-    def utf8Lt(a: String, b: String): Boolean =
-      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
-    val lt: (Any, Any) => Boolean = dt match {
-      case StringType => (a, b) => utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
-      case LongType => (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-      case IntegerType => (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]
-      case _ => (a, b) => String.valueOf(a) < String.valueOf(b)
-    }
     val rows = e.collect()
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
@@ -297,7 +241,7 @@ object ConnectedComponents {
       val ra = find(row.get(0)); val rb = find(row.get(1))
       // merging keeps the smaller root, so each component's final root is
       // its minimum id — the distributed path's cluster_id
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (idOrder.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
     rows.foreach { row => nodes += row.get(0); nodes += row.get(1) }

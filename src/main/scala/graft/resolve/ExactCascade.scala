@@ -6,7 +6,7 @@ import scala.util.hashing.MurmurHash3
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.Utf8Order
+import graft.functions.SparkOrder
 
 /** Deterministic exact-match cascade — the cheap first pass that removes
   * easy matches before probabilistic scoring (reference:
@@ -191,7 +191,7 @@ object ExactCascade {
         col("sig_text"))
     val in = side(messy, isMessy = true).unionByName(side(canonical, isMessy = false))
     val idType = in.schema("__id").dataType
-    val idOrder = sparkOrder(idType)
+    val idOrder = SparkOrder(idType)
 
     // Bucket count of each split block, broadcast to its rows; a NULL
     // __buckets means one bucket.
@@ -334,15 +334,6 @@ object ExactCascade {
         Some((packed.substring(i, j), j))
       }
     }.toSeq
-
-  /** Spark's order for an id type, on the values a Row holds. */
-  private def sparkOrder(t: DataType): Ordering[Any] = t match {
-    case StringType => Utf8Order.on[Any](_.asInstanceOf[String])
-    case ByteType | ShortType | IntegerType | LongType =>
-      Ordering.Long.on[Any](_.asInstanceOf[Number].longValue)
-    case other => throw new IllegalArgumentException(
-      s"ExactCascade ids must be a string or an integral type, got ${other.simpleString}")
-  }
 
   /** Annotate the full messy table with cascade results (unmatched rows get
     * null reason) — row-count preserving, like the reference's finalisation

@@ -49,8 +49,8 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     finally out.close()
   }
 
-  /** Fingerprint recorded when the stage was committed (empty for stages
-    * committed by older layouts with no manifest).
+  /** Fingerprint recorded when the stage was committed (None when the
+    * stage has no manifest).
     */
   def committedFingerprint(stage: String): Option[String] =
     readManifest(stage).map { json =>
@@ -59,20 +59,14 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     }
 
   /** Run (or resume) a stage: reused only when committed AND the recorded
-    * fingerprint matches `fingerprint` — a config change invalidates the
-    * checkpoint instead of silently serving stale results.
+    * fingerprint equals `fingerprint` — a config change invalidates the
+    * checkpoint instead of silently serving stale results, and a stage
+    * without a manifest (older layout, or deleted) is unverifiable, so it
+    * is recomputed.
     */
-  def stage(name: String, fingerprint: String = "")(compute: => DataFrame): DataFrame = {
+  def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame = {
     val path = s"$dir/$name"
-    // An ABSENT manifest is a fingerprint MISMATCH when the caller supplies
-    // one: a stage committed by an older layout (or whose manifest was
-    // deleted) is unverifiable and must be recomputed, not silently reused
-    // under any config (ADVICE r2). Legacy no-fingerprint callers still
-    // reuse manifest-less commits.
-    val reusable = isCommitted(name) && (committedFingerprint(name) match {
-      case Some(fp) => fp == fingerprint
-      case None => fingerprint.isEmpty
-    })
+    val reusable = isCommitted(name) && committedFingerprint(name).contains(fingerprint)
     if (reusable) {
       spark.read.parquet(path)
     } else {
@@ -101,13 +95,4 @@ final class Checkpoints(spark: SparkSession, dir: String) {
   }
 
   def readInfo(stage: String): Option[String] = readFile(new Path(s"$dir/_info_$stage.json"))
-
-  /** Stages committed so far (manifest files present), by modification time. */
-  def committedStages(): Seq[String] = {
-    val st = fs.listStatus(new Path(dir))
-    st.filter(s => s.getPath.getName.startsWith("_manifest_"))
-      .sortBy(_.getModificationTime)
-      .map(_.getPath.getName.stripPrefix("_manifest_").stripSuffix(".json"))
-      .toSeq
-  }
 }

@@ -137,9 +137,9 @@ object Scoring {
     element_at(array(bfs.map(lit(_)): _*), idx + 1)
   }
 
-  /** Default model over the signature-pair columns produced by
-    * Blocking.candidatePairs* with carryCols from Signatures.signatures +
-    * attachTf.
+  /** Default model over the signature-pair columns that
+    * Pipeline.attachScoreCols joins onto candidate pairs from
+    * Signatures.signatures + attachTf.
     *
     * @param meanJw the mean-turn-JW column the turn_jw cascade thresholds
     *   read. The default re-derives the full 3-alignment JW sweep inline;
@@ -291,10 +291,10 @@ object Scoring {
 
   private def jwCol(a: Column, b: Column): Column = jaroWinkler(a, b)
 
-  /** Score with the default model + the banded TF-product comparison added
-    * when hist maps are present.
+  /** Score with the default model + the banded TF-product comparison
+    * (Bayes factor 1 when either hist map is missing).
     */
-  def scoreDefault(pairs: DataFrame, prior: Double = 1e-6, useTfProduct: Boolean = true): DataFrame = {
+  def scoreDefault(pairs: DataFrame, prior: Double = 1e-6): DataFrame = {
     // Project the 3-alignment JW sweep ONCE per pair. As its own non-cheap
     // alias referenced 3x downstream, CollapseProject keeps the projection
     // separate, guaranteeing single evaluation; inline it was evaluated per
@@ -304,16 +304,13 @@ object Scoring {
     val withJw = pairs.withColumn("__mean_turn_jw", meanTurnJw)
     val base = score(withJw, defaultModel(prior, meanJw = col("__mean_turn_jw")))
       .drop("__mean_turn_jw")
-    if (!useTfProduct) base
-    else {
-      val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
-      val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))
-        .otherwise(bandedTfBf(prod))
-      base
-        .withColumn("bf_token_tf_product", bf)
-        .withColumn("match_weight", col("match_weight") + log2(col("bf_token_tf_product")))
-        .withColumn("match_probability",
-          pow(lit(2.0), col("match_weight")) / (lit(1.0) + pow(lit(2.0), col("match_weight"))))
-    }
+    val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
+    val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))
+      .otherwise(bandedTfBf(prod))
+    base
+      .withColumn("bf_token_tf_product", bf)
+      .withColumn("match_weight", col("match_weight") + log2(col("bf_token_tf_product")))
+      .withColumn("match_probability",
+        pow(lit(2.0), col("match_weight")) / (lit(1.0) + pow(lit(2.0), col("match_weight"))))
   }
 }

@@ -23,8 +23,8 @@ class BlockingSkewSpec extends AnyFunSuite {
       (f"id$i%04d",
         if (i <= 400) "HOT" else if (i <= 430) "WARM" else s"solo$i")
     }.toDF("conv_id", "key")
-    val pairs = Blocking.candidatePairsSelf(
-      df, "conv_id", rule, Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 16))
+    val pairs = Blocking.candidatePairsSelfWithStats(
+      df, "conv_id", rule, Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 16)).pairs
     val expected = 400L * 399 / 2 + 30L * 29 / 2
     assert(pairs.count() === expected)
     assert(pairs.select("conv_id_l", "conv_id_r").distinct().count() === expected)
@@ -38,9 +38,9 @@ class BlockingSkewSpec extends AnyFunSuite {
     // id-ordered window-5 pair count w*n - w(w+1)/2 = 985, match_key =
     // rules.length + ruleIdx = 1
     val df = (1 to 200).map(i => (f"id$i%04d", "HOT")).toDF("conv_id", "key")
-    val pairs = Blocking.candidatePairsSelf(
+    val pairs = Blocking.candidatePairsSelfWithStats(
       df, "conv_id", rule,
-      Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2, snmWindow = 5))
+      Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2, snmWindow = 5)).pairs
     assert(pairs.count() === 5L * 200 - 15)
     assert(pairs.select("match_key").distinct().as[Int].collect().toSet === Set(1))
   }
@@ -56,9 +56,9 @@ class BlockingSkewSpec extends AnyFunSuite {
     val rules = Seq(
       BlockingRule("u", col("u_l"), col("u_r")),
       BlockingRule("k2", col("k2_l"), col("k2_r")))
-    val pairs = Blocking.candidatePairsSelf(
+    val pairs = Blocking.candidatePairsSelfWithStats(
       df, "conv_id", rules,
-      Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2, snmWindow = 3))
+      Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2, snmWindow = 3)).pairs
     val keysFor12 = pairs
       .filter(col("conv_id_l") === "id001" && col("conv_id_r") === "id002")
       .select("match_key").as[Int].collect().toSeq
@@ -68,9 +68,9 @@ class BlockingSkewSpec extends AnyFunSuite {
   test("link mode: salted tier preserves the full cross-side pair set") {
     val left = (1 to 120).map(i => (f"c$i%03d", "HOT")).toDF("conv_id", "key")
     val right = (1 to 80).map(i => (f"m$i%03d", "HOT")).toDF("conv_id", "key")
-    val pairs = Blocking.candidatePairsLink(
+    val pairs = Blocking.candidatePairsLinkWithStats(
       left, right, "conv_id", rule,
-      Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 8))
+      Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 8)).pairs
     assert(pairs.count() === 120L * 80)
     assert(pairs.select("conv_id_l", "conv_id_r").distinct().count() === 120L * 80)
   }

@@ -133,24 +133,28 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(gotDistributed === want)
   }
 
-  test("starRound and starRoundAgg emit the same edge set (random graphs)") {
-    // the groupBy(min)+join variant exists for hub-skew safety (VERDICT
-    // r5 #2); both forms must contract identically so either can serve
-    // the fixpoint loop
-    val rnd = new scala.util.Random(13)
-    for (trial <- 1 to 5) {
-      val n = 20 + rnd.nextInt(40)
-      val nodes = (0 until n).map(i => f"s$i%03d")
-      val raw = (0 until 2 * n).map(_ => (nodes(rnd.nextInt(n)), nodes(rnd.nextInt(n))))
-      // canonical (src < dst) distinct edges, as run() feeds starRound
-      val canonical = raw.filter { case (a, b) => a != b }
-        .map { case (a, b) => if (utf8Ord.lt(a, b)) (a, b) else (b, a) }
-        .distinct.toDF("src", "dst")
-      val w = ConnectedComponents.starRound(canonical)
-        .as[(String, String)].collect().toSet
-      val g = ConnectedComponents.starRoundAgg(canonical)
-        .as[(String, String)].collect().toSet
-      assert(w === g, s"trial $trial: window and agg star rounds disagree")
+  test("ShortType ids: driver finish and distributed path pick the numeric min root") {
+    // as strings "10" < "9": a driver finish comparing the ids' text would
+    // root {9, 10, 11} at 10 while the distributed least()/min() picks 9
+    val ids = Seq[Short](1, 2, 9, 10, 11)
+    val edges = Seq[(Short, Short)]((10, 9), (10, 11), (1, 2)).toDF("src", "dst")
+    def assign(gate: Long): Map[Short, Short] = ConnectedComponents.assignAll(
+      spark, ids.toDF("conv_id"), edges, driverFinishMaxEdges = gate)
+      .as[(Short, Short)].collect().toMap
+    val driver = assign(ConnectedComponents.DriverFinishMaxEdges)
+    assert(driver === assign(0L))
+    val want = Seq(1 -> 1, 2 -> 1, 9 -> 9, 10 -> 9, 11 -> 9)
+      .map { case (id, root) => id.toShort -> root.toShort }.toMap
+    assert(driver === want)
+  }
+
+  test("unsupported id type fails the same way on both paths") {
+    val edges = Seq((1.5, 2.5)).toDF("src", "dst")
+    for (gate <- Seq(ConnectedComponents.DriverFinishMaxEdges, 0L)) {
+      val e = intercept[IllegalArgumentException] {
+        ConnectedComponents.run(spark, edges, driverFinishMaxEdges = gate)
+      }
+      assert(e.getMessage.contains("ids must be a string or an integral type"))
     }
   }
 }

@@ -5,7 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.blocking.{Blocking, BlockingRule}
 import graft.evaluate.Evaluate
 import graft.refine.DistinguishingTokens
-import graft.score.Scoring
 import graft.signature.Signatures
 
 /** Port of the reference's edge-case corpus strategy
@@ -276,16 +275,12 @@ class EdgeCaseSpec extends AnyFunSuite {
     val messySide = sigs.filter(col("conv_id").startsWith("m"))
     val candSide = sigs.filter(col("conv_id").startsWith("c"))
     // candidates are the _l side (reference: l = canonical), messy = _r
-    val pairs = Blocking.candidatePairsLink(
+    val pairs = Blocking.candidatePairsLinkWithStats(
       candSide, messySide, "conv_id",
       Seq(BlockingRule("test_block", col("test_block_l"), col("test_block_r"))),
-      Blocking.SkewConfig(maxBlockRows = 100),
-      carryCols = Seq("sig_text", "turn_texts", "role_seq", "len_band",
-        "salient_token_1", "salient_token_2", "salient_token_3", "token_freq_hist",
-        "very_unusual_tokens", "extremely_unusual_tokens", "n_turns",
-        "numeric_token_1", "numeric_token_2", "numeric_token_3"))
+      Blocking.SkewConfig(maxBlockRows = 100)).pairs
 
-    val scored = Scoring.scoreDefault(pairs, 1e-6)
+    val scored = Pipeline.scorePairs(candSide, messySide, pairs, 1e-6)
       .select("conv_id_l", "conv_id_r", "match_weight", "match_probability",
         "sig_text_l", "sig_text_r")
     val refined = DistinguishingTokens.improve(scored,

@@ -66,6 +66,13 @@ class SourcesSpec extends AnyFunSuite {
     // config change through the same non-file: scheme invalidates
     val changed = ck.stage("s3stage", "fp2") { recomputed = true; df }
     assert(changed.count() === rows.length && recomputed)
+    // a committed stage whose manifest is gone is unverifiable: recomputed
+    assert(java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(local, "_manifest_s3stage.json")))
+    recomputed = false
+    val unverified = ck.stage("s3stage", "fp2") { recomputed = true; df }
+    assert(unverified.count() === rows.length && recomputed)
+    assert(ck.committedFingerprint("s3stage").contains("fp2"))
   }
 }
 
