@@ -67,6 +67,12 @@ object ExplainAudit {
         "filter — no joins, no explode; the round-4 collapse of the " +
         "10-stage self-mode cascade (proof in selfExactLinks Scaladoc).")
 
+    // at 400 conversations the rule join would be broadcast; planning the
+    // blocking section without broadcast joins shows the shuffled
+    // (rule, key, __salt) join the pipeline's `pairs` stage runs at scale
+    // (the hot-key lookup tables are broadcast by hint either way)
+    val broadcastThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val pairs = graft.blocking.Blocking.candidatePairsSelfWithStats(
       sigs.localCheckpoint(true), "conv_id",
       graft.blocking.Blocking.defaultRules(graft.signature.Signatures.Bands),
@@ -76,18 +82,23 @@ object ExplainAudit {
       pairs,
       "Want: the narrow (id_l, id_r, match_key) pairs the pipeline's `pairs` " +
         "stage commits: per side one projection of id + the array of every " +
-        "rule's string key, posexplode to (rule, key), ONE equi-join on " +
-        "(rule, key) for all rules (broadcast at this size, shuffled at " +
-        "scale; salt joins only when a key is over cap) with the " +
-        "earlier-rule exclusion in its condition; no feature columns " +
-        "(scoring attaches them).")
+        "rule's string key, posexplode to (rule, key), ONE shuffled " +
+        "sort-merge join for all rules, as at scale (broadcast joins are " +
+        "off for this section), keyed (rule, key, __salt); no key is over " +
+        "cap here, so the constant salt 0 folds out of the keys. The " +
+        "earlier-rule exclusion sits in the join condition; no feature " +
+        "columns (scoring attaches them).")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
 
     dump("q34 tiered hot-block blocking (salt + SNM salvage)",
       SparkEntry.queries("q34_salted_blocking")(spark, sfDir),
-      "Want: cool tier as plain equi-join; salted tier joins on (key, salt) " +
-        "with the right side exploded over g salts (hot-key lookup tables " +
-        "broadcast); ultra tier as window rank + bounded-range self-join; " +
-        "anti-join dedupe before the final union.")
+      "Want: cool tier as plain equi-join; salted tier joins on " +
+        "(rule, key, __salt) with the replicated side exploded over g salts " +
+        "(hot-key lookup tables broadcast); ultra tier salvaged in one pass " +
+        "for all rules: posexplode to (rule, key), broadcast semi-join to " +
+        "the ultra keys, one window rank per (rule, key), one bounded-range " +
+        "self-join, min(match_key) per pair; anti-join dedupe before the " +
+        "final union.")
 
     dump("q19b LSH-gated Jaccard (scale path)",
       SparkEntry.queries("q19b_lsh_jaccard")(spark, sfDir),

@@ -10,23 +10,28 @@ import org.apache.spark.sql.functions._
   * data/splink_model.json:16-89; SURVEY.md §2.3 "THE scalability-critical
   * operator").
   *
-  * Skew handling (north_rule: "salted hot-block splitting") is tiered by
-  * per-rule block size c against `maxBlockRows`:
+  * Skew handling (north_rule: "salted hot-block splitting") is one runtime
+  * decision per key, made from its observed size: one job collects every
+  * (rule, key) whose pair-volume size c is over `maxBlockRows`, and the
+  * driver gives each its tier (`tierOf`):
   *
   *   1. c <= cap: plain equi-join (sort-merge / broadcast via Catalyst+AQE).
-  *   2. cap < c <= cap * maxSaltFactor: SALTED join — the left row keeps one
-  *      deterministic salt `pmod(xxhash64(id), g)`, the right row is
-  *      replicated to all g salts, and the join key becomes (key, salt).
-  *      Every pair with equal keys is still emitted exactly once (the left
-  *      row's salt bucket), so recall is IDENTICAL to the unsalted join,
-  *      but the hot key's work is spread over g reducer partitions instead
-  *      of one straggler.
+  *   2. cap < c <= cap * maxSaltFactor: SALTED into g = ceil(c / cap)
+  *      buckets — the bigger side keeps one deterministic salt
+  *      `pmod(xxhash64(id), g)`, the other side is replicated to all g
+  *      salts, and the join key becomes (rule, key, salt). Every pair with
+  *      equal keys is still emitted exactly once, so recall is IDENTICAL
+  *      to the unsalted join, but the hot key's work is spread over g
+  *      reducer partitions instead of one straggler.
   *   3. c > cap * maxSaltFactor ("ultra-hot"): pair count is inherently
   *      quadratic (a 10^6-row key emits 10^12 pairs — no salting saves
   *      that), so these keys are routed through sorted-neighborhood pairing
-  *      (O(n * window), `snmWindow`) instead of being dropped; the salvage
-  *      pairs carry match_key = rules.length + ruleIndex so the affected
-  *      volume is observable in match-key metrics downstream.
+  *      (O(n * window), `snmWindow`) instead of being dropped: one pass over
+  *      every rule's ultra keys. Salvage pairs carry match_key =
+  *      rules.length + ruleIndex so the affected volume is observable in
+  *      match-key metrics downstream.
+  *   In link mode, a key over cap on ONE side only emits no pairs and is
+  *   dropped.
   *
   * Exclusion exactness: rule-j exclusion tests raw key equality, which is
   * only correct when rule j actually emits ALL equal-key pairs. Tiers 1-2
@@ -48,12 +53,6 @@ final case class RuleTierStats(
 final case class BlockingResult(pairs: DataFrame, tierStats: Seq[RuleTierStats])
 
 object Blocking {
-
-  /** Hot-key sets up to this size are collected to the driver as local
-    * relations (they are broadcast downstream anyway) so the stats aggregate
-    * can be unpersisted immediately; larger sets stay distributed.
-    */
-  val LocalHotKeyLimit = 100000L
 
   /** Key separator for composite keys; ASCII unit separator avoids
     * accidental collisions with token text.
@@ -115,6 +114,7 @@ object Blocking {
   /** Self-dedup pair generation: `id_l < id_r`, one row per pair with the
     * first matching rule's index as `match_key` (ultra-hot SNM salvage
     * pairs get rules.length + ruleIndex), plus per-rule skew-tier stats.
+    * The call runs one job (the tier collect); the pairs stay lazy.
     */
   def candidatePairsSelfWithStats(
       sigs: DataFrame,
@@ -126,8 +126,9 @@ object Blocking {
     candidatePairs(l, r, idCol, rules, skew, selfDedup = true)
   }
 
-  /** Link-mode (left x right) pair generation, plus per-rule skew-tier
-    * stats.
+  /** Link-mode (left x right) pair generation: pairs are cross-side
+    * only, the left row as `id_l`; match keys, stats and the one tier job
+    * as in self-dedup.
     */
   def candidatePairsLinkWithStats(
       left: DataFrame,
@@ -152,23 +153,46 @@ object Blocking {
       blockKey: Column,
       sortKey: Column,
       windowSize: Int): DataFrame = {
-    val ranked = df
-      .withColumn("__bk", blockKey)
-      .withColumn("__sk", sortKey)
-      .filter(col("__bk").isNotNull)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__bk")).orderBy(col("__sk").asc, col(idCol).asc)))
-    val l = ranked.select(col("__bk").as("__bk_l"), col("__rn").as("__rn_l"),
-      col(idCol).as(s"${idCol}_l"))
-    val r = ranked.select(col("__bk").as("__bk_r"), col("__rn").as("__rn_r"),
-      col(idCol).as(s"${idCol}_r"))
-    l.join(r, col("__bk_l") === col("__bk_r") && col("__rn_r") > col("__rn_l") &&
-        col("__rn_r") <= col("__rn_l") + windowSize)
+    val rows = df.select(blockKey.as("__k"), sortKey.as("__sort"), col(idCol).as("__id"))
+      .filter(col("__k").isNotNull)
+    neighborBand(rows, Seq("__k"), Seq(col("__sort").asc, col("__id").asc), windowSize)
       .select(
-        least(col(s"${idCol}_l"), col(s"${idCol}_r")).as(s"${idCol}_l"),
-        greatest(col(s"${idCol}_l"), col(s"${idCol}_r")).as(s"${idCol}_r"))
+        least(col("__id_a"), col("__id_b")).as(s"${idCol}_l"),
+        greatest(col("__id_a"), col("__id_b")).as(s"${idCol}_r"))
       .distinct()
   }
+
+  /** The sorted-neighborhood band join, written once: rank `rows` within
+    * each `block` by `order`, then pair every row with the next `w` ranks
+    * of its block. Each column of `rows` comes back twice, suffixed `_a`
+    * (the lower rank) and `_b`.
+    */
+  private def neighborBand(
+      rows: DataFrame, block: Seq[String], order: Seq[Column], w: Int): DataFrame = {
+    val ranked = rows.withColumn("__rn", row_number().over(
+      Window.partitionBy(block.map(col): _*).orderBy(order: _*)))
+    def side(s: String) = ranked.select(ranked.columns.map(c => col(c).as(c + s)): _*)
+    val sameBlock = block.map(k => col(k + "_a") === col(k + "_b")).reduce(_ && _)
+    side("_a").join(side("_b"), sameBlock &&
+      col("__rn_b") > col("__rn_a") && col("__rn_b") <= col("__rn_a") + w)
+  }
+
+  /** A hot key's skew tier (see the object doc): `Salted` over g buckets,
+    * `Ultra` (nulled, then salvaged by sorted neighborhood) or `OneSided`
+    * (link mode, over cap on one side only: nulled, no pairs to salvage).
+    */
+  private sealed trait Tier
+  private final case class Salted(g: Int) extends Tier
+  private case object Ultra extends Tier
+  private case object OneSided extends Tier
+
+  /** The one tier policy, for a key whose pair-volume size is over cap. */
+  private def tierOf(count: Long, oneSided: Boolean, skew: SkewConfig): Tier =
+    if (oneSided) OneSided
+    else if (count > skew.maxBlockRows.toLong * skew.maxSaltFactor) Ultra
+    else Salted(math.ceil(count / skew.maxBlockRows.toDouble).toInt)
+
+  private final case class HotKey(rule: Int, key: String, tier: Tier, keepL: Boolean)
 
   private def candidatePairs(
       l: DataFrame,
@@ -177,28 +201,27 @@ object Blocking {
       rules: Seq[BlockingRule],
       skew: SkewConfig,
       selfDedup: Boolean): BlockingResult = {
-    val cap = skew.maxBlockRows
-    val ultraCap = cap.toLong * skew.maxSaltFactor
+    val sp = l.sparkSession
+    import sp.implicits._
 
     // materialise every rule's key as a string column once per side, so the
     // earlier-rule exclusion predicates are cheap column references and the
     // hot-key tables (always string-keyed) join without implicit casts.
-    val lKeyed = rules.zipWithIndex.foldLeft(l) { case (df, (rule, i)) =>
-      df.withColumn(s"__bk_$i", rule.leftKey.cast("string"))
-    }
-    val rKeyed = rules.zipWithIndex.foldLeft(r) { case (df, (rule, i)) =>
-      df.withColumn(s"__bk_$i", rule.rightKey.cast("string"))
-    }
+    def keyed(df: DataFrame, key: BlockingRule => Column): DataFrame =
+      rules.zipWithIndex.foldLeft(df) { case (d, (rule, i)) =>
+        d.withColumn(s"__bk_$i", key(rule).cast("string"))
+      }
+    val lKeyed = keyed(l, _.leftKey)
+    val rKeyed = keyed(r, _.rightKey)
 
     // NARROW frames for the joins: id + rule keys only. Feature columns
     // are attached in the scoring stage (Pipeline.attachScoreCols) —
     // shuffling them through the rule join multiplied the blocking stage's
     // bytes by their width (measured 45 s -> the dominant pipeline stage at
     // 30k convs).
-    val lNarrow = lKeyed.select(
-      (col(s"${idCol}_l") +: rules.indices.map(i => col(s"__bk_$i"))): _*)
-    val rNarrow = rKeyed.select(
-      (col(s"${idCol}_r") +: rules.indices.map(i => col(s"__bk_$i"))): _*)
+    val bkCols = rules.indices.map(i => col(s"__bk_$i"))
+    val lNarrow = lKeyed.select((col(s"${idCol}_l") +: bkCols): _*)
+    val rNarrow = rKeyed.select((col(s"${idCol}_r") +: bkCols): _*)
 
     // ALL rules' per-key block sizes in ONE pass over the exploded
     // (rule, key) stream per side — a single scan regardless of rule count
@@ -238,129 +261,70 @@ object Blocking {
             (coalesce(col("cl"), lit(0L)) >= coalesce(col("cr"), lit(0L))).as("keep_l"),
             (col("cl").isNull || col("cr").isNull).as("one_sided"))
       }
-    val hot = counts.filter(col("count") > cap).persist()
 
-    // materialise the (tiny, persisted) hot-key stats once: per-rule salt /
-    // ultra counts drive driver-side plan PRUNING — the common all-cool case
-    // pays one aggregate and none of the skew machinery. One row per rule,
-    // so the collect is bounded by the rule count.
-    val tierStats = hot.groupBy(col("rule")).agg(
-        sum(when(not(col("one_sided")) && col("count") <= ultraCap, 1L).otherwise(0L))
-          .as("n_salt"),
-        sum(when(not(col("one_sided")) && col("count") > ultraCap, 1L).otherwise(0L))
-          .as("n_ultra"),
-        sum(when(col("one_sided"), 1L).otherwise(0L)).as("n_one_sided"))
-      .collect()
-    val ultraRules: Set[Int] = tierStats.filter(_.getLong(2) > 0).map(_.getInt(0)).toSet
-    // rules whose keys must be NULLED before the unified join: ultra-hot
-    // (salvaged via SNM) plus over-cap one-sided (dropped outright)
-    val dropRules: Set[Int] =
-      tierStats.filter(r => r.getLong(2) > 0 || r.getLong(3) > 0).map(_.getInt(0)).toSet
-    val anySalt: Boolean = tierStats.exists(_.getLong(1) > 0)
-    val statsOut: Seq[RuleTierStats] = tierStats.map(r =>
-      RuleTierStats(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_.rule).toSeq
+    // Every over-cap key, collected in one job and given its tier on the
+    // driver by `tierOf`; the stats and every lookup table below derive
+    // from this one list. Keys above cap are rare by definition, and each
+    // table built from the list is broadcast anyway. The common all-cool
+    // case collects nothing and builds none of the skew machinery.
+    val hot = counts.filter(col("count") > skew.maxBlockRows)
+      .select(col("rule"), col("key"), col("count"), col("keep_l"), col("one_sided"))
+      .collect().toSeq
+      .map(r => HotKey(r.getInt(0), r.getString(1),
+        tierOf(r.getLong(2), r.getBoolean(4), skew), r.getBoolean(3)))
+    val statsOut = hot.groupBy(_.rule).toSeq.sortBy(_._1).map { case (rule, keys) =>
+      def n(in: Tier => Boolean) = keys.count(k => in(k.tier)).toLong
+      RuleTierStats(rule, n(_.isInstanceOf[Salted]), n(_ == Ultra), n(_ == OneSided))
+    }
+    val saltInfo = hot.collect { case HotKey(rule, key, Salted(g), keepL) => (rule, key, g, keepL) }
+    val ultra = hot.collect { case HotKey(rule, key, Ultra, _) => (rule, key) }
+    // keys NULLED before the join: ultra (salvaged by SNM) plus over-cap
+    // one-sided (no pairs to salvage — dropping is lossless)
+    val dropKeys = hot.collect { case HotKey(rule, key, Ultra | OneSided, _) => (rule, key) }
 
-    // Hot-key tables are bounded by the hot-key count; when small enough
-    // (the overwhelmingly common case — keys above cap are rare by
-    // definition) collect them to the driver as local relations and drop
-    // the cached stats aggregate immediately: repeated invocations (bench
-    // reps, runLink after run) must not accumulate cached partitions for
-    // the lifetime of the SparkContext (ADVICE r2). Beyond the limit the
-    // distributed persisted frames are kept (correctness unchanged).
-    val totalHot = tierStats.map(r => r.getLong(1) + r.getLong(2) + r.getLong(3)).sum
-    val sp = l.sparkSession
-    // saltInfo: two-sided salt-tier keys; ultra: two-sided ultra-hot keys
-    // (SNM-salvaged); dropKeys: keys NULLED before the join = ultra plus
-    // over-cap one-sided keys (no pairs to salvage — dropping is lossless).
-    val (saltInfo, ultra, dropKeys) =
-      if (totalHot == 0) {
-        hot.unpersist()
-        (sp.emptyDataFrame, sp.emptyDataFrame, sp.emptyDataFrame)
-      } else if (totalHot <= LocalHotKeyLimit) {
-        import sp.implicits._
-        val hotRows = hot
-          .select(col("rule"), col("key"), col("count"), col("keep_l"), col("one_sided"))
-          .collect()
-        hot.unpersist()
-        val twoSided = hotRows.toSeq.filter(!_.getBoolean(4))
-        val saltLocal = twoSided
-          .filter(_.getLong(2) <= ultraCap)
-          .map(r => (r.getInt(0), r.getString(1),
-            math.ceil(r.getLong(2) / cap.toDouble).toInt, r.getBoolean(3)))
-          .toDF("rule", "key", "g", "keep_l")
-        val ultraLocal = twoSided
-          .filter(_.getLong(2) > ultraCap)
-          .map(r => (r.getInt(0), r.getString(1)))
-          .toDF("rule", "key")
-        val dropLocal = hotRows.toSeq
-          .filter(r => r.getBoolean(4) || r.getLong(2) > ultraCap)
-          .map(r => (r.getInt(0), r.getString(1)))
-          .toDF("rule", "key")
-        (saltLocal, ultraLocal, dropLocal)
-      } else {
-        (hot.filter(not(col("one_sided")) && col("count") <= ultraCap)
-          .select(col("rule"), col("key"),
-            ceil(col("count") / lit(cap.toDouble)).cast("int").as("g"), col("keep_l")),
-          hot.filter(not(col("one_sided")) && col("count") > ultraCap)
-            .select(col("rule"), col("key")),
-          hot.filter(col("one_sided") || col("count") > ultraCap)
-            .select(col("rule"), col("key")))
-      }
-
-    // Null dropped keys (ultra-hot + over-cap one-sided) on BOTH sides
-    // before the join: the rule neither emits nor excludes on them
-    // (exclusion on a key whose pairs were not fully emitted would silently
-    // lose recall — ADVICE.md round 1; a one-sided key can never be
-    // key-equal across a pair, so nulling it changes no exclusion outcome).
-    // Only rules that actually have dropped keys pay the broadcast lookup.
-    def nullDropped(df: DataFrame): DataFrame = dropRules.toSeq.sorted.foldLeft(df) { (d, i) =>
-      val u = broadcast(dropKeys.filter(col("rule") === i)
-        .select(col("key").as(s"__uk_$i"), lit(true).as(s"__uh_$i")))
+    // Null dropped keys on BOTH sides before the join: the rule neither
+    // emits nor excludes on them (exclusion on a key whose pairs were not
+    // fully emitted would silently lose recall — ADVICE.md round 1; a
+    // one-sided key can never be key-equal across a pair, so nulling it
+    // changes no exclusion outcome). Only rules that actually have dropped
+    // keys pay the broadcast lookup.
+    val dropRules = dropKeys.map(_._1).distinct.sorted
+    def nullDropped(df: DataFrame): DataFrame = dropRules.foldLeft(df) { (d, i) =>
+      val u = broadcast(dropKeys.collect { case (`i`, key) => (key, true) }
+        .toDF(s"__uk_$i", s"__uh_$i"))
       d.join(u, d(s"__bk_$i") === col(s"__uk_$i"), "left")
         .withColumn(s"__bk_$i",
           when(col(s"__uh_$i"), lit(null)).otherwise(col(s"__bk_$i")))
         .drop(s"__uk_$i", s"__uh_$i")
     }
-    val lK = if (dropRules.isEmpty) lNarrow else nullDropped(lNarrow)
-    val rK = if (dropRules.isEmpty) rNarrow else nullDropped(rNarrow)
+    val lK = nullDropped(lNarrow)
+    val rK = nullDropped(rNarrow)
 
     // ---- ONE unified join for every rule and tier, keyed (rule, key,
     // salt). Each side explodes its key array to (rule, key) rows carrying
-    // the full key array for exclusion; salt-tier keys get g salts (left
-    // keeps one deterministic salt, right replicates to all g — every
-    // equal-key pair still emitted exactly once, spread over g reducer
-    // partitions); cool keys ride the same join with salt 0. One shuffle
+    // the full key array for exclusion. A salt-tier key's keep side (the
+    // bigger) holds ONE deterministic salt, so it is partitioned into g
+    // buckets; the other side replicates to all g salts, so every
+    // equal-key pair is still emitted exactly once, spread over g reducer
+    // partitions. Cool keys ride the same join with salt 0. One shuffle
     // join replaces #rules separate joins — at 250k convs the per-rule plan
     // was STAGE-LATENCY bound (~100 s at both local[8] and local[32]).
-    val kArr = array(rules.indices.map(i => col(s"__bk_$i")): _*)
-    def explodeSide(df: DataFrame, idName: String, arrName: String): DataFrame =
-      df.withColumn(arrName, kArr)
-        .select(col(idName), col(arrName),
-          posexplode(col(arrName)).as(Seq("rule", "key")))
+    def joinSide(df: DataFrame, side: String, keeps: Column): DataFrame = {
+      val (id, karr) = (s"${idCol}_$side", s"__karr_$side")
+      val exploded = df.withColumn(karr, array(bkCols: _*))
+        .select(col(id), col(karr), posexplode(col(karr)).as(Seq("rule", "key")))
         .filter(col("key").isNotNull)
-
-    val lEx = explodeSide(lK, s"${idCol}_l", "__karr_l")
-    val rEx = explodeSide(rK, s"${idCol}_r", "__karr_r")
-    // Per-key salt roles: the keep side (bigger) holds ONE deterministic
-    // salt — it is partitioned into g buckets; the other side replicates to
-    // all g salts. Every equal-key pair still lands in exactly one bucket.
-    val saltLookup = broadcast(saltInfo)
-    def salted(df: DataFrame, idName: String, keeps: Column): DataFrame =
-      df.join(saltLookup, Seq("rule", "key"), "left")
+      if (saltInfo.isEmpty) exploded.withColumn("__salt", lit(0))
+      else exploded
+        .join(broadcast(saltInfo.toDF("rule", "key", "g", "keep_l")), Seq("rule", "key"), "left")
         .withColumn("__salt", explode(
           when(col("g").isNull, array(lit(0)))
-            .when(keeps, array(pmod(xxhash64(col(idName)), col("g")).cast("int")))
+            .when(keeps, array(pmod(xxhash64(col(id)), col("g")).cast("int")))
             .otherwise(sequence(lit(0), col("g") - 1))))
         .drop("g", "keep_l")
-    val lSide =
-      if (!anySalt) lEx.withColumn("__salt", lit(0))
-      else salted(lEx, s"${idCol}_l", col("keep_l"))
-    val rSide =
-      if (!anySalt) rEx.withColumn("__salt", lit(0))
-      else salted(rEx, s"${idCol}_r", not(col("keep_l")))
-
-    val joined0 = lSide.join(rSide, Seq("rule", "key", "__salt"))
+    }
+    val joined0 = joinSide(lK, "l", col("keep_l"))
+      .join(joinSide(rK, "r", not(col("keep_l"))), Seq("rule", "key", "__salt"))
     val joined =
       if (selfDedup) joined0.filter(col(s"${idCol}_l") < col(s"${idCol}_r")) else joined0
 
@@ -374,85 +338,63 @@ object Blocking {
     }
     val mainPairs = joined.filter(keep)
       .select(col(s"${idCol}_l"), col(s"${idCol}_r"), col("rule").as("match_key"))
-    val idPair = Seq(col(s"${idCol}_l"), col(s"${idCol}_r"), col("match_key"))
 
-    // ---- sorted-neighborhood salvage over ultra-hot blocks
-    // (plan built only when an ultra key exists).
+    // ---- sorted-neighborhood salvage over ultra-hot blocks (plan built
+    // only when an ultra key exists). Exactly-once overall: a salvage pair
+    // already emitted by a cool / salted rule is dropped (salvage volume is
+    // rare by construction, so this anti-join is cheap relative to
+    // mainPairs).
     val allPairs =
-      if (ultraRules.isEmpty) mainPairs
-      else snmSalvage(lKeyed, rKeyed, ultra, rules, idCol, skew, selfDedup) match {
-        case None => mainPairs
-        case Some(s) =>
-          // exactly-once overall: a salvage pair already emitted by a cool /
-          // salted rule is dropped (salvage volume is rare by construction,
-          // so this anti-join is cheap relative to mainPairs).
-          val ids = Seq(s"${idCol}_l", s"${idCol}_r")
-          val dedup = s.join(mainPairs.select(ids.head, ids.tail: _*), ids, "left_anti")
-          mainPairs.unionByName(dedup.select(idPair: _*))
-      }
+      if (ultra.isEmpty) mainPairs
+      else mainPairs.unionByName(
+        snmSalvage(lKeyed, rKeyed, ultra.toDF("rule", "key"), bkCols, idCol, skew, selfDedup)
+          .join(mainPairs.drop("match_key"), Seq(s"${idCol}_l", s"${idCol}_r"), "left_anti"))
 
     BlockingResult(allPairs, statsOut)
   }
 
-  /** Sorted-neighborhood pairs for rows whose rule-key is ultra-hot:
-    * one window pass per rule over only the affected rows; self-dedup pairs
-    * ordered id_l < id_r, link-mode pairs cross-side only. Returns
-    * (id_l, id_r, match_key = rules.length + rule) or None when no rule can
-    * have ultra keys (ultra is lazily evaluated — the plan is built
-    * unconditionally and unioned; empty ultra just yields zero rows).
+  /** Sorted-neighborhood pairs for every ultra-hot (rule, key) in one pass:
+    * each side's raw (rule, key) rows are exploded once and semi-joined to
+    * the broadcast `ultra` table, ranked within (rule, key) by
+    * (sort, side, id) and band-joined once (`neighborBand`). Self-dedup
+    * pairs are ordered id_l < id_r; link-mode pairs are cross-side only,
+    * the left row as id_l. A pair salvaged under several rules is kept
+    * once, with match_key = rules.length + the lowest such rule.
     */
   private def snmSalvage(
       lKeyed: DataFrame,
       rKeyed: DataFrame,
       ultra: DataFrame,
-      rules: Seq[BlockingRule],
+      bkCols: Seq[Column],
       idCol: String,
       skew: SkewConfig,
-      selfDedup: Boolean): Option[DataFrame] = {
-    val sortL = skew.snmSortCol.map(c => col(c + "_l")).getOrElse(col(s"${idCol}_l"))
-    val sortR = skew.snmSortCol.map(c => col(c + "_r")).getOrElse(col(s"${idCol}_r"))
-
-    val perRule = rules.indices.map { i =>
-      val uk = broadcast(ultra.filter(col("rule") === i).select(col("key").as("__ukey")))
-      val rows =
-        if (selfDedup)
-          lKeyed.join(uk, lKeyed(s"__bk_$i") === col("__ukey"), "left_semi")
-            .select(col(s"__bk_$i").as("__k"),
-              col(s"${idCol}_l").as("__id"), sortL.as("__sort"), lit("l").as("__side"))
-        else {
-          val a = lKeyed.join(uk, lKeyed(s"__bk_$i") === col("__ukey"), "left_semi")
-            .select(col(s"__bk_$i").as("__k"),
-              col(s"${idCol}_l").as("__id"), sortL.as("__sort"), lit("l").as("__side"))
-          val b = rKeyed.join(uk, rKeyed(s"__bk_$i") === col("__ukey"), "left_semi")
-            .select(col(s"__bk_$i").as("__k"),
-              col(s"${idCol}_r").as("__id"), sortR.as("__sort"), lit("r").as("__side"))
-          a.unionByName(b)
-        }
-      val ranked = rows.withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__k")).orderBy(col("__sort").asc, col("__side").asc, col("__id").asc)))
-      val a = ranked.select(col("__k").as("__k_a"), col("__rn").as("__rn_a"),
-        col("__id").as("__id_a"), col("__side").as("__side_a"))
-      val b = ranked.select(col("__k").as("__k_b"), col("__rn").as("__rn_b"),
-        col("__id").as("__id_b"), col("__side").as("__side_b"))
-      val windowed = a.join(b, col("__k_a") === col("__k_b") &&
-        col("__rn_b") > col("__rn_a") && col("__rn_b") <= col("__rn_a") + skew.snmWindow)
-      val pairs =
-        if (selfDedup)
-          windowed.select(
-            least(col("__id_a"), col("__id_b")).as(s"${idCol}_l"),
-            greatest(col("__id_a"), col("__id_b")).as(s"${idCol}_r"))
-        else
-          windowed.filter(col("__side_a") =!= col("__side_b"))
-            .select(
-              when(col("__side_a") === "l", col("__id_a")).otherwise(col("__id_b"))
-                .as(s"${idCol}_l"),
-              when(col("__side_a") === "l", col("__id_b")).otherwise(col("__id_a"))
-                .as(s"${idCol}_r"))
-      pairs.withColumn("match_key", lit(rules.length + i))
+      selfDedup: Boolean): DataFrame = {
+    def members(df: DataFrame, side: String): DataFrame = {
+      val sort = skew.snmSortCol.getOrElse(idCol) + "_" + side
+      df.select(col(s"${idCol}_$side").as("__id"), col(sort).as("__sort"),
+          lit(side).as("__side"), posexplode(array(bkCols: _*)).as(Seq("rule", "key")))
+        .join(broadcast(ultra), Seq("rule", "key"), "left_semi")
     }
-    if (perRule.isEmpty) None
-    else Some(perRule.reduce(_ unionByName _)
-      .groupBy(col(s"${idCol}_l"), col(s"${idCol}_r"))
-      .agg(min(col("match_key")).as("match_key")))
+    val rows =
+      if (selfDedup) members(lKeyed, "l")
+      else members(lKeyed, "l").unionByName(members(rKeyed, "r"))
+    val band = neighborBand(rows, Seq("rule", "key"),
+      Seq(col("__sort").asc, col("__side").asc, col("__id").asc), skew.snmWindow)
+    val pairs =
+      if (selfDedup)
+        band.select(
+          least(col("__id_a"), col("__id_b")).as(s"${idCol}_l"),
+          greatest(col("__id_a"), col("__id_b")).as(s"${idCol}_r"),
+          col("rule_a"))
+      else {
+        val aIsL = col("__side_a") === "l"
+        band.filter(col("__side_a") =!= col("__side_b"))
+          .select(
+            when(aIsL, col("__id_a")).otherwise(col("__id_b")).as(s"${idCol}_l"),
+            when(aIsL, col("__id_b")).otherwise(col("__id_a")).as(s"${idCol}_r"),
+            col("rule_a"))
+      }
+    pairs.groupBy(col(s"${idCol}_l"), col(s"${idCol}_r"))
+      .agg(min(lit(bkCols.length) + col("rule_a")).as("match_key"))
   }
 }

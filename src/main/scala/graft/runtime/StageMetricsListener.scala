@@ -2,16 +2,16 @@ package graft.runtime
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Per-partition lineage + per-stage metrics via SparkListener (north_rule:
   * "emit per-partition lineage and stage metrics"). Collects task-level
   * records-read/written, shuffle bytes and executor CPU per stage; dump
-  * with `report()` and `partitionLineage()`, or read the running totals
-  * `cpuNanos` and `stageCount` around a timed section.
+  * with `report()` and `partitionLineage()`, or read the running total
+  * `cpuNanos` around a timed section.
   *
   * Listener events arrive asynchronously: a read right after an action can
-  * miss that action's last task and stage events.
+  * miss that action's last task events.
   */
 final class StageMetricsListener extends SparkListener {
   import StageMetricsListener.StageAgg
@@ -19,7 +19,6 @@ final class StageMetricsListener extends SparkListener {
   val stages: mutable.Map[Int, StageAgg] = mutable.Map()
   /** per (stageId, partitionId) record counts — the per-partition lineage */
   val partitions: mutable.Map[(Int, Int), Long] = mutable.Map()
-  private var completedStages = 0
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
     synchronized {
@@ -37,14 +36,8 @@ final class StageMetricsListener extends SparkListener {
       }
     }
 
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-    synchronized { completedStages += 1 }
-
   /** Executor CPU of every task seen so far, in nanoseconds. */
   def cpuNanos: Long = synchronized { stages.valuesIterator.map(_.cpuTimeNs).sum }
-
-  /** Spark stages completed so far (skipped stages do not count). */
-  def stageCount: Int = synchronized { completedStages }
 
   def report(): String = synchronized {
     val lines = stages.toSeq.sortBy(_._1).map { case (id, a) =>

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.blocking.{Blocking, BlockingRule, RuleTierStats}
+import graft.blocking.{Blocking, BlockingResult, BlockingRule, RuleTierStats}
 
 /** Tiered hot-block handling (north_rule "salted hot-block splitting"):
   * salted joins must preserve the EXACT pair set of the unsalted join;
@@ -15,6 +15,17 @@ class BlockingSkewSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val rule = Seq(BlockingRule("k", col("key_l"), col("key_r")))
+
+  /** Plain-Scala sorted neighbourhood over one block: rank the
+    * (sort, side, id) rows in that order, pair each with the next `w` ranks.
+    */
+  private def snmReference(
+      rows: Seq[(String, String, String)],
+      w: Int): Seq[((String, String, String), (String, String, String))] = {
+    val ranked = rows.sorted.toIndexedSeq
+    for (i <- ranked.indices; j <- i + 1 to math.min(i + w, ranked.size - 1))
+      yield (ranked(i), ranked(j))
+  }
 
   test("salted tier emits exactly the unsalted pair set (no recall loss, exactly once)") {
     // one hot key (400 rows -> salted, g=8), one warm key (30 -> plain),
@@ -120,5 +131,83 @@ class BlockingSkewSpec extends AnyFunSuite {
     assert(r2.tierStats === Seq(RuleTierStats(0, 0, 1)))
     // salvage pairs are observable via the match_key >= #rules convention
     assert(r2.pairs.filter(col("match_key") >= 1).count() === 5L * 200 - 15)
+  }
+
+  test("link mode: ultra-hot key on both sides salvages cross-side (sort, side, id) neighbours") {
+    // one key on both sides, ultra-hot at cap=5, factor=2: sqrt(40 * 30) =
+    // 35 > 10. The sort column ties across sides, and right ids sort before
+    // left ids, so the side breaks those ties, not the id.
+    val rows = (1 to 40).map(i => (f"${i % 7}%02d", "l", f"x$i%03d")) ++
+      (1 to 30).map(i => (f"${i % 5}%02d", "r", f"a$i%03d"))
+    def side(s: String) =
+      rows.filter(_._2 == s).map(r => (r._3, "HOT", r._1)).toDF("conv_id", "key", "s")
+    val skew = Blocking.SkewConfig(
+      maxBlockRows = 5, maxSaltFactor = 2, snmWindow = 4, snmSortCol = Some("s"))
+    val res = Blocking.candidatePairsLinkWithStats(side("l"), side("r"), "conv_id", rule, skew)
+    val got = res.pairs.select("conv_id_l", "conv_id_r", "match_key")
+      .as[(String, String, Int)].collect().toSeq
+    assert(res.tierStats === Seq(RuleTierStats(0, 0, 1)))
+    // cross-side only, canonical side first, tagged rules.length + 0
+    assert(got.forall { case (l, r, _) => l.startsWith("x") && r.startsWith("a") })
+    assert(got.map(_._3).toSet === Set(1))
+    val expected = snmReference(rows, 4).collect {
+      case (a, b) if a._2 != b._2 => if (a._2 == "l") (a._3, b._3) else (b._3, a._3)
+    }
+    assert(expected.nonEmpty)
+    assert(got.size === got.map(p => (p._1, p._2)).distinct.size)
+    assert(got.map(p => (p._1, p._2)).toSet === expected.toSet)
+  }
+
+  test("two rules with ultra-hot keys over overlapping rows: each pair once, lowest rule's tag") {
+    // rows 1-60 share k1 = A, rows 31-90 share k2 = B: both ultra at
+    // cap=5, factor=2; rows 31-60 sit in both blocks
+    def sortOf(i: Int) = f"${i * 37 % 11}%02d"
+    val df = (1 to 90).map { i =>
+      (f"id$i%03d", if (i <= 60) "A" else s"a$i", if (i > 30) "B" else s"b$i", sortOf(i))
+    }.toDF("conv_id", "k1", "k2", "s")
+    val rules = Seq(
+      BlockingRule("k1", col("k1_l"), col("k1_r")),
+      BlockingRule("k2", col("k2_l"), col("k2_r")))
+    val res = Blocking.candidatePairsSelfWithStats(df, "conv_id", rules,
+      Blocking.SkewConfig(maxBlockRows = 5, maxSaltFactor = 2, snmWindow = 3,
+        snmSortCol = Some("s")))
+    val got = res.pairs.select("conv_id_l", "conv_id_r", "match_key")
+      .as[(String, String, Int)].collect().toSeq
+    assert(res.tierStats === Seq(RuleTierStats(0, 0, 1), RuleTierStats(1, 0, 1)))
+
+    def rulePairs(members: Seq[Int], ruleIdx: Int) =
+      snmReference(members.map(i => (sortOf(i), "l", f"id$i%03d")), 3).map { case (a, b) =>
+        (Seq(a._3, b._3).min, Seq(a._3, b._3).max) -> (rules.length + ruleIdx)
+      }
+    val byRule = Seq(rulePairs(1 to 60, 0), rulePairs(31 to 90, 1))
+    // the overlap is real: some pair is a window neighbour under both rules
+    assert(byRule(0).map(_._1).toSet.intersect(byRule(1).map(_._1).toSet).nonEmpty)
+    val expected = byRule.flatten.groupBy(_._1)
+      .map { case (p, ks) => (p._1, p._2, ks.map(_._2).min) }
+    assert(got.size === got.map(p => (p._1, p._2)).distinct.size)
+    assert(got.toSet === expected.toSet)
+  }
+
+  test("no call leaves a cached RDD behind (self and link, salted and ultra)") {
+    // inputs no other test uses: a plan cached by an earlier call on the
+    // same data would be reused here and hide a new leak
+    val sc = spark.sparkContext
+    def assertNoLeak(what: String)(call: => BlockingResult): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      call.pairs.count()
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty, what)
+    }
+    def block(prefix: String, n: Int) =
+      (1 to n).map(i => (f"$prefix$i%04d", "LEAK")).toDF("conv_id", "key")
+    assertNoLeak("self, salted")(Blocking.candidatePairsSelfWithStats(
+      block("s", 300), "conv_id", rule, Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 16)))
+    assertNoLeak("self, ultra")(Blocking.candidatePairsSelfWithStats(
+      block("u", 150), "conv_id", rule, Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2)))
+    assertNoLeak("link, salted")(Blocking.candidatePairsLinkWithStats(
+      block("l", 110), block("r", 70), "conv_id", rule,
+      Blocking.SkewConfig(maxBlockRows = 50, maxSaltFactor = 8)))
+    assertNoLeak("link, ultra")(Blocking.candidatePairsLinkWithStats(
+      block("l", 90), block("r", 60), "conv_id", rule,
+      Blocking.SkewConfig(maxBlockRows = 10, maxSaltFactor = 2)))
   }
 }

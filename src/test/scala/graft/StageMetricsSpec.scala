@@ -7,7 +7,7 @@ import org.scalatest.time.SpanSugar._
 import graft.runtime.StageMetricsListener
 
 /** The one metrics listener (`PipelineMain`'s stage_metrics.jsonl and
-  * partition_lineage.jsonl, the benches' CPU and stage reads) on a small
+  * partition_lineage.jsonl, the benches' CPU reads) on a small
   * shuffling job.
   */
 class StageMetricsSpec extends AnyFunSuite {
@@ -19,13 +19,11 @@ class StageMetricsSpec extends AnyFunSuite {
     try {
       spark.range(0, 20000, 1, 4).selectExpr("id % 97 AS k", "id")
         .groupBy("k").sum("id").collect()
-      // events arrive on the listener bus after the action returns; a
-      // stage's task ends precede its completion event
+      // events arrive on the listener bus after the action returns
       eventually(timeout(30.seconds), interval(100.millis)) {
-        assert(listener.stageCount >= 2)
+        assert(listener.cpuNanos > 0)
+        assert(listener.stages.values.map(_.shuffleWriteBytes).sum > 0)
       }
-      assert(listener.cpuNanos > 0)
-      assert(listener.stages.values.map(_.shuffleWriteBytes).sum > 0)
 
       val json = new ObjectMapper()
       val lines = listener.report().split("\n").toSeq ++
