@@ -42,7 +42,7 @@ object ClusterScalingBench {
           "before launching, or lower SPARK_GRAFT_MIN_FREE_GB")
       sys.exit(2)
     }
-    val spark = Session.builder("graft-cluster-scaling", Session.cpus(8))
+    val spark = Session.builder("graft-cluster-scaling", Session.cpus)
       // wait for the FULL cluster before scheduling: standalone defaults to
       // scheduling on the first registered executor, so the cached input
       // lands lopsided on the early JVMs and locality pins every downstream

@@ -19,7 +19,7 @@ object ExplainAudit {
     val spark = Session.builder("graft-explain", cpus = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val pw = new PrintWriter(new File(out))
+    val pw = new PrintWriter(new File(out), "UTF-8")
     def dump(title: String, df: org.apache.spark.sql.DataFrame, note: String): Unit = {
       pw.println(s"## $title\n")
       pw.println(note + "\n")

@@ -44,7 +44,6 @@ object Pipeline {
       maxBlockRows: Int = 200,
       maxSaltFactor: Int = 8,
       snmWindow: Int = 20,
-      useSecondPass: Boolean = true,
       /** trie-fallback cascade stage (deepest-unique token suffix) in LINK
         * mode. Self-dedup mode ignores it: each record is its own deepest
         * suffix match there, so the stage can only re-find exact dups that
@@ -194,17 +193,14 @@ object Pipeline {
     */
   private def scoreAbove(
       lSigs: DataFrame, rSigs: DataFrame, pairs: DataFrame, cfg: Config): DataFrame =
-    Scoring.scoreDefault(attachScoreCols(lSigs, rSigs, pairs), cfg.prior)
+    scorePairs(lSigs, rSigs, pairs, cfg.prior)
       .filter(col("match_weight") > cfg.predictThreshold)
       .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
         "match_probability", "sig_text_l", "sig_text_r")
 
-  /** Refine stage body: the second pass keeping `keep`, or the first-pass
-    * scores unchanged when it is off.
-    */
+  /** Refine stage body: the second pass, keeping `keep`. */
   private def refine(scored: DataFrame, cfg: Config, keep: Seq[String]): DataFrame =
-    if (!cfg.useSecondPass) scored
-    else DistinguishingTokens.improve(scored,
+    DistinguishingTokens.improve(scored,
       DistinguishingTokens.Params(
         matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
       .select(keep.map(col): _*)

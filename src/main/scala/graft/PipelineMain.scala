@@ -30,7 +30,7 @@ object PipelineMain {
 
     // spark-submit's master and confs win; without a master the run is
     // local[SPARK_GRAFT_CPUS] (runtime.Session)
-    val spark = Session.builder("graft-pipeline", Session.cpus(8))
+    val spark = Session.builder("graft-pipeline", Session.cpus)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -12,17 +12,19 @@ import org.apache.spark.sql.functions._
   */
 object Evaluate {
 
+  /** Distinguishability category bounds, descending; the reference's
+    * 1, 5 and 10 plus 0 (analyse_results.py:106-140).
+    */
+  private val CategoryBounds = Seq(10.0, 5.0, 1.0, 0.0)
+
   /** Best match per messy (_r) record with distinguishability category.
     * Tie-break mirrors the reference exactly: ORDER BY match_weight DESC,
     * conv_id_l ASC (analyse_results.py:107).
     */
-  def bestMatches(
-      scored: DataFrame,
-      thresholds: Seq[Double] = Seq(1, 5, 10)): DataFrame = {
+  def bestMatches(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("conv_id_r"))
       .orderBy(col("match_weight").desc, col("conv_id_l").asc)
     val wAll = Window.partitionBy(col("conv_id_r"))
-    val thres = (thresholds :+ 0.0).distinct.sortBy(-_)
     val withWin = scored
       .withColumn("rn", row_number().over(w))
       .withColumn("distinguishability",
@@ -30,34 +32,16 @@ object Evaluate {
       .withColumn("match_count", count(lit(1)).over(wAll))
       .filter(col("rn") === 1)
 
-    val categorized = thres.zipWithIndex.foldLeft(
+    val categorized = CategoryBounds.zipWithIndex.foldLeft(
       when(col("match_count") === 1, "01: one match only")
         .when(col("distinguishability").isNull,
-          f"${thres.length + 2}%02d: nan (last match in group)")) {
+          f"${CategoryBounds.length + 2}%02d: nan (last match in group)")) {
       case (acc, (t, i)) =>
         acc.when(col("distinguishability") > t, f"${i + 2}%02d: distinguishability > $t")
     }
     withWin.withColumn("distinguishability_category",
-      categorized.otherwise(f"${thres.length + 2}%02d: distinguishability = 0"))
+      categorized.otherwise(f"${CategoryBounds.length + 2}%02d: distinguishability = 0"))
       .drop("rn")
-  }
-
-  /** Match-reason metrics: count + percentage per deterministic-pass reason
-    * (reference: post_linkage/analyse_results.py:24-45).
-    */
-  def matchReasonMetrics(annotated: DataFrame): DataFrame = {
-    val byReason = annotated
-      .groupBy(coalesce(col("match_reason"), lit("unmatched")).as("match_reason"))
-      .agg(count(lit(1)).as("match_count"))
-    // grand total as a broadcast 1-row scalar, NOT an unpartitioned window
-    // (VERDICT r4 #4): sum().over(Window.partitionBy()) serialises the whole
-    // frame through one WindowExec partition; the broadcast nested-loop join
-    // matches the pipeline TF-total pattern and keeps the plan parallel.
-    val total = byReason.agg(sum(col("match_count")).as("__total"))
-    byReason.crossJoin(broadcast(total))
-      .withColumn("pct", round(col("match_count") * 100.0 / col("__total"), 2))
-      .drop("__total")
-      .orderBy(col("match_count").desc, col("match_reason"))
   }
 
   /** Merge deterministic-cascade matches with probabilistic best matches:

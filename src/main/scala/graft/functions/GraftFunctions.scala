@@ -97,25 +97,13 @@ object GraftFunctions {
   // ---------------------------------------------------------------------
 
   /** MinHash signature: for each of k seeded hash functions, the minimum
-    * hash over the element array. Null/empty arrays yield Long.MaxValue
-    * minima. Oracle-portable when `portable=true`.
-    */
-  def minhash(elems: Column, k: Int, portable: Boolean = false): Column = {
-    val sigs = (0 until k).map { s =>
-      val hashed =
-        if (portable) transform(elems, e => portableKmHash64(e, s))
-        else transform(elems, e => fastHash64(e, s))
-      coalesce(array_min(hashed), lit(Long.MaxValue))
-    }
-    array(sigs: _*)
-  }
-
-  /** Scalable MinHash: explode the element array, compute the k seeded
-    * hashes per (row, element) once, aggregate with groupBy-min (map-side
-    * combinable). The Column-expression `minhash` above re-inlines the
-    * element-array expression once per seed (CollapseProject + HOF lambdas
-    * defeat common-subexpression elimination), which multiplies the
-    * shingle+hash cost by k — measured 300s vs seconds at sf0.1.
+    * hash over a row's element array. Explodes the array, computes the k
+    * seeded hashes per (row, element) once and aggregates with groupBy-min
+    * (map-side combinable). Oracle-portable when `portable=true`. A column
+    * form (k array_min(transform(...)) per row) re-inlines the element-array
+    * expression once per seed (CollapseProject + HOF lambdas defeat
+    * common-subexpression elimination), which multiplies the shingle+hash
+    * cost by k — measured 300s vs seconds at sf0.1.
     *
     * @return DataFrame(idCol, sigCol: array<long>) — one row per input row
     *         with a non-empty element array.
@@ -178,9 +166,6 @@ object GraftFunctions {
       (acc, x) => acc + x
     )
   }
-
-  /** Hamming distance between two long-encoded bit vectors. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   // ---------------------------------------------------------------------
   // Set / vector similarity.

@@ -23,19 +23,3 @@ final case class Turn(
   * (unique_id, correct_unique_id)).
   */
 final case class Label(conv_id: String, correct_conv_id: String)
-
-/** A scored candidate pair (reference: Splink predict output shape,
-  * linking_model/splink_model.py:24-132).
-  */
-final case class ScoredPair(
-    conv_id_l: String,
-    conv_id_r: String,
-    match_key: Int,
-    match_weight: Double,
-    match_probability: Double
-)
-
-/** Final cluster assignment (new capability vs the reference, mandated by
-  * BASELINE.json: transitive clustering via large-star/small-star).
-  */
-final case class ClusterAssignment(conv_id: String, cluster_id: String)

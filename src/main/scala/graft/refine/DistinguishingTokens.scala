@@ -23,12 +23,17 @@ import graft.functions.Utf8Order
   * orientations would double the refine shuffle for a second-order effect
   * on scores that the F1 gates have never needed.
   *
-  * adjustment = REWARD * sum(1/cnt^2 over tokens shared by this l and r)
-  *            - PUNISH * |tokens present elsewhere in the block but not in this l|
-  *            - MISSING_PENALTY * |tokens of this l absent from r|
-  *            + bigram analogues (bigrams keyed "tok1 tok2"; reference keys
-  *              maps by token arrays — string keys are the Spark remodel,
-  *              SURVEY.md §1.4).
+  * adjustment = Reward * sum(1/cnt^2 over tokens shared by this l and r)
+  *            - Punishment * |tokens present elsewhere in the block but not in this l|
+  *            - MissingTokenPenalty * |tokens of this l absent from r|
+  *            + BigramReward * sum(1/cnt^2 over shared bigrams)
+  *            - BigramPunishment * |bigrams present elsewhere but not in this l|
+  * with the reference's fixed multipliers 3, 1.5, 0.1, 3 and 1.5
+  * (identify_distinguishing_tokens.py:407-445). Bigrams are keyed
+  * "tok1 tok2"; the reference keys maps by token arrays — string keys are
+  * the Spark remodel, SURVEY.md §1.4. The reference's strip of common end
+  * tokens (identify_distinguishing_tokens.py:58-113) is not applied here:
+  * adopting it changes every adjustment, so it needs its own quality A/B.
   *
   * Scale shape: one shuffle on the messy id. Each candidate group arrives
   * sorted by (match_weight desc, conv_id_l desc), so the top-N cut reads
@@ -38,21 +43,14 @@ import graft.functions.Utf8Order
   */
 object DistinguishingTokens {
 
-  final case class Params(
-      matchWeightThreshold: Double = -20,
-      topNMatches: Int = 5,
-      useBigrams: Boolean = true,
-      rewardMultiplier: Double = 3,
-      punishmentMultiplier: Double = 1.5,
-      bigramRewardMultiplier: Double = 3,
-      bigramPunishmentMultiplier: Double = 1.5,
-      missingTokenPenalty: Double = 0.1,
-      /** tokens stripped (up to twice) from each side's tail before the
-        * analysis — the reference's remove_common_end_tokens step
-        * (identify_distinguishing_tokens.py:58-113; the double list_filter
-        * removes at most two trailing common tokens).
-        */
-      commonEndTokens: Seq[String] = Nil)
+  final case class Params(matchWeightThreshold: Double = -20, topNMatches: Int = 5)
+
+  // identify_distinguishing_tokens.py:407-445
+  private val Reward = 3.0
+  private val Punishment = 1.5
+  private val BigramReward = 3.0
+  private val BigramPunishment = 1.5
+  private val MissingTokenPenalty = 0.1
 
   /** improve predictions. `pairs` must contain: conv_id_l, conv_id_r,
     * match_weight (double) plus sig_text_l / sig_text_r (normalised record
@@ -77,7 +75,7 @@ object DistinguishingTokens {
       .as(Encoders.row(StructType(Seq(in("conv_id_r")))), Encoders.row(in))
       .flatMapSortedGroups(col("match_weight").desc, col("conv_id_l").desc)(
         (_: Row, group: Iterator[Row]) =>
-          refineGroup(group.take(params.topNMatches).toArray, cols, params)
+          refineGroup(group.take(params.topNMatches).toArray, cols)
       )(Encoders.row(out))
       .toDF()
   }
@@ -91,17 +89,11 @@ object DistinguishingTokens {
     * normText is idempotent, property-tested), so a whitespace split is
     * exactly GraftFunctions.tokens here. "" entries are dropped like
     * Signatures.tokens: sig_text keeps the empty element a punctuation-only
-    * turn leaves behind (a leading space). Trailing common end tokens are
-    * stripped up to twice (the reference applies its tail filter twice —
-    * identify_distinguishing_tokens.py:93-94). A null text has no tokens.
+    * turn leaves behind (a leading space). A null text has no tokens.
     */
-  private def tokens(text: String, commonEnd: Set[String]): Array[String] = {
-    var toks = if (text == null) Array.empty[String]
-      else Whitespace.split(text, -1).filter(_.nonEmpty)
-    for (_ <- 0 until 2)
-      if (toks.nonEmpty && commonEnd(toks.last)) toks = toks.dropRight(1)
-    toks
-  }
+  private def tokens(text: String): Array[String] =
+    if (text == null) Array.empty[String]
+    else Whitespace.split(text, -1).filter(_.nonEmpty)
 
   /** Word bigrams keyed "tok1 tok2" (GraftFunctions.wordNgrams(_, 2)). */
   private def bigrams(toks: Array[String]): Array[String] =
@@ -116,13 +108,12 @@ object DistinguishingTokens {
   /** Steps 5-7 and the final adjustment for one messy record's top-N
     * candidates (`group`, best first).
     */
-  private def refineGroup(group: Array[Row], cols: Cols, p: Params): Iterator[Row] = {
+  private def refineGroup(group: Array[Row], cols: Cols): Iterator[Row] = {
     if (group.isEmpty) return Iterator.empty
-    val commonEnd = p.commonEndTokens.toSet
-    val toksL = group.map(r => tokens(r.getString(cols.sigTextL), commonEnd))
+    val toksL = group.map(r => tokens(r.getString(cols.sigTextL)))
     val bigramsL = toksL.map(bigrams)
     // the messy record's text is the same on every row of its group
-    val toksR = tokens(group(0).getString(cols.sigTextR), commonEnd)
+    val toksR = tokens(group(0).getString(cols.sigTextR))
     val r = toksR.toSet
     val bigramsR = bigrams(toksR).toSet
 
@@ -168,18 +159,13 @@ object DistinguishingTokens {
       // counts duplicate missing tokens, as the reference does.
       val (overlapTok, elsewhereTok) = poolTokR.partition(l)
       val missing = toksL(i).filterNot(r)
-      val tokenAdj = rewardSum(overlapTok, tokHist) * p.rewardMultiplier -
-        elsewhereTok.length.toDouble * p.punishmentMultiplier -
-        missing.length.toDouble * p.missingTokenPenalty
+      val tokenAdj = rewardSum(overlapTok, tokHist) * Reward -
+        elsewhereTok.length.toDouble * Punishment -
+        missing.length.toDouble * MissingTokenPenalty
+      val (overlapBi, elsewhereBi) = poolBigramsR.partition(bigramsL(i).toSet)
       val bigramAdj =
-        if (!p.useBigrams) 0.0
-        else {
-          val (overlapBi, elsewhereBi) = poolBigramsR.partition(bigramsL(i).toSet)
-          rewardSum(coverFiltered(overlapBi, overlapTok), bigramHist) *
-            p.bigramRewardMultiplier -
-            coverFiltered(elsewhereBi, elsewhereTok).length.toDouble *
-              p.bigramPunishmentMultiplier
-        }
+        rewardSum(coverFiltered(overlapBi, overlapTok), bigramHist) * BigramReward -
+          coverFiltered(elsewhereBi, elsewhereTok).length.toDouble * BigramPunishment
       // Final: mw adjustment (identify_distinguishing_tokens.py:407-445)
       val adjustment = tokenAdj + bigramAdj
       val row = group(i)

@@ -27,7 +27,7 @@ import graft.functions.SparkOrder
   *      re-expressed RELATIONALLY: instead of materialising a per-group
   *      trie blob (a single-node data structure that must fit one
   *      executor and dies exactly at the scale it matters), every token
-  *      suffix up to `maxDepth` becomes a join key; the trie walk "descend
+  *      suffix up to `MaxSuffixDepth` becomes a join key; the trie walk "descend
   *      as deep as possible, succeed iff the subtree holds exactly one id"
   *      is a max-k window over the suffix join with a min == max
   *      uniqueness gate on the candidate id (one distinct candidate).
@@ -59,24 +59,23 @@ object ExactCascade {
     * see object doc). For each messy record, find the LARGEST k such that
     * its last-k-token suffix matches >= 1 canonical record in the same
     * block; the record resolves iff that deepest suffix identifies exactly
-    * one canonical id and k >= `minDepth` (a 1-token suffix is a generic
-    * sign-off in transcripts, not evidence). Suffixes are capped at
-    * `maxDepth` tokens so the exploded key volume is O(rows * maxDepth).
+    * one canonical id and k >= `MinSuffixDepth` (a 1-token suffix is a
+    * generic sign-off in transcripts, not evidence). Suffixes are capped at
+    * `MaxSuffixDepth` tokens so the exploded key volume is
+    * O(rows * MaxSuffixDepth). q40's oracle SQL fixes the same 2 and 12.
     *
     * @return (id, resolved_canonical_id, depth, match_reason='suffix_trie')
     */
   def resolveWithSuffixes(
       messy: DataFrame,
       canonical: DataFrame,
-      idCol: String = "conv_id",
-      minDepth: Int = 2,
-      maxDepth: Int = 12): DataFrame = {
+      idCol: String = "conv_id"): DataFrame = {
     def suffixKeys(df: DataFrame, outId: String): DataFrame = {
       val toks = split(col("sig_text"), " ")
       df.select(col(idCol).as(outId), col("block_key"), toks.as("__toks"))
         .withColumn("k", explode(
           when(size(col("__toks")) > 0,
-            sequence(lit(1), least(size(col("__toks")), lit(maxDepth))))
+            sequence(lit(1), least(size(col("__toks")), lit(MaxSuffixDepth))))
             .otherwise(array().cast("array<int>"))))
         .select(col(outId), col("block_key"), col("k"),
           array_join(slice(col("__toks"), -col("k"), col("k")), " ").as("suffix"))
@@ -101,7 +100,7 @@ object ExactCascade {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col(idCol)).orderBy(col("k").desc)))
       .filter(col("__rn") === 1 && col("cand_id") === col("__cand_max") &&
-        col("k") >= minDepth)
+        col("k") >= MinSuffixDepth)
     deepest.select(col(idCol), col("cand_id").as("resolved_canonical_id"),
       col("k").cast("long").as("depth"), lit("suffix_trie").as("match_reason"))
   }
@@ -122,14 +121,15 @@ object ExactCascade {
     *     candidate" forces that candidate to BE m — a self-link dropped by
     *     the identity filter. Hence self-mode cascade ≡ min-id-of-group
     *     minus identity links.
+    * `records` carries (conv_id, sig_text, block_key).
     */
-  def selfExactLinks(records: DataFrame, idCol: String = "conv_id"): DataFrame = {
+  def selfExactLinks(records: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sig_text"), col("block_key"))
     records
       .filter(col("sig_text").isNotNull && col("block_key").isNotNull)
-      .select(col(idCol), min(col(idCol)).over(w).as("resolved_canonical_id"))
-      .filter(col(idCol) =!= col("resolved_canonical_id"))
+      .select(col("conv_id"), min(col("conv_id")).over(w).as("resolved_canonical_id"))
+      .filter(col("conv_id") =!= col("resolved_canonical_id"))
       .withColumn("match_reason", lit("exact_match"))
   }
 
@@ -157,6 +157,8 @@ object ExactCascade {
     }
   }
 
+  private val MinSuffixDepth = 2
+  private val MaxSuffixDepth = 12
   private val ShingleLen = 5
   private val MinHits = 3 // resolve_with_trigrams.py:121-134
   /** Most rows of one block a stage 1-2 group holds; a larger block is
@@ -334,11 +336,4 @@ object ExactCascade {
         Some((packed.substring(i, j), j))
       }
     }.toSeq
-
-  /** Annotate the full messy table with cascade results (unmatched rows get
-    * null reason) — row-count preserving, like the reference's finalisation
-    * (matching_stages.py:140-170).
-    */
-  def annotate(messy: DataFrame, canonical: DataFrame, idCol: String = "conv_id"): DataFrame =
-    messy.join(run(messy, canonical, idCol), Seq(idCol), "left")
 }

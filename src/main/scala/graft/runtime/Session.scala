@@ -23,8 +23,8 @@ object Session {
     "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
     "spark.ui.enabled" -> "false")
 
-  /** `SPARK_GRAFT_CPUS`, or `default` when it is unset. */
-  def cpus(default: Int): Int = sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+  /** `SPARK_GRAFT_CPUS`, or 8 when it is unset. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(8)(_.toInt)
 
   /** The local master and its shuffle-partition count, or nothing when
     * `conf` already names a master.

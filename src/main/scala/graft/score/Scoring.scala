@@ -122,34 +122,36 @@ object Scoring {
       })
   }
 
+  /** Decimal exponents of the TF-product ladder's lowest and highest band. */
+  private val MinTfExp = -29
+  private val MaxTfExp = 4
+
   /** Banded Bayes factor from a TF product via log10 banding: one
     * element_at over a literal ladder instead of a 35-branch CASE
     * (codegen-friendlier; same semantics as splink_model.json:327-618).
     * Band i covers product < 10^(i - offset).
     */
-  def bandedTfBf(product: Column, maxExp: Int = 4, minExp: Int = -29): Column = {
+  def bandedTfBf(product: Column): Column = {
     // BF ladder mirrors the reference's 2^(k/2)-ish decay: bf = 2^(-(exp)/1)
-    // with exp from minExp..maxExp; values from splink_model.json levels.
-    val bfs = (minExp to maxExp).map(e => math.pow(2.0, -e / 2.0))
+    // with exp from MinTfExp..MaxTfExp; values from splink_model.json levels.
+    val bfs = (MinTfExp to MaxTfExp).map(e => math.pow(2.0, -e / 2.0))
     val idx = greatest(lit(0),
-      least(lit(maxExp - minExp),
-        (floor(log10(greatest(product, lit(1e-300)))) - lit(minExp) + 1).cast("int")))
+      least(lit(MaxTfExp - MinTfExp),
+        (floor(log10(greatest(product, lit(1e-300)))) - lit(MinTfExp) + 1).cast("int")))
     element_at(array(bfs.map(lit(_)): _*), idx + 1)
   }
 
   /** Default model over the signature-pair columns that
     * Pipeline.attachScoreCols joins onto candidate pairs from
-    * Signatures.signatures + attachTf.
-    *
-    * @param meanJw the mean-turn-JW column the turn_jw cascade thresholds
-    *   read. The default re-derives the full 3-alignment JW sweep inline;
-    *   scoreDefault passes a pre-projected column instead — CASE WHEN
-    *   branch conditions are conditionally evaluated, so codegen
-    *   subexpression elimination cannot share the sweep across the three
-    *   threshold tests and the inline form pays it up to 3x per pair.
+    * Signatures.signatures + attachTf, plus the `__mean_turn_jw` column
+    * scoreDefault projects ahead of it. The turn_jw cascade reads that
+    * pre-projected column: CASE WHEN branch conditions are conditionally
+    * evaluated, so codegen subexpression elimination cannot share the
+    * 3-alignment JW sweep across the three threshold tests, and an inline
+    * sweep would be paid up to 3x per pair.
     */
-  def defaultModel(prior: Double = 1e-6, meanJw: Column = meanTurnJw): ScoreModel = {
-    def c(n: String) = col(n + "_l") -> col(n + "_r")
+  private def defaultModel(prior: Double): ScoreModel = {
+    val meanJw = col("__mean_turn_jw")
 
     val exactText = Comparison("sig_text",
       Seq(
@@ -302,7 +304,7 @@ object Scoring {
     // elimination) — measured as the dominant kernel cost. Value-identical:
     // same expression, same inputs, same doubles.
     val withJw = pairs.withColumn("__mean_turn_jw", meanTurnJw)
-    val base = score(withJw, defaultModel(prior, meanJw = col("__mean_turn_jw")))
+    val base = score(withJw, defaultModel(prior))
       .drop("__mean_turn_jw")
     val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
     val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))

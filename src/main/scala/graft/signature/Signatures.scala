@@ -150,23 +150,6 @@ object Signatures {
       .select(col("conv_id"), col("__sig.*"))
   }
 
-  /** Corpus-level common END tokens: tokens that terminate more than
-    * `minShare` of all records (reference: common_end_tokens resource +
-    * trailing-token analysis, cleaning/steps/term_frequencies.py:147-212).
-    * Result is vocabulary-sized — collected to the driver for use as a
-    * literal filter in the second pass.
-    */
-  def commonEndTokens(sigs: DataFrame, minShare: Double = 0.05): Seq[String] = {
-    val lastTok = sigs
-      .select(try_element_at(col("tokens"), lit(-1)).as("tok"))
-      .filter(col("tok").isNotNull)
-    val total = lastTok.count().max(1L)
-    lastTok.groupBy(col("tok")).count()
-      .filter(col("count") > total * minShare)
-      .orderBy(col("count").desc, col("tok"))
-      .select("tok").collect().map(_.getString(0)).toSeq
-  }
-
   /** On-the-fly token relative-frequency table (reference mode
     * `clean_data_on_the_fly`, cleaning/pipelines.py:108-129):
     * rel_freq = occurrences / total occurrences.

@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.evaluate.Evaluate
-import graft.refine.DistinguishingTokens
-import graft.signature.Signatures
 
 class EvaluateSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
-
-  test("matchReasonMetrics: counts + percentages per reason") {
-    val annotated = Seq(
-      ("a", Some("exact_match")), ("b", Some("exact_match")),
-      ("c", Some("unique_shingle")), ("d", None)
-    ).toDF("conv_id", "match_reason")
-    val got = Evaluate.matchReasonMetrics(annotated)
-      .as[(String, Long, Double)].collect().toList
-    assert(got === List(("exact_match", 2L, 50.0),
-      ("unique_shingle", 1L, 25.0), ("unmatched", 1L, 25.0)))
-  }
 
   test("mergeMatches: deterministic wins, probabilistic fills the rest") {
     val det = Seq(("m1", "k1", "exact_match")).toDF(
@@ -43,28 +30,9 @@ class EvaluateSpec extends AnyFunSuite {
       .as[(String, String, Option[Double], String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got("r1")._1 === "a" && got("r1")._2 === Some(3.0))
+    assert(got("r1")._3 === "04: distinguishability > 1.0")
     assert(got("r2")._1 === "x" && got("r2")._3 === "01: one match only")
     assert(got("r3")._1 === "y" && got("r3")._2 === Some(0.0))
-    assert(got("r3")._3.contains("distinguishability = 0"))
-  }
-
-  test("common end tokens detected and stripped in refine") {
-    val sigs = Seq(
-      Seq("A", "B", "THANKS"), Seq("C", "THANKS"), Seq("D", "E"), Seq("F", "THANKS")
-    ).zipWithIndex.map { case (t, i) => (s"c$i", t) }.toDF("conv_id", "tokens")
-    val common = Signatures.commonEndTokens(sigs, minShare = 0.5)
-    assert(common === Seq("THANKS"))
-
-    // stripping changes the missing-token analysis: with THANKS stripped,
-    // "A B THANKS" vs "A B" have no missing tokens
-    val pairs = Seq(("l1", "r1", 5.0, "A B THANKS", "A B"))
-      .toDF("conv_id_l", "conv_id_r", "match_weight", "sig_text_l", "sig_text_r")
-    val withStrip = DistinguishingTokens.improve(pairs,
-      DistinguishingTokens.Params(commonEndTokens = Seq("THANKS")))
-      .select("missing_tokens").as[Seq[String]].head()
-    assert(withStrip === Seq.empty)
-    val withoutStrip = DistinguishingTokens.improve(pairs, DistinguishingTokens.Params())
-      .select("missing_tokens").as[Seq[String]].head()
-    assert(withoutStrip === Seq("THANKS"))
+    assert(got("r3")._3 === "06: distinguishability = 0")
   }
 }

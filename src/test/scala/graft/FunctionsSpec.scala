@@ -47,13 +47,14 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("minhash is deterministic and band keys have expected shape") {
-    val df = Seq("the quick brown fox", "the quick brown fox").toDF("s")
-    val sigs = df.select(minhash(tokens($"s"), 8)).as[Seq[Long]].collect()
+    val df = Seq(("a", "the quick brown fox"), ("b", "the quick brown fox")).toDF("id", "s")
+    val sigs = minhashAggregate(df, "id", tokens($"s"), 8)
+      .orderBy("id").select("minhash_sig").as[Seq[Long]].collect()
     assert(sigs(0) === sigs(1))
     assert(sigs(0).length === 8)
-    val bands = df.select(minhashBandKeys(minhash(tokens($"s"), 8), 4, 2))
-      .as[Seq[String]].head()
-    assert(bands.length === 4 && bands.forall(_.nonEmpty))
+    val bands = Seq(Seq(11L, 12L, 21L, 22L, 31L, 32L, 41L, 42L)).toDF("sig")
+      .select(minhashBandKeys($"sig", 4, 2)).as[Seq[String]].head()
+    assert(bands === Seq("0_11_12", "1_21_22", "2_31_32", "3_41_42"))
   }
 
   test("simhash: similar texts closer than dissimilar") {
@@ -61,7 +62,8 @@ class FunctionsSpec extends AnyFunSuite {
       ("how do i reset my password please", "how do i reset my password now"),
       ("how do i reset my password please", "completely unrelated gibberish zebra")
     ).toDF("a", "b")
-    val d = df.select(hamming64(simhash(tokens($"a")), simhash(tokens($"b")))).as[Long].collect()
+    val d = df.select(bit_count(simhash(tokens($"a")).bitwiseXOR(simhash(tokens($"b")))))
+      .as[Int].collect()
     assert(d(0) < d(1))
   }
 

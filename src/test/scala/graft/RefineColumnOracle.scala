@@ -33,25 +33,15 @@ object RefineColumnOracle {
     // and normText is idempotent, property-tested), so a whitespace split
     // is EXACTLY GraftFunctions.tokens here at none of its regex cost —
     // the full normalisation chain ran per pair and dominated refine CPU.
-    // Trailing common end tokens stripped up to twice per side (reference
-    // applies its tail filter twice — identify_distinguishing_tokens.py:93-94).
     // "" entries filtered like Signatures.tokens: sig_text keeps the empty
     // element a punctuation-only turn leaves behind (a leading space), and
     // split would emit a "" token into the block pool / overlap rewards
     def fastToks(c: Column): Column =
       when(length(c) === 0, array().cast("array<string>"))
         .otherwise(filter(split(c, "\\s+"), t => length(t) > 0))
-    def stripCommonTail(toks: Column): Column =
-      if (params.commonEndTokens.isEmpty) toks
-      else {
-        def stripOnce(c: Column): Column =
-          when(try_element_at(c, lit(-1)).isin(params.commonEndTokens: _*),
-            slice(c, lit(1), size(c) - 1)).otherwise(c)
-        stripOnce(stripOnce(toks))
-      }
     val tokenised = topN
-      .withColumn("tokens_l", stripCommonTail(fastToks(col("sig_text_l"))))
-      .withColumn("tokens_r", stripCommonTail(fastToks(col("sig_text_r"))))
+      .withColumn("tokens_l", fastToks(col("sig_text_l")))
+      .withColumn("tokens_r", fastToks(col("sig_text_r")))
 
     // Step 5: per-messy-record block pool histograms
     // (identify_distinguishing_tokens.py:130-201). Token and bigram pools
@@ -147,7 +137,8 @@ object RefineColumnOracle {
       .withColumn("bigrams_elsewhere_filtered",
         coverFiltered(col("bigrams_elsewhere"), col("tokens_elsewhere")))
 
-    // Final: mw adjustment (identify_distinguishing_tokens.py:407-445).
+    // Final: mw adjustment with the reference's multipliers 3, 1.5, 0.1,
+    // 3 and 1.5 (identify_distinguishing_tokens.py:407-445).
     // Reward sums fold the sorted overlap arrays — the same order the old
     // sorted-map map_values fold used, so doubles are bit-identical.
     def rewardSum(arr: Column, hist: Column): Column =
@@ -158,16 +149,12 @@ object RefineColumnOracle {
     def punishCount(arr: Column): Column = coalesce(size(arr).cast("double"), lit(0.0))
 
     val tokenAdj =
-      rewardSum(col("overlap_tokens"), col("hist_all_tokens_in_block_l")) *
-        params.rewardMultiplier -
-        punishCount(col("tokens_elsewhere")) * params.punishmentMultiplier -
-        size(col("missing_tokens")).cast("double") * params.missingTokenPenalty
+      rewardSum(col("overlap_tokens"), col("hist_all_tokens_in_block_l")) * 3.0 -
+        punishCount(col("tokens_elsewhere")) * 1.5 -
+        size(col("missing_tokens")).cast("double") * 0.1
     val bigramAdj =
-      if (!params.useBigrams) lit(0.0)
-      else rewardSum(col("overlap_bigrams_filtered"), col("hist_all_bigrams_in_block_l")) *
-        params.bigramRewardMultiplier -
-        punishCount(col("bigrams_elsewhere_filtered")) *
-          params.bigramPunishmentMultiplier
+      rewardSum(col("overlap_bigrams_filtered"), col("hist_all_bigrams_in_block_l")) * 3.0 -
+        punishCount(col("bigrams_elsewhere_filtered")) * 1.5
 
     windowed
       .withColumn("mw_adjustment", tokenAdj + bigramAdj)

@@ -39,33 +39,21 @@ class RefineOracleSpec extends AnyFunSuite {
       s"$params: kernel-only ${onlyGot.take(3)}; oracle-only ${onlyWant.take(3)}")
   }
 
-  /** The two most frequent last tokens of the candidates' texts, so the
-    * commonEndTokens parameter set strips something.
-    */
-  private def frequentEndTokens(pairs: DataFrame): Seq[String] =
-    pairs.select(element_at(split(trim(col("sig_text_l")), " "), -1).as("t"))
-      .groupBy("t").count().orderBy(col("count").desc, col("t")).limit(2)
-      .select("t").as[String].collect().toSeq
-
-  private def paramSets(pairs: DataFrame): Seq[Params] = Seq(
+  private val paramSets = Seq(
     Params(),
-    Params(matchWeightThreshold = -1000, topNMatches = 50),
-    Params(commonEndTokens = frequentEndTokens(pairs)))
-
-  private val noRefine = Pipeline.Config(useSecondPass = false)
+    Params(matchWeightThreshold = -1000, topNMatches = 50))
 
   test("kernel equals the column oracle on TranscriptGen dedup scored pairs") {
-    val scored = Pipeline.run(spark, TranscriptGen.turnsDF(spark, 400, seed = 1L), noRefine)
-      .scored
-    paramSets(scored).foreach(assertMatchesOracle(scored, _))
+    val scored = Pipeline.run(spark, TranscriptGen.turnsDF(spark, 400, seed = 1L)).scored
+    paramSets.foreach(assertMatchesOracle(scored, _))
   }
 
   test("kernel equals the column oracle on TranscriptGen link scored pairs") {
     val turns = TranscriptGen.turnsDF(spark, 400, seed = 1L)
     val variant = substring(col("conv_id"), 2, 10).cast("long") % 4
     val scored = Pipeline.runLink(spark, turns.filter(variant =!= 0),
-      turns.filter(variant === 0), noRefine).scored
-    paramSets(scored).foreach(assertMatchesOracle(scored, _))
+      turns.filter(variant === 0)).scored
+    paramSets.foreach(assertMatchesOracle(scored, _))
   }
 
   test("kernel equals the column oracle on hand-built edge cases") {
@@ -93,7 +81,7 @@ class RefineOracleSpec extends AnyFunSuite {
       // pool counts K=3, Ａ=3, 😀=5: the reward fold in UTF-8 key order
       // (K, Ａ, 😀) differs in the last bit from String order (K, 😀, Ａ)
       ("u1", "r_utf", 5.0, many, "Ａ Z K Z 😀"),
-      // common end tokens: stripped at most twice per side
+      // repeated and shared trailing tokens
       ("c1", "r_end", 3.0, "HELLO THANKS THANKS THANKS", "HELLO BYE"),
       ("c2", "r_end", 2.0, "HELLO THERE BYE", "HELLO BYE"),
       ("c3", "r_end", 1.0, "THANKS", "HELLO BYE")
@@ -102,8 +90,7 @@ class RefineOracleSpec extends AnyFunSuite {
     Seq(
       Params(),
       Params(topNMatches = 3),
-      Params(commonEndTokens = Seq("THANKS", "BYE")),
-      Params(useBigrams = false, matchWeightThreshold = 0.75)
+      Params(matchWeightThreshold = 0.75)
     ).foreach(assertMatchesOracle(pairs, _))
   }
 }
