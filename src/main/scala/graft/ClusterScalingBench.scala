@@ -95,7 +95,9 @@ object ClusterScalingBench {
     //                  (everything except refine — named for what it
     //                  times, VERDICT r5 #5; campaign JSONs before r6
     //                  carry the same number as "sec_pairs")
-    //   sec_refined  = refine pass only
+    //   sec_refined  = refine pass alone: `refined` is computed on its
+    //                  first read (earlier JSONs ran its shuffle map
+    //                  stages in sec_core)
     //   sec_clusters = a distinct-count over the already-computed
     //                  assignment (cheap by construction)
     // The scoring share of sec_core is measured independently below

@@ -60,25 +60,19 @@ object Pipeline {
       ccDriverFinishMaxEdges: Long = ConnectedComponents.DriverFinishMaxEdges,
       checkpointDir: Option[String] = None)
 
+  /** `refined` is computed (and committed, with a checkpoint dir) on first read. */
   final case class Result(
       signatures: DataFrame,
       pairs: DataFrame,
       scored: DataFrame,
-      refined: DataFrame,
       clusters: DataFrame,
       /** per-rule skew-tier stats from the blocking stage (empty when the
         * pairs stage was resumed from checkpoint — then the stats live in
         * the checkpoint's `_info_pairs.json` sidecar)
         */
-      tierStats: Seq[RuleTierStats] = Nil,
-      nBlockingRules: Int = 0) {
-    /** Pairs that took the SNM salvage path (match_key >= #rules) — the
-      * observable volume of lossy ultra-hot handling in this run. Counting
-      * scans the (narrow, materialised) pairs boundary.
-      */
-    def salvagePairCount: Long = pairs.filter(col("match_key") >= nBlockingRules).count()
-    def saltedKeyCount: Long = tierStats.map(_.nSaltKeys).sum
-    def ultraKeyCount: Long = tierStats.map(_.nUltraKeys).sum
+      tierStats: Seq[RuleTierStats],
+      nBlockingRules: Int)(refine: => DataFrame) {
+    lazy val refined: DataFrame = refine
   }
 
   final case class LinkResult(
@@ -87,12 +81,9 @@ object Pipeline {
       deterministic: DataFrame,
       pairs: DataFrame,
       scored: DataFrame,
-      bestMatches: DataFrame,
       merged: DataFrame,
-      tierStats: Seq[RuleTierStats] = Nil,
-      nBlockingRules: Int = 0) {
-    def salvagePairCount: Long = pairs.filter(col("match_key") >= nBlockingRules).count()
-  }
+      tierStats: Seq[RuleTierStats],
+      nBlockingRules: Int)
 
   /** Checkpoint-invalidation fingerprint: every config knob except the
     * checkpoint location itself. 128-bit MD5 — a 32-bit String.hashCode
@@ -108,16 +99,19 @@ object Pipeline {
 
   /** Stage boundaries of `run` and `runLink`; each truncates lineage.
     *
+    * A boundary exists only where its output is read more than once, where
+    * a caller reads it as a `Result`/`LinkResult` field, or where it ends
+    * an expensive layer (signatures, pairs, scored) or the pipeline's
+    * output; anything else runs inside the stage that reads it.
+    *
     * With a checkpoint dir a stage commits to parquet, keyed by the config
     * fingerprint so a config change recomputes instead of serving stale
     * stages. Without one it is a localCheckpoint(eager = false). That is
     * not fully lazy under AQE (on in PipelineMain and the bench): the call
     * plans and compiles the stage's subplan and runs every shuffle map
     * stage in it at once; only the final stage waits for the first action,
-    * and the result is reused after. So an in-memory run pays a stage's
-    * shuffles even when nothing reads the stage (run()'s `refined`). Eager
-    * barriers (localCheckpoint(true)) were measured slower: the serial
-    * barriers dominated local wall.
+    * and the result is reused after. Eager barriers (localCheckpoint(true))
+    * were measured slower: the serial barriers dominated local wall.
     * Reference analogue: per-stage temp-table materialisation,
     * sql_pipeline/runner.py:471-491.
     */
@@ -173,14 +167,15 @@ object Pipeline {
 
   /** Signatures stage body: per-conversation signatures, TF features from
     * `tfSource`'s token frequencies (the side's own signatures when None)
-    * and the cascade/blocking `block_key`. s0 is materialised once: in
-    * self mode it has two readers, the TF table (collected to the driver
-    * by attachTf) and the attach projection, and without the barrier each
-    * would recompute the per-conversation signature kernel.
+    * and the cascade/blocking `block_key`. When s0 is its own TF source it
+    * has two readers, the TF table (collected to the driver by attachTf)
+    * and the attach projection, so it is materialised once; without the
+    * barrier each would recompute the per-conversation signature kernel.
     */
   private def signaturesWithTf(turns: DataFrame, tfSource: Option[DataFrame] = None): DataFrame = {
-    val s0 = Signatures.signatures(turns).localCheckpoint(false)
-    Signatures.attachTf(s0, Signatures.tokenFrequencies(tfSource.getOrElse(s0)))
+    val s0 = Signatures.signatures(turns)
+    val sigs = if (tfSource.isEmpty) s0.localCheckpoint(false) else s0
+    Signatures.attachTf(sigs, Signatures.tokenFrequencies(tfSource.getOrElse(sigs)))
       .withColumn("block_key", col("bk_role_len"))
   }
 
@@ -215,17 +210,7 @@ object Pipeline {
     // 1. signatures (+ TF attach from the corpus itself)
     val sigs = stage("signatures")(signaturesWithTf(turns)).persist()
 
-    // 2. deterministic cascade (self-dedup: canonical side = all records;
-    // exact duplicates collapse to the min id immediately). Self mode uses
-    // the proven one-shuffle collapse of the full cascade — identical
-    // output (ExactCascade.selfExactLinks doc + CascadeSpec equivalence
-    // test), ~10 fewer serial stages (VERDICT r3 #4).
-    val cascade = stage("cascade") {
-      ExactCascade.selfExactLinks(
-        sigs.select(col("conv_id"), col("sig_text"), col("block_key")))
-    }
-
-    // 3. blocking on everything (cascade edges merge in at the end).
+    // 2. blocking on everything (cascade edges merge in at the end).
     // The pairs boundary stays NARROW (ids + match_key): materialising
     // carry-fattened pairs (turn texts + TF maps per side) at a stage
     // boundary measured ~100 s at 250k convs — the features are attached
@@ -235,17 +220,18 @@ object Pipeline {
       Blocking.candidatePairsSelfWithStats(sigs, "conv_id", rules, skewConfig(cfg))
     }
 
-    // 4. score (carry features joined in from the persisted signatures)
+    // 3. score (carry features joined in from the persisted signatures)
     val scored = stage("scored")(scoreAbove(sigs, sigs, pairs, cfg))
 
-    // 5. second pass
-    val refined = stage("refined") {
-      refine(scored, cfg,
-        Seq("conv_id_l", "conv_id_r", "match_weight", "match_weight_original", "mw_adjustment"))
-    }
-
-    // 6. edges = confident first-pass pairs + deterministic cascade links
+    // 4. edges = confident first-pass pairs + deterministic cascade links.
+    // The cascade is self-dedup: canonical side = all records, exact
+    // duplicates collapse to the min id immediately. Self mode uses the
+    // proven one-shuffle collapse of the full cascade — identical output
+    // (ExactCascade.selfExactLinks doc + CascadeSpec equivalence test),
+    // ~10 fewer serial stages (VERDICT r3 #4).
     val clusters = stage("clusters") {
+      val cascade = ExactCascade.selfExactLinks(
+        sigs.select(col("conv_id"), col("sig_text"), col("block_key")))
       val scoredEdges = scored.filter(col("match_weight") > cfg.edgeThreshold)
         .select(col("conv_id_l"), col("conv_id_r"))
       val cascadeEdges = cascade.select(
@@ -260,7 +246,11 @@ object Pipeline {
         driverFinishMaxEdges = cfg.ccDriverFinishMaxEdges)
     }
 
-    Result(sigs, pairs, scored, refined, clusters, tierStats, rules.length)
+    // 5. second pass, on first read of `refined`
+    Result(sigs, pairs, scored, clusters, tierStats, rules.length)(stage("refined") {
+      refine(scored, cfg,
+        Seq("conv_id_l", "conv_id_r", "match_weight", "match_weight_original", "mw_adjustment"))
+    })
   }
 
   /** Link-mode pipeline: match each messy conversation to its best
@@ -312,19 +302,12 @@ object Pipeline {
       Blocking.candidatePairsLinkWithStats(canonSigs, remaining, "conv_id", rules, skewConfig(cfg))
     }
 
-    // 4. score + second pass
+    // 4-6. score; second pass, best match and merge in one stage
     val scored = stage("link_scored")(scoreAbove(canonSigs, messySigs, pairs, cfg))
-    val refined = stage("link_refined") {
-      refine(scored, cfg, Seq("conv_id_l", "conv_id_r", "match_weight"))
-    }
-
-    // 5-6. best match + merge
-    val best = stage("link_best") {
-      graft.evaluate.Evaluate.bestMatches(refined)
-    }
     val merged = stage("link_merged") {
-      graft.evaluate.Evaluate.mergeMatches(det, best)
+      val refined = refine(scored, cfg, Seq("conv_id_l", "conv_id_r", "match_weight"))
+      graft.evaluate.Evaluate.mergeMatches(det, graft.evaluate.Evaluate.bestMatches(refined))
     }
-    LinkResult(messySigs, canonSigs, det, pairs, scored, best, merged, tierStats, rules.length)
+    LinkResult(messySigs, canonSigs, det, pairs, scored, merged, tierStats, rules.length)
   }
 }

@@ -15,8 +15,9 @@ import graft.runtime.{Session, StageMetricsListener}
   * - input `gen:N` synthesises N deterministic conversation-id slots
   *   (benchmark mode); otherwise reads a parquet turn table with the
   *   (conv_id, turn_idx, role, text, tool, ts) contract.
-  * - every stage commits to <checkpointDir>; a rerun after a crash resumes
-  *   from the last committed stage (`_manifest_<stage>.json` per stage).
+  * - signatures, pairs, scored and clusters commit to <checkpointDir>; a
+  *   rerun after a crash resumes from the last committed stage
+  *   (`_manifest_<stage>.json` per stage). `refined` is never read here.
   * - per-stage task metrics land in <outDir>/stage_metrics.jsonl,
   *   per-partition record counts in <outDir>/partition_lineage.jsonl and
   *   cluster assignments in <outDir>/clusters.

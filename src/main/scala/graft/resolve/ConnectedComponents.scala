@@ -20,9 +20,9 @@ import graft.functions.SparkOrder
   *
   * Scale: each round is two groupBy shuffles on node id. Convergence is
   * checked via a cheap aggregate (count + sum of hashes). Every iteration
-  * is checkpointed (lineage truncation — localCheckpoint by default, or a
-  * parquet checkpoint dir via `checkpointDir` for resumable runs per
-  * BASELINE.json north_rule).
+  * is checkpointed (lineage truncation — localCheckpoint by default, or
+  * parquet files under `checkpointDir`, a cut that survives a lost
+  * executor; no rerun reads them back).
   */
 object ConnectedComponents {
 
@@ -102,13 +102,13 @@ object ConnectedComponents {
       // every OTHER iteration (plan growth over 2 cached iterations is
       // trivial, and skipping the extra eager-checkpoint job halves the
       // per-iteration barrier count — VERDICT r4 #5 "fewer rounds per
-      // checkpoint"). The parquet checkpoint path stays per-iteration: that
-      // cadence IS the resumability contract (north_rule).
+      // checkpoint"). The parquet path cuts lineage every iteration, read
+      // back with the round's schema (no schema-inference job).
       val next = checkpointDir match {
         case Some(dir) =>
           val path = s"$dir/cc_iter_$iter"
           small.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
+          spark.read.schema(small.schema).parquet(path)
         case None if iter % 2 == 1 => small.localCheckpoint(eager = true)
         case None => small
       }

@@ -3,7 +3,8 @@ package graft.runtime
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Stage-checkpoint manager: each named stage is committed as a parquet
   * table + a manifest entry; a re-run resumes from the last committed stage
@@ -63,6 +64,10 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     * checkpoint instead of silently serving stale results, and a stage
     * without a manifest (older layout, or deleted) is unverifiable, so it
     * is recomputed.
+    *
+    * A commit is one job, the write: its row count is observed on the
+    * write, and the read-back takes the frame's schema (what inference
+    * would return: files read back as nullable), so no inference job runs.
     */
   def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame = {
     val path = s"$dir/$name"
@@ -72,9 +77,10 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     } else {
       val t0 = System.nanoTime()
       val df = compute
-      df.write.mode("overwrite").parquet(path)
-      val committed = spark.read.parquet(path)
-      val rows = committed.count()
+      val observed = Observation(name)
+      df.observe(observed, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
+      val committed = spark.read.schema(df.schema).parquet(path)
+      val rows = observed.get("rows")
       val parts = committed.rdd.getNumPartitions
       val ms = (System.nanoTime() - t0) / 1000000
       writeManifest(name,

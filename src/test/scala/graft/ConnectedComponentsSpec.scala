@@ -77,6 +77,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("parquet round barrier: random graphs match the in-memory star rounds and driver finish") {
+    val rnd = new scala.util.Random(11)
+    for (trial <- 1 to 3) {
+      val n = 30 + rnd.nextInt(40)
+      val nodes = (0 until n).map(i => f"n$i%03d")
+      val edges = (0 until n).map(_ => (nodes(rnd.nextInt(n)), nodes(rnd.nextInt(n))))
+        .toDF("src", "dst")
+      val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+      def components(checkpointDir: Option[String], gate: Long) =
+        ConnectedComponents.run(spark, edges, checkpointDir, gate)
+          .as[(String, String)].collect().toMap
+      val parquet = components(Some(dir.toString), 0L)
+      assert(dir.toFile.list().exists(_.startsWith("cc_iter_")), "no parquet round was written")
+      assert(parquet === components(None, 0L))
+      assert(parquet === components(None, ConnectedComponents.DriverFinishMaxEdges))
+    }
+  }
+
   test("non-BMP ids: driver finish and distributed path agree on UTF-8 root") {
     // U+10000 (surrogate pair 0xD800 0xDC00) sorts BELOW U+FFFD in Java
     // UTF-16 code-unit order but ABOVE it in UTF-8 byte order (F0 90 80 80

@@ -61,7 +61,7 @@ class DegenerateInputSpec extends AnyFunSuite {
     val res = Pipeline.run(spark, turns)
     assertPartition(res, turns)
     assert(res.clusters.select("cluster_id").distinct().count() === 1)
-    assert(res.saltedKeyCount > 0, s"no salted key: ${res.tierStats}")
+    assert(res.tierStats.map(_.nSaltKeys).sum > 0, s"no salted key: ${res.tierStats}")
   }
 
   test("run and runLink on conversations of one or two tokens") {
