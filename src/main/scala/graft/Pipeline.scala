@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.blocking.{Blocking, BlockingResult, RuleTierStats}
@@ -66,10 +70,7 @@ object Pipeline {
       pairs: DataFrame,
       scored: DataFrame,
       clusters: DataFrame,
-      /** per-rule skew-tier stats from the blocking stage (empty when the
-        * pairs stage was resumed from checkpoint — then the stats live in
-        * the checkpoint's `_info_pairs.json` sidecar)
-        */
+      /** per-rule skew-tier stats from the blocking stage */
       tierStats: Seq[RuleTierStats],
       nBlockingRules: Int)(refine: => DataFrame) {
     lazy val refined: DataFrame = refine
@@ -122,40 +123,45 @@ object Pipeline {
     def apply(name: String)(compute: => DataFrame): DataFrame =
       ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
 
-    /** A blocking stage: its pairs, and the per-rule tier stats when this
-      * run computed them (empty on resume). Skew observability survives in
-      * the checkpoint dir next to the stage.
+    /** A blocking stage: its pairs and per-rule tier stats. With a
+      * checkpoint dir the stats are committed in the stage's manifest, so
+      * a resumed stage returns the stats it was committed with.
       */
     def blocking(name: String)(
-        compute: => BlockingResult): (DataFrame, Seq[RuleTierStats]) = {
-      var stats: Seq[RuleTierStats] = Nil
-      val pairs = apply(name) { val res = compute; stats = res.tierStats; res.pairs }
-      if (stats.nonEmpty) ckpt.foreach(_.writeInfo(name, tierStatsJson(stats)))
-      (pairs, stats)
+        compute: => BlockingResult): (DataFrame, Seq[RuleTierStats]) = ckpt match {
+      case Some(c) =>
+        val (pairs, info) = c.stageWithInfo(name, fp) {
+          val res = compute
+          (res.pairs, tierStatsJson(res.tierStats))
+        }
+        (pairs, tierStatsOf(info))
+      case None =>
+        val res = compute
+        (res.pairs.localCheckpoint(false), res.tierStats)
     }
   }
 
-  private def tierStatsJson(stats: Seq[RuleTierStats]): String =
-    stats.map(t =>
-      s"""{"rule":${t.rule},"n_salt_keys":${t.nSaltKeys},"n_ultra_keys":${t.nUltraKeys},""" +
-        s""""n_one_sided_hot_keys":${t.nOneSidedHotKeys}}""")
-      .mkString("[", ",", "]")
+  /** Tier stats as a blocking stage's manifest records them, and back. */
+  private def tierStatsJson(stats: Seq[RuleTierStats]): JsonNode = {
+    val arr = JsonNodeFactory.instance.arrayNode()
+    stats.foreach(t => arr.addObject().put("rule", t.rule).put("n_salt_keys", t.nSaltKeys)
+      .put("n_ultra_keys", t.nUltraKeys).put("n_one_sided_hot_keys", t.nOneSidedHotKeys))
+    arr
+  }
 
-  /** Feature columns the score model reads (joined onto narrow pairs). */
-  private val scoreCols = Seq(
-    "sig_text", "turn_texts", "role_seq", "len_band",
-    "salient_token_1", "salient_token_2", "salient_token_3", "token_freq_hist",
-        "very_unusual_tokens", "extremely_unusual_tokens", "n_turns",
-        "numeric_token_1", "numeric_token_2", "numeric_token_3")
+  private def tierStatsOf(json: JsonNode): Seq[RuleTierStats] =
+    json.elements().asScala.map(t => RuleTierStats(t.get("rule").asInt(),
+      t.get("n_salt_keys").asLong(), t.get("n_ultra_keys").asLong(),
+      t.get("n_one_sided_hot_keys").asLong())).toSeq
 
   /** Attach the score-model feature columns to narrow (id_l, id_r,
     * match_key) pairs from the signature tables (one row per id).
     */
   def attachScoreCols(lSigs: DataFrame, rSigs: DataFrame, pairs: DataFrame): DataFrame = {
     val lCarry = lSigs.select(
-      (col("conv_id").as("conv_id_l") +: scoreCols.map(c => col(c).as(c + "_l"))): _*)
+      (col("conv_id").as("conv_id_l") +: Scoring.InputCols.map(c => col(c).as(c + "_l"))): _*)
     val rCarry = rSigs.select(
-      (col("conv_id").as("conv_id_r") +: scoreCols.map(c => col(c).as(c + "_r"))): _*)
+      (col("conv_id").as("conv_id_r") +: Scoring.InputCols.map(c => col(c).as(c + "_r"))): _*)
     pairs.join(lCarry, Seq("conv_id_l")).join(rCarry, Seq("conv_id_r"))
   }
 

@@ -208,22 +208,17 @@ object GraftFunctions {
   }
 
   /** Cosine similarity scaled ×1e6 and emitted as BIGINT (half-away round
-    * then exact truncating cast of the integral double). Emitting an
-    * integer removes the rounded-DOUBLE representation divergence between
-    * Spark (BigDecimal HALF_UP) and DuckDB (float-math round); it still
-    * requires the underlying cosine double to be computed identically on
-    * both engines, which the sequential left-fold in `dot`/`l2norm` and the
-    * oracle's list_reduce guarantee.
-    */
-  def cosineE6(a: Column, b: Column): Column =
-    round(cosine(a, b) * lit(1000000d)).cast("long")
-
-  /** cosineE6 with the two vectors' L2 norms supplied as columns, so a
-    * pair join can project each side's norm ONCE per vector instead of
-    * re-folding both per pair. `na`/`nb` MUST be `l2norm(a)`/`l2norm(b)` —
-    * then the arithmetic (dot / (na * nb), zero-product guard, half-up
-    * round at 1e6) is expression-for-expression the same as cosineE6 and
-    * the result is bit-identical.
+    * then exact truncating cast of the integral double), with the two
+    * vectors' L2 norms supplied as columns so a pair join can project each
+    * side's norm ONCE per vector instead of re-folding both per pair.
+    * `na`/`nb` MUST be `l2norm(a)`/`l2norm(b)`; a zero norm product
+    * scores 0.
+    *
+    * Emitting an integer removes the rounded-DOUBLE representation
+    * divergence between Spark (BigDecimal HALF_UP) and DuckDB (float-math
+    * round); it still requires the underlying cosine double to be computed
+    * identically on both engines, which the sequential left-fold in
+    * `dot`/`l2norm` and the oracle's list_reduce guarantee.
     */
   def cosineE6Pre(a: Column, b: Column, na: Column, nb: Column): Column = {
     val n = na * nb

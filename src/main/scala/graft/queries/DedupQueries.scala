@@ -278,7 +278,7 @@ object DedupQueries {
       "q20_cosine_topk",
       (s, dir) => {
         // Per-vector L2 norm projected ONCE before the pair join instead of
-        // re-folding both sides' norms per pair inside cosineE6 (guide §2.3
+        // re-folding both sides' norms per pair (guide §2.3
         // "aggregate before you shuffle" applied to per-row work: the norm
         // depends only on one side). Same fold, same doubles — cos_sim_e6
         // is bit-identical; the materialised e is read by both the query

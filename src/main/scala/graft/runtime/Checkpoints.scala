@@ -1,10 +1,11 @@
 package graft.runtime
 
-import java.nio.charset.StandardCharsets
-
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.NullNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Stage-checkpoint manager: each named stage is committed as a parquet
   * table + a manifest entry; a re-run resumes from the last committed stage
@@ -14,11 +15,13 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * Layout: <dir>/<stage>/ parquet + Spark's _SUCCESS marker;
   *         <dir>/_manifest_<stage>.json per committed stage with rows,
-  *         partition count, wall-clock ms and a caller-supplied
-  *         FINGERPRINT (config hash). A stage is only reused when both the
-  *         _SUCCESS marker exists and the recorded fingerprint matches —
-  *         rerunning with a different config against the same checkpointDir
-  *         recomputes instead of silently returning stale results.
+  *         partition count, wall-clock ms, the committed schema, the
+  *         stage's caller-supplied `info` and a caller-supplied
+  *         FINGERPRINT (config hash). A stage is only reused when the
+  *         _SUCCESS marker exists, the recorded fingerprint matches and the
+  *         manifest holds the schema — rerunning with a different config
+  *         against the same checkpointDir recomputes instead of silently
+  *         returning stale results.
   *
   * All filesystem access goes through the Hadoop FileSystem API, so
   * checkpoint dirs work on HDFS/S3A exactly as they do on local paths
@@ -28,77 +31,75 @@ final class Checkpoints(spark: SparkSession, dir: String) {
 
   private val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   fs.mkdirs(new Path(dir))
+  private val json = new ObjectMapper()
 
   def isCommitted(stage: String): Boolean =
     fs.exists(new Path(s"$dir/$stage/_SUCCESS"))
 
   private def manifestPath(stage: String) = new Path(s"$dir/_manifest_$stage.json")
 
-  private def readFile(p: Path): Option[String] =
+  private def manifest(stage: String): Option[JsonNode] = {
+    val p = manifestPath(stage)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      try Some(json.readTree(in))
       finally in.close()
     }
-
-  private def readManifest(stage: String): Option[String] = readFile(manifestPath(stage))
-
-  private def writeManifest(stage: String, json: String): Unit = {
-    val out = fs.create(manifestPath(stage), true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** Fingerprint recorded when the stage was committed (None when the
     * stage has no manifest).
     */
   def committedFingerprint(stage: String): Option[String] =
-    readManifest(stage).map { json =>
-      "\"fingerprint\":\"([^\"]*)\"".r.findFirstMatchIn(json)
-        .map(_.group(1)).getOrElse("")
-    }
+    manifest(stage).map(_.path("fingerprint").asText())
 
   /** Run (or resume) a stage: reused only when committed AND the recorded
     * fingerprint equals `fingerprint` — a config change invalidates the
     * checkpoint instead of silently serving stale results, and a stage
-    * without a manifest (older layout, or deleted) is unverifiable, so it
-    * is recomputed.
+    * without a manifest (deleted), or whose manifest holds no schema
+    * (older layout), is recomputed.
     *
     * A commit is one job, the write: its row count is observed on the
     * write, and the read-back takes the frame's schema (what inference
-    * would return: files read back as nullable), so no inference job runs.
+    * would return: files read back as nullable). A resume reads with the
+    * committed schema. So neither runs an inference job.
     */
-  def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame = {
+  def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame =
+    stageWithInfo(name, fingerprint)((compute, NullNode.getInstance))._1
+
+  /** `stage`, whose commit also records `info`, a JSON value computed with
+    * the frame (e.g. the blocking stage's skew-tier stats); a resumed
+    * stage hands back the committed value.
+    */
+  def stageWithInfo(name: String, fingerprint: String)(
+      compute: => (DataFrame, JsonNode)): (DataFrame, JsonNode) = {
     val path = s"$dir/$name"
-    val reusable = isCommitted(name) && committedFingerprint(name).contains(fingerprint)
-    if (reusable) {
-      spark.read.parquet(path)
-    } else {
-      val t0 = System.nanoTime()
-      val df = compute
-      val observed = Observation(name)
-      df.observe(observed, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
-      val committed = spark.read.schema(df.schema).parquet(path)
-      val rows = observed.get("rows")
-      val parts = committed.rdd.getNumPartitions
-      val ms = (System.nanoTime() - t0) / 1000000
-      writeManifest(name,
-        s"""{"stage":"$name","rows":$rows,"partitions":$parts,"wall_ms":$ms,""" +
-          s""""path":"$path","fingerprint":"$fingerprint"}""")
-      committed
+    val committed = if (!isCommitted(name)) None else manifest(name).filter(m =>
+      m.path("fingerprint").asText() == fingerprint && m.has("schema"))
+    committed match {
+      case Some(m) =>
+        val schema = DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType]
+        (spark.read.schema(schema).parquet(path), m.get("info"))
+      case None =>
+        val t0 = System.nanoTime()
+        val (df, info) = compute
+        val observed = Observation(name)
+        df.observe(observed, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
+        val readBack = spark.read.schema(df.schema).parquet(path)
+        val m = json.createObjectNode()
+          .put("stage", name)
+          .put("rows", observed.get("rows").asInstanceOf[Long])
+          .put("partitions", readBack.rdd.getNumPartitions)
+          .put("wall_ms", (System.nanoTime() - t0) / 1000000)
+          .put("path", path)
+          .put("fingerprint", fingerprint)
+        m.set[JsonNode]("schema", json.readTree(readBack.schema.json))
+        m.set[JsonNode]("info", info)
+        val out = fs.create(manifestPath(name), true)
+        try out.write(json.writeValueAsBytes(m))
+        finally out.close()
+        (readBack, info)
     }
   }
-
-  /** Attach a caller-supplied JSON sidecar to a stage (e.g. the blocking
-    * stage's skew-tier stats) — written as <dir>/_info_<stage>.json so run
-    * metrics survive in the checkpoint dir alongside the manifest.
-    */
-  def writeInfo(stage: String, json: String): Unit = {
-    val out = fs.create(new Path(s"$dir/_info_$stage.json"), true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def readInfo(stage: String): Option[String] = readFile(new Path(s"$dir/_info_$stage.json"))
 }

@@ -2,8 +2,8 @@ package graft.score
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
 import graft.functions.JaroWinkler.jaroWinkler
+import graft.signature.Signatures
 
 /** Fellegi-Sunter pairwise scoring: a cascade of comparison levels per
   * feature yields a Bayes factor; match_weight = log2(prior odds) + sum of
@@ -15,66 +15,64 @@ import graft.functions.JaroWinkler.jaroWinkler
   * projection over the blocked pairs; the only non-built-in is the custom
   * JaroWinkler Catalyst expression.
   */
-final case class ComparisonLevel(
+private[score] final case class ComparisonLevel(
     name: String,
     condition: Column,
     bayesFactor: Double,
-    /** optional TF adjustment: (rel-freq column, weight, base freq) — BF is
-      * scaled by (base/freq)^weight, the Splink tf_adjustment analogue
-      * (reference: splink_model.json:174-230).
+    /** rel-freq column of a TF-adjusted level: the BF is scaled by
+      * (Signatures.DefaultRelFreq / freq)^0.1, the Splink tf_adjustment
+      * analogue (reference: splink_model.json:174-230). A token at the
+      * TF-attach miss default gets exactly the nominal BF; rarer is
+      * boosted, more common damped.
       */
-    tfAdjustment: Option[(Column, Double, Double)] = None)
-
-final case class Comparison(name: String, levels: Seq[ComparisonLevel], elseBf: Double) {
-  /** Bayes-factor column: first matching level wins, else `elseBf`. */
-  def bfColumn: Column = {
-    val base = levels.foldLeft[Option[Column]](None) { (acc, lv) =>
-      val adjusted = lv.tfAdjustment match {
-        case Some((freq, w, baseFreq)) =>
-          lit(lv.bayesFactor) * pow(lit(baseFreq) / greatest(freq, lit(1e-12)), lit(w))
-        case None => lit(lv.bayesFactor)
-      }
-      Some(acc match {
-        case None => when(lv.condition, adjusted)
-        case Some(c) => c.when(lv.condition, adjusted)
-      })
-    }
-    base.map(_.otherwise(lit(elseBf))).getOrElse(lit(elseBf))
-  }
-
-  /** Gamma column (level index, -1 for else) — debugging / evaluation aid. */
-  def gammaColumn: Column = {
-    val base = levels.zipWithIndex.foldLeft[Option[Column]](None) { case (acc, (lv, i)) =>
-      Some(acc match {
-        case None => when(lv.condition, lit(i))
-        case Some(c) => c.when(lv.condition, lit(i))
-      })
-    }
-    base.map(_.otherwise(lit(-1))).getOrElse(lit(-1))
+    tfAdjustment: Option[Column] = None) {
+  def bfColumn: Column = tfAdjustment match {
+    case Some(freq) =>
+      lit(bayesFactor) * pow(lit(Signatures.DefaultRelFreq) / greatest(freq, lit(1e-12)),
+        lit(ComparisonLevel.TfAdjustWeight))
+    case None => lit(bayesFactor)
   }
 }
 
-final case class ScoreModel(priorMatchProbability: Double, comparisons: Seq[Comparison]) {
+private[score] object ComparisonLevel {
+  private val TfAdjustWeight = 0.1
+}
+
+/** A comparison's Bayes factor: the first matching level's, else `elseBf`,
+  * which may be a column expression (the banded TF product).
+  */
+private[score] final case class Comparison(
+    name: String, levels: Seq[ComparisonLevel], elseBf: Column) {
+  def bfColumn: Column =
+    levels.tail.foldLeft(when(levels.head.condition, levels.head.bfColumn))(
+      (c, lv) => c.when(lv.condition, lv.bfColumn)).otherwise(elseBf)
+}
+
+private[score] final case class ScoreModel(
+    priorMatchProbability: Double, comparisons: Seq[Comparison]) {
   def priorLog2: Double =
     math.log(priorMatchProbability / (1.0 - priorMatchProbability)) / math.log(2.0)
 }
 
 object Scoring {
 
-  /** Base frequency for TF adjustments (= Signatures.DefaultRelFreq, the
-    * TF-attach miss default): a token at the base frequency gets exactly
-    * the level's nominal BF; rarer is boosted, more common damped.
+  /** Signature columns a scored pair carries per side (suffixed _l/_r):
+    * `Pipeline.attachScoreCols` joins them onto candidate pairs.
     */
-  val DefaultTfBase: Double = 5e-5
+  private[graft] val InputCols: Seq[String] = Seq(
+    "sig_text", "turn_texts", "role_seq", "len_band",
+    "salient_token_1", "salient_token_2", "salient_token_3", "token_freq_hist",
+    "very_unusual_tokens", "extremely_unusual_tokens", "n_turns",
+    "numeric_token_1", "numeric_token_2", "numeric_token_3")
 
   /** Apply a score model to a blocked-pairs DataFrame (columns suffixed
-    * _l/_r). Adds per-comparison bf_* and gamma_* columns plus
-    * match_weight / match_probability.
+    * _l/_r): one bf_<comparison> column per comparison, then match_weight
+    * (the prior's log2 odds plus each log2 BF, in model order) and
+    * match_probability.
     */
-  def score(pairs: DataFrame, model: ScoreModel, keepGammas: Boolean = false): DataFrame = {
+  private[score] def score(pairs: DataFrame, model: ScoreModel): DataFrame = {
     val withBf = model.comparisons.foldLeft(pairs) { (df, cmp) =>
-      val base = df.withColumn(s"bf_${cmp.name}", cmp.bfColumn)
-      if (keepGammas) base.withColumn(s"gamma_${cmp.name}", cmp.gammaColumn) else base
+      df.withColumn(s"bf_${cmp.name}", cmp.bfColumn)
     }
     val weight = model.comparisons
       .map(c => log2(col(s"bf_${c.name}")))
@@ -97,7 +95,7 @@ object Scoring {
     * (training.py:323-357, list_reduce of flattened map entries), computed
     * from the string-keyed token_freq_hist maps.
     */
-  def tfProduct(histL: Column, histR: Column): Column = {
+  private[score] def tfProduct(histL: Column, histR: Column): Column = {
     // NOTE (round-5 measured NEGATIVE result): rewriting this as
     // array_intersect(map_keys, map_keys) + element_at lookups per shared
     // key — the pattern that won in refine's former column plan (now the
@@ -131,7 +129,7 @@ object Scoring {
     * (codegen-friendlier; same semantics as splink_model.json:327-618).
     * Band i covers product < 10^(i - offset).
     */
-  def bandedTfBf(product: Column): Column = {
+  private[score] def bandedTfBf(product: Column): Column = {
     // BF ladder mirrors the reference's 2^(k/2)-ish decay: bf = 2^(-(exp)/1)
     // with exp from MinTfExp..MaxTfExp; values from splink_model.json levels.
     val bfs = (MinTfExp to MaxTfExp).map(e => math.pow(2.0, -e / 2.0))
@@ -141,14 +139,14 @@ object Scoring {
     element_at(array(bfs.map(lit(_)): _*), idx + 1)
   }
 
-  /** Default model over the signature-pair columns that
-    * Pipeline.attachScoreCols joins onto candidate pairs from
-    * Signatures.signatures + attachTf, plus the `__mean_turn_jw` column
-    * scoreDefault projects ahead of it. The turn_jw cascade reads that
-    * pre-projected column: CASE WHEN branch conditions are conditionally
-    * evaluated, so codegen subexpression elimination cannot share the
-    * 3-alignment JW sweep across the three threshold tests, and an inline
-    * sweep would be paid up to 3x per pair.
+  /** Default model over the `InputCols` that Pipeline.attachScoreCols
+    * joins onto candidate pairs from Signatures.signatures + attachTf,
+    * plus the `__mean_turn_jw` column scoreDefault projects ahead of it.
+    * The turn_jw cascade reads that pre-projected column: CASE WHEN
+    * branch conditions are conditionally evaluated, so codegen
+    * subexpression elimination cannot share the 3-alignment JW sweep
+    * across the three threshold tests, and an inline sweep would be paid
+    * up to 3x per pair.
     */
   private def defaultModel(prior: Double): ScoreModel = {
     val meanJw = col("__mean_turn_jw")
@@ -157,14 +155,14 @@ object Scoring {
       Seq(
         ComparisonLevel("null", col("sig_text_l").isNull || col("sig_text_r").isNull, 1.0),
         ComparisonLevel("exact", col("sig_text_l") === col("sig_text_r"), math.pow(2, 15))),
-      elseBf = 1.0)
+      elseBf = lit(1.0))
 
     /** Observed rel_freq of a token from the left record's TF hist map;
       * null-safe (try_element_at) with the attach-miss default.
       */
     def relFreqOf(token: Column): Column = coalesce(
       try_element_at(col("token_freq_hist_l"), token).getField("rel_freq"),
-      lit(DefaultTfBase))
+      lit(Signatures.DefaultRelFreq))
 
     val salient1 = Comparison("salient_token_1",
       Seq(
@@ -173,14 +171,14 @@ object Scoring {
         // TF-adjusted exact level (reference: splink_model.json:174-230,
         // tf_adjustment_column numeric_token_1, tf_adjustment_weight 0.1):
         // a match on a rarer-than-base token is worth more, a match on a
-        // common token less — BF scaled by (base/freq)^0.1.
+        // common token less (ComparisonLevel.tfAdjustment).
         ComparisonLevel("exact", col("salient_token_1_l") === col("salient_token_1_r"),
           math.pow(2, 6),
-          tfAdjustment = Some((relFreqOf(col("salient_token_1_l")), 0.1, DefaultTfBase))),
+          tfAdjustment = Some(relFreqOf(col("salient_token_1_l")))),
         ComparisonLevel("inverted",
           col("salient_token_1_l") === col("salient_token_2_r") ||
             col("salient_token_2_l") === col("salient_token_1_r"), math.pow(2, 2))),
-      elseBf = math.pow(2, -6))
+      elseBf = lit(math.pow(2, -6)))
 
     val salient3 = Comparison("salient_token_3",
       Seq(
@@ -190,7 +188,7 @@ object Scoring {
           math.pow(2, 3)),
         ComparisonLevel("onenull",
           col("salient_token_3_l").isNull || col("salient_token_3_r").isNull, 1.0)),
-      elseBf = math.pow(2, -3))
+      elseBf = lit(math.pow(2, -3)))
 
     val roleSeq = Comparison("role_seq",
       Seq(
@@ -200,7 +198,7 @@ object Scoring {
           math.pow(2, 3)),
         ComparisonLevel("lev2", levenshtein(col("role_seq_l"), col("role_seq_r")) <= 2,
           math.pow(2, 2))),
-      elseBf = math.pow(2, -4))
+      elseBf = lit(math.pow(2, -4)))
 
     // positional numeric-token cascade with inversion (reference:
     // numeric_token_1 comparison, splink_model.json:174-230)
@@ -210,11 +208,11 @@ object Scoring {
           col("numeric_token_1_l").isNull || col("numeric_token_1_r").isNull, 1.0),
         ComparisonLevel("exact", col("numeric_token_1_l") === col("numeric_token_1_r"),
           math.pow(2, 6),
-          tfAdjustment = Some((relFreqOf(col("numeric_token_1_l")), 0.1, DefaultTfBase))),
+          tfAdjustment = Some(relFreqOf(col("numeric_token_1_l")))),
         ComparisonLevel("inverted",
           col("numeric_token_1_l") === col("numeric_token_2_r") ||
             col("numeric_token_2_l") === col("numeric_token_1_r"), math.pow(2, 2))),
-      elseBf = math.pow(2, -6))
+      elseBf = lit(math.pow(2, -6)))
 
     val numeric2 = Comparison("numeric_token_2",
       Seq(
@@ -224,7 +222,7 @@ object Scoring {
           math.pow(2, 4)),
         ComparisonLevel("onenull",
           col("numeric_token_2_l").isNull || col("numeric_token_2_r").isNull, 1.0)),
-      elseBf = math.pow(2, -3))
+      elseBf = lit(math.pow(2, -3)))
 
     // shared rare tokens are the strongest identity evidence (reference:
     // unusual-token bands drive both blocking and distinguishing-token
@@ -239,7 +237,7 @@ object Scoring {
         ComparisonLevel("very",
           size(array_intersect(col("very_unusual_tokens_l"),
             col("very_unusual_tokens_r"))) > 0, math.pow(2, 4))),
-      elseBf = math.pow(2, -2))
+      elseBf = lit(math.pow(2, -2)))
 
     val nTurns = Comparison("n_turns",
       Seq(
@@ -247,7 +245,7 @@ object Scoring {
         ComparisonLevel("same", col("n_turns_l") === col("n_turns_r"), 2.0),
         ComparisonLevel("off_by_one",
           abs(col("n_turns_l") - col("n_turns_r")) === 1, 1.0)),
-      elseBf = 0.25)
+      elseBf = lit(0.25))
 
     val turnJw = Comparison("turn_jw",
       Seq(
@@ -256,10 +254,16 @@ object Scoring {
         ComparisonLevel("high", meanJw >= 0.95, math.pow(2, 8)),
         ComparisonLevel("mid", meanJw >= 0.85, math.pow(2, 5)),
         ComparisonLevel("low", meanJw >= 0.7, math.pow(2, 1))),
-      elseBf = math.pow(2, -5))
+      elseBf = lit(math.pow(2, -5)))
+
+    // the reference's banded TF product (splink_model.json:327-618), last
+    val (histL, histR) = (col("token_freq_hist_l"), col("token_freq_hist_r"))
+    val tfProductCmp = Comparison("token_tf_product",
+      Seq(ComparisonLevel("null", histL.isNull || histR.isNull, 1.0)),
+      elseBf = bandedTfBf(tfProduct(histL, histR)))
 
     ScoreModel(prior, Seq(exactText, salient1, salient3, numeric1, numeric2,
-      roleSeq, turnJw, rareOverlap, nTurns))
+      roleSeq, turnJw, rareOverlap, nTurns, tfProductCmp))
   }
 
   /** Mean Jaro-Winkler over turn-aligned texts (north_star: "batched
@@ -272,13 +276,13 @@ object Scoring {
     * truncated duplicate still scores ~1.0; length disagreement is scored
     * by its own comparison (nTurnsComparison), not smuggled in here.
     */
-  def meanTurnJw: Column = {
+  private[score] def meanTurnJw: Column = {
     // JW is O(len^2); cap per-turn input at 48 chars — the prefix carries
     // almost all of the discriminating signal and bounds per-pair cost.
     def jwSumOver(l: Column, r: Column): Column =
       aggregate(
         zip_with(l, r, (a, b) => when(a.isNull || b.isNull, lit(0.0))
-          .otherwise(jwCol(substring(a, 1, 48), substring(b, 1, 48)))),
+          .otherwise(jaroWinkler(substring(a, 1, 48), substring(b, 1, 48)))),
         lit(0.0), (acc, x) => acc + x)
     def meanOver(l: Column, r: Column): Column =
       jwSumOver(l, r) / greatest(least(size(l), size(r)), lit(1)).cast("double")
@@ -291,12 +295,10 @@ object Scoring {
       meanOver(l, slice(r, lit(2), big)))
   }
 
-  private def jwCol(a: Column, b: Column): Column = jaroWinkler(a, b)
-
-  /** Score with the default model + the banded TF-product comparison
-    * (Bayes factor 1 when either hist map is missing).
+  /** Score pairs with the default model: bf_* per comparison,
+    * match_weight and match_probability.
     */
-  def scoreDefault(pairs: DataFrame, prior: Double = 1e-6): DataFrame = {
+  def scoreDefault(pairs: DataFrame, prior: Double): DataFrame = {
     // Project the 3-alignment JW sweep ONCE per pair. As its own non-cheap
     // alias referenced 3x downstream, CollapseProject keeps the projection
     // separate, guaranteeing single evaluation; inline it was evaluated per
@@ -304,15 +306,6 @@ object Scoring {
     // elimination) — measured as the dominant kernel cost. Value-identical:
     // same expression, same inputs, same doubles.
     val withJw = pairs.withColumn("__mean_turn_jw", meanTurnJw)
-    val base = score(withJw, defaultModel(prior))
-      .drop("__mean_turn_jw")
-    val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
-    val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))
-      .otherwise(bandedTfBf(prod))
-    base
-      .withColumn("bf_token_tf_product", bf)
-      .withColumn("match_weight", col("match_weight") + log2(col("bf_token_tf_product")))
-      .withColumn("match_probability",
-        pow(lit(2.0), col("match_weight")) / (lit(1.0) + pow(lit(2.0), col("match_weight"))))
+    score(withJw, defaultModel(prior)).drop("__mean_turn_jw")
   }
 }

@@ -13,8 +13,9 @@ import graft.ingest.TranscriptGen
 import graft.runtime.Checkpoints
 
 /** What a `Checkpoints.stage` commit costs and what it hands back: one
-  * Spark job per commit, the manifest's row count, and a read-back whose
-  * schema equals the one a resumed run infers from the files.
+  * Spark job per commit, the manifest's row count, a read-back whose
+  * schema equals the one inferred from the files, and a resume that starts
+  * no Spark job.
   */
 class CheckpointsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -63,6 +64,29 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(n === df.count(), name)
       assert(manifestRows(dir, name) === n, name)
     }
+  }
+
+  test("a resumed stage starts no Spark job and reads with the committed schema") {
+    val dir = Files.createTempDirectory("graft_ckpt_resume")
+    val ck = new Checkpoints(spark, dir.toString)
+    val df = spark.range(0, 1000, 1, 4)
+      .select(col("id"), (col("id") % 7).cast("string").as("k"), array(col("id")).as("a"))
+    val fresh = ck.stage("s", "fp")(df)
+    def rows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    var resumed: DataFrame = null
+    assert(jobsStartedBy { resumed = ck.stage("s", "fp")(sys.error("recomputed")) } === 0)
+    assert(resumed.schema === fresh.schema)
+    assert(rows(resumed) === rows(fresh))
+
+    // a manifest without a schema (the layout before it was committed) is
+    // not reusable: the stage recomputes once, then resumes again (the
+    // local FS checksums what it writes, so the stale checksum goes too)
+    Files.delete(dir.resolve("._manifest_s.json.crc"))
+    Files.writeString(dir.resolve("_manifest_s.json"),
+      """{"stage":"s","rows":1000,"partitions":4,"wall_ms":1,"fingerprint":"fp"}""")
+    var recomputed = 0
+    for (_ <- 1 to 2) ck.stage("s", "fp") { recomputed += 1; df }
+    assert(recomputed === 1)
   }
 
   test("every stage of run and runLink reads back with the schema a resumed run infers") {

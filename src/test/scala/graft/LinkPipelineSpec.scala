@@ -119,8 +119,6 @@ class LinkPipelineSpec extends AnyFunSuite {
     val m1 = merged(r1)
     val ck = new graft.runtime.Checkpoints(spark, dir.toString)
     assert(dir.toFile.list().toSet.filter(ck.isCommitted) === stages.toSet)
-    if (r1.tierStats.nonEmpty)
-      assert(ck.readInfo("link_pairs").exists(_.contains("n_salt_keys")))
 
     // recomputing a stage overwrites its directory, deleting this marker
     def kept(stage: String) = java.nio.file.Files.exists(dir.resolve(stage).resolve("_kept"))
@@ -128,6 +126,7 @@ class LinkPipelineSpec extends AnyFunSuite {
 
     val r2 = Pipeline.runLink(spark, messyDf, canonDf, cfg)
     assert(merged(r2) === m1)
+    assert(r2.tierStats === r1.tierStats)
     assert(stages.forall(kept), s"recomputed: ${stages.filterNot(kept)}")
 
     Pipeline.runLink(spark, messyDf, canonDf, cfg.copy(predictThreshold = -19))
