@@ -52,7 +52,7 @@ object ExplainAudit {
       val s0 = graft.signature.Signatures.signatures(turns)
       val tf = graft.signature.Signatures.tokenFrequencies(s0)
       graft.signature.Signatures.attachTf(s0, tf)
-        .withColumn("block_key", col("bk_role_len"))
+        .withColumnRenamed("bk_role_len", "block_key")
     }
     dump("pipeline signatures (turns -> per-conversation features)",
       sigs,

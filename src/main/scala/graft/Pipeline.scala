@@ -182,7 +182,7 @@ object Pipeline {
     val s0 = Signatures.signatures(turns)
     val sigs = if (tfSource.isEmpty) s0.localCheckpoint(false) else s0
     Signatures.attachTf(sigs, Signatures.tokenFrequencies(tfSource.getOrElse(sigs)))
-      .withColumn("block_key", col("bk_role_len"))
+      .withColumnRenamed("bk_role_len", "block_key")
   }
 
   private def skewConfig(cfg: Config): Blocking.SkewConfig =

@@ -48,7 +48,8 @@ object PipelineMain {
     val res = Pipeline.run(spark, turns, cfg)
 
     res.clusters.write.mode("overwrite").parquet(s"$outDir/clusters")
-    val nClusters = spark.read.parquet(s"$outDir/clusters")
+    // read back with the frame's schema: inferring it costs a Spark job
+    val nClusters = spark.read.schema(res.clusters.schema).parquet(s"$outDir/clusters")
       .select("cluster_id").distinct().count()
 
     Files.createDirectories(Paths.get(outDir))

@@ -78,13 +78,12 @@ object Blocking {
     // length rule was measured to emit 98% of all candidate pairs while
     // contributing no unique recall (every variant type is covered by a
     // salient or MinHash rule) — pure-cheap-key rules do not survive scale.
+    // No inverted (s1, s2) = (s2, s1) rule: one TF table ranks both sides'
+    // tokens in one total order, so it could emit no pair (BlockingRulesSpec).
     val base = Seq(
       BlockingRule("salient12",
         compositeKey(col("salient_token_1_l"), col("salient_token_2_l")),
         compositeKey(col("salient_token_1_r"), col("salient_token_2_r"))),
-      BlockingRule("salient_inv",
-        compositeKey(col("salient_token_1_l"), col("salient_token_2_l")),
-        compositeKey(col("salient_token_2_r"), col("salient_token_1_r"))),
       BlockingRule("salient1_role",
         compositeKey(col("salient_token_1_l"), col("role_seq_l")),
         compositeKey(col("salient_token_1_r"), col("role_seq_r"))),

@@ -142,10 +142,8 @@ object GraftFunctions {
     * result is 1 iff the sum over elements of (+1 if bit set else -1) > 0.
     * Oracle-portable (md5-derived hashes).
     */
-  def simhash(elems: Column, bits: Int = 32, portable: Boolean = true): Column = {
-    val hashed =
-      if (portable) transform(elems, e => portableHash64(e))
-      else transform(elems, e => fastHash64(e, 0))
+  def simhash(elems: Column, bits: Int = 32): Column = {
+    val hashed = transform(elems, e => portableHash64(e))
     val counts = aggregate(
       hashed,
       array_repeat(lit(0L), bits),

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructType}
 import graft.functions.Utf8Order
 
 /** Second pass: adjust pairwise match weights using tokens that distinguish
@@ -56,7 +56,7 @@ object DistinguishingTokens {
     * match_weight (double) plus sig_text_l / sig_text_r (normalised record
     * texts; sig_text_r is a function of conv_id_r). The result keeps every
     * input column, with match_weight adjusted, and adds
-    * match_weight_original, mw_adjustment and missing_tokens.
+    * match_weight_original and mw_adjustment.
     */
   def improve(pairs: DataFrame, params: Params = Params()): DataFrame = {
     // Steps 1-2: threshold, then top-N per messy record with the
@@ -68,7 +68,6 @@ object DistinguishingTokens {
     val out = in
       .add("match_weight_original", DoubleType)
       .add("mw_adjustment", DoubleType)
-      .add("missing_tokens", ArrayType(StringType))
     val cols = Cols(in.fieldIndex("match_weight"), in.fieldIndex("sig_text_l"),
       in.fieldIndex("sig_text_r"))
     good.groupBy(col("conv_id_r"))
@@ -154,14 +153,14 @@ object DistinguishingTokens {
       val l = toksL(i).toSet
       // Step 6: per-pair overlap/elsewhere sets
       // (identify_distinguishing_tokens.py:204-301): the messy record's
-      // pool keys in this candidate or not, in sorted-key order.
-      // missing_tokens keeps tokens_l's order and multiplicity: its SIZE
-      // counts duplicate missing tokens, as the reference does.
+      // pool keys in this candidate or not, in sorted-key order. The
+      // missing-token count keeps tokens_l's multiplicity: duplicate
+      // missing tokens count, as in the reference.
       val (overlapTok, elsewhereTok) = poolTokR.partition(l)
-      val missing = toksL(i).filterNot(r)
+      val missing = toksL(i).count(t => !r(t))
       val tokenAdj = rewardSum(overlapTok, tokHist) * Reward -
         elsewhereTok.length.toDouble * Punishment -
-        missing.length.toDouble * MissingTokenPenalty
+        missing.toDouble * MissingTokenPenalty
       val (overlapBi, elsewhereBi) = poolBigramsR.partition(bigramsL(i).toSet)
       val bigramAdj =
         rewardSum(coverFiltered(overlapBi, overlapTok), bigramHist) * BigramReward -
@@ -171,7 +170,7 @@ object DistinguishingTokens {
       val row = group(i)
       val original = row.getDouble(cols.matchWeight)
       Row.fromSeq(row.toSeq.updated(cols.matchWeight, original + adjustment) ++
-        Seq(original, adjustment, missing.toSeq))
+        Seq(original, adjustment))
     }
   }
 }

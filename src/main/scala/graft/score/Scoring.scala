@@ -60,10 +60,10 @@ object Scoring {
     * `Pipeline.attachScoreCols` joins them onto candidate pairs.
     */
   private[graft] val InputCols: Seq[String] = Seq(
-    "sig_text", "turn_texts", "role_seq", "len_band",
+    "sig_text", "turn_texts", "role_seq",
     "salient_token_1", "salient_token_2", "salient_token_3", "token_freq_hist",
     "very_unusual_tokens", "extremely_unusual_tokens", "n_turns",
-    "numeric_token_1", "numeric_token_2", "numeric_token_3")
+    "numeric_token_1", "numeric_token_2")
 
   /** Apply a score model to a blocked-pairs DataFrame (columns suffixed
     * _l/_r): one bf_<comparison> column per comparison, then match_weight

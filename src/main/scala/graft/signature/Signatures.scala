@@ -19,7 +19,7 @@ import graft.functions.Utf8Order
   * term_frequencies.py).
   *
   * Input: one row per turn (conv_id, turn_idx, role, text, tool, ts).
-  * Output: one row per conversation:
+  * Output: one row per conversation, only the columns a later stage reads:
   *   - sig_text: normalised concatenation of turn texts in stable
   *     (turn_idx) order — the ROW INVARIANT hinges on the explicit
   *     array_sort over collect_list(struct(turn_idx, ...)), because
@@ -27,9 +27,9 @@ import graft.functions.Utf8Order
   *     (SURVEY.md §7.4 risk 2).
   *   - turn_texts: per-turn normalised text array (turn-aligned scoring).
   *   - role_seq: compact role string, e.g. "UAUAT" (postcode analogue).
-  *   - tokens, token TF features, salient (rarest) tokens 1..3
-  *     (numeric_token_1..3 analogue, reference tokenisation.py:22-36).
-  *   - minhash signature + LSH band keys (north_star blocking keys).
+  *   - tokens, TF features, salient (rarest) tokens 1..3, numeric tokens
+  *     1..2 (reference tokenisation.py:22-36).
+  *   - len_band, role/length block key, MinHash LSH band keys (blocking).
   *
   * Scale shape: one shuffle (the conversation collect), then one plain-Scala
   * function per conversation for every signature column, and one per row
@@ -72,16 +72,13 @@ object Signatures {
   private val SignatureSchema = StructType(Seq(
     StructField("n_turns", IntegerType, nullable = false),
     StructField("turn_texts", ArrayType(StringType), nullable = false),
-    StructField("roles", ArrayType(StringType), nullable = false),
     StructField("role_seq", StringType, nullable = false),
     StructField("sig_text", StringType, nullable = false),
     StructField("tokens", ArrayType(StringType), nullable = false),
     StructField("numeric_token_1", StringType),
     StructField("numeric_token_2", StringType),
-    StructField("numeric_token_3", StringType),
     StructField("len_band", IntegerType),
     StructField("bk_role_len", StringType, nullable = false),
-    StructField("minhash_sig", ArrayType(LongType)),
     StructField("minhash_bands", ArrayType(StringType))))
 
   /** Every signature column of one conversation from its roles and texts in
@@ -103,19 +100,19 @@ object Signatures {
     // cleaning/steps/tokenisation.py:22-36) — document order, so filler
     // text cannot displace them the way it can displace rarity-ranked
     // salient tokens
-    val numeric = tokens.iterator.filter(_.forall(c => c >= '0' && c <= '9')).take(3).toArray
+    val numeric = tokens.iterator.filter(_.forall(c => c >= '0' && c <= '9')).take(2).toArray
     val nChars = math.max(sigText.codePointCount(0, sigText.length), 1)
     val lenBand = math.floor(StrictMath.log(nChars) / StrictMath.log(2.0)).toInt
     // MinHash over distinct word-3-gram shingles (not unigram tokens):
     // unrelated records sharing a vocabulary still have near-disjoint
     // shingle sets, so LSH bands stay selective (candidate-pair count is
     // THE scale driver). A conversation with <3 tokens has no shingles,
-    // hence NULL minhash_sig and NULL band keys: the un-blockable
-    // convention every other feature follows (blocking drops null keys),
-    // rather than a shared sentinel that would glue every short
-    // conversation into one giant block per band.
-    val (minhash, bands) =
-      if (tokens.length < 3) (null, null)
+    // hence NULL band keys: the un-blockable convention every other
+    // feature follows (blocking drops null keys), rather than a shared
+    // sentinel that would glue every short conversation into one giant
+    // block per band.
+    val bands =
+      if (tokens.length < 3) null
       else {
         val mins = Array.fill(MinhashK)(Long.MaxValue)
         Iterator.range(0, tokens.length - 2)
@@ -129,20 +126,22 @@ object Signatures {
             }
           }
         // GraftFunctions.minhashBandKeys: "<band>_<slot>_..._<slot>"
-        (mins, Array.tabulate(Bands)(b =>
-          s"${b}_" + mins.slice(b * RowsPerBand, (b + 1) * RowsPerBand).mkString("_")))
+        Array.tabulate(Bands)(b =>
+          s"${b}_" + mins.slice(b * RowsPerBand, (b + 1) * RowsPerBand).mkString("_"))
       }
-    Row(texts.length, turnTexts, roles, roleSeq, sigText, tokens.toSeq,
-      numeric.lift(0).orNull, numeric.lift(1).orNull, numeric.lift(2).orNull,
-      lenBand, s"$roleSeq#$lenBand", minhash, bands)
+    Row(texts.length, turnTexts, roleSeq, sigText, tokens.toSeq,
+      numeric.lift(0).orNull, numeric.lift(1).orNull,
+      lenBand, s"$roleSeq#$lenBand", bands)
   }
 
-  /** Full signature table from raw turns. */
+  /** Full signature table from raw turns, sorted by (turn_idx, role, text):
+    * `ts` could only order turns equal in all three, which give the same row.
+    */
   def signatures(turns: DataFrame): DataFrame = {
     val icu = turns.sparkSession.conf.get(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key).toBoolean
     val kernel: UDF2[Seq[String], Seq[String], Row] = signatureRow(_, _, icu)
     turns
-      .select(col("conv_id"), struct(col("turn_idx"), col("role"), col("text"), col("ts")).as("t"))
+      .select(col("conv_id"), struct(col("turn_idx"), col("role"), col("text")).as("t"))
       .groupBy(col("conv_id"))
       .agg(array_sort(collect_list(col("t"))).as("ts_sorted"))
       .select(col("conv_id"), udf(kernel, SignatureSchema).asNonNullable()(
@@ -168,7 +167,6 @@ object Signatures {
     StructField("token_freq_hist", MapType(StringType,
       StructType(Seq(StructField("cnt", IntegerType, nullable = false),
         StructField("rel_freq", DoubleType))), valueContainsNull = false)),
-    StructField("unusual_tokens", ArrayType(StringType)),
     StructField("very_unusual_tokens", ArrayType(StringType)),
     StructField("extremely_unusual_tokens", ArrayType(StringType)),
     StructField("salient_token_1", StringType),
@@ -189,7 +187,7 @@ object Signatures {
 
   /** The TF columns of one conversation's tokens; NULL when it has none. */
   private def tfRow(tokens: Seq[String], freqs: Map[String, Double],
-      unusualMax: Double, veryUnusualMax: Double, extremelyUnusualMax: Double): Row = {
+      veryUnusualMax: Double, extremelyUnusualMax: Double): Row = {
     if (tokens == null || tokens.isEmpty) return null
     val counts = mutable.HashMap.empty[String, Int]
     tokens.foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
@@ -203,17 +201,17 @@ object Signatures {
     def bandTokens(lo: Double, hi: Double): Array[String] =
       tfs.filter(e => e.relFreq < hi && e.relFreq >= lo).map(_.token)
     def salient(i: Int): String = if (i < tfs.length) tfs(i).token else null
-    Row(hist, bandTokens(veryUnusualMax, unusualMax),
-      bandTokens(extremelyUnusualMax, veryUnusualMax), bandTokens(0.0, extremelyUnusualMax),
-      salient(0), salient(1), salient(2))
+    Row(hist, bandTokens(extremelyUnusualMax, veryUnusualMax),
+      bandTokens(0.0, extremelyUnusualMax), salient(0), salient(1), salient(2))
   }
 
   /** Attach TF features: token->(cnt, rel_freq) map, salient (rarest)
-    * tokens 1..3, and frequency-banded unusual-token arrays (reference:
-    * term_frequencies.py:264-307 bands at 1e-4 / 5e-5 / 1e-7, retuned as
-    * corpus-relative quantile-ish thresholds configurable by caller).
+    * tokens 1..3, and the frequency-banded very- and extremely-unusual
+    * token arrays that the score model's rare-token comparison reads
+    * (reference: term_frequencies.py:264-307 bands at 1e-4 / 5e-5 / 1e-7,
+    * retuned as corpus-relative thresholds configurable by caller).
     * A token missing from `tf` gets DefaultRelFreq; a conversation without
-    * tokens gets NULL in all seven columns.
+    * tokens gets NULL in all six columns.
     *
     * `tf` is collected into a map on the driver and broadcast (reference
     * TF ~300k rows; at 100 TB the TF table itself stays vocabulary-sized),
@@ -223,14 +221,13 @@ object Signatures {
   def attachTf(
       sigs: DataFrame,
       tf: DataFrame,
-      unusualMax: Double = 1e-3,
       veryUnusualMax: Double = 1e-4,
       extremelyUnusualMax: Double = 1e-5): DataFrame = {
     val freqs = tf.select(col("token"), col("rel_freq").cast("double")).collect()
       .collect { case Row(t: String, f: Double) => t -> f }.toMap
     val bc = sigs.sparkSession.sparkContext.broadcast(freqs)
     val kernel: UDF1[Seq[String], Row] =
-      tfRow(_, bc.value, unusualMax, veryUnusualMax, extremelyUnusualMax)
+      tfRow(_, bc.value, veryUnusualMax, extremelyUnusualMax)
     sigs.select(col("*"), udf(kernel, TfSchema)(col("tokens")).as("__tf"))
       .select(sigs.columns.toSeq.map(col) :+ col("__tf.*"): _*)
   }

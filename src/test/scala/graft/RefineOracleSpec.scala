@@ -15,7 +15,7 @@ class RefineOracleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private val outCols = Seq("match_weight_original", "mw_adjustment", "missing_tokens")
+  private val outCols = Seq("match_weight_original", "mw_adjustment")
 
   /** Output rows as a multiset, doubles replaced by their raw bits. */
   private def bitRows(df: DataFrame, cols: Seq[String]): Map[Seq[Any], Int] =

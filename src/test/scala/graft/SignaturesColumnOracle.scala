@@ -25,7 +25,6 @@ object SignaturesColumnOracle {
       col("conv_id"),
       size(col("ts_sorted")).as("n_turns"),
       transform(col("ts_sorted"), t => normText(t.getField("text"))).as("turn_texts"),
-      transform(col("ts_sorted"), t => t.getField("role")).as("roles"),
       concat_ws("", transform(col("ts_sorted"),
         t => upper(substring(t.getField("role"), 1, 1)))).as("role_seq"))
   }
@@ -47,7 +46,6 @@ object SignaturesColumnOracle {
     val base = withText
       .withColumn("numeric_token_1", try_element_at(numericToks, lit(1)))
       .withColumn("numeric_token_2", try_element_at(numericToks, lit(2)))
-      .withColumn("numeric_token_3", try_element_at(numericToks, lit(3)))
       .withColumn("len_band", floor(log2(greatest(length(col("sig_text")), lit(1)))).cast("int"))
       .withColumn("bk_role_len", concat_ws("#", col("role_seq"), col("len_band")))
     // MinHash over word-3-gram shingles via explode + groupBy-min; base is
@@ -66,12 +64,12 @@ object SignaturesColumnOracle {
       .withColumn("minhash_bands",
         when(col("minhash_sig").isNull, lit(null).cast("array<string>"))
           .otherwise(minhashBandKeys(col("minhash_sig"), Bands, RowsPerBand)))
+      .drop("minhash_sig")
   }
 
   def attachTf(
       sigs: DataFrame,
       tf: DataFrame,
-      unusualMax: Double = 1e-3,
       veryUnusualMax: Double = 1e-4,
       extremelyUnusualMax: Double = 1e-5): DataFrame = {
     // (conv, token) counts first: every derived feature needs one entry
@@ -101,7 +99,6 @@ object SignaturesColumnOracle {
           struct(x.getField("token").as("key"),
             struct(x.getField("cnt").as("cnt"),
               x.getField("rel_freq").as("rel_freq")).as("value")))))
-      .withColumn("unusual_tokens", bandTokens(veryUnusualMax, unusualMax))
       .withColumn("very_unusual_tokens", bandTokens(extremelyUnusualMax, veryUnusualMax))
       .withColumn("extremely_unusual_tokens", bandTokens(0.0, extremelyUnusualMax))
       .withColumn("salient_token_1",
