@@ -126,9 +126,10 @@ object ExplainAudit {
     dump("q35 link-mode merge",
       SparkEntry.queries("q35_link_merge")(spark, sfDir),
       "Want: the cascade (ExactCascade.run) materialised once and read " +
-        "as a scan, carry-forward anti-joins, rule joins with exclusion " +
-        "filters, best-match rank window, deterministic-wins anti-join " +
-        "before the union.")
+        "as a scan, carry-forward anti-joins, Blocking's one (rule, key, " +
+        "salt) join of both sides' exploded keys with the first-rule " +
+        "filter, norm_text/toks joined to each side by id, best-match rank " +
+        "window, deterministic-wins anti-join before the union.")
 
     pw.close()
     println(s"wrote $out")

@@ -27,7 +27,7 @@ object PipelineMain {
     require(args.length >= 3,
       "usage: PipelineMain <turnsParquet|gen:N> <checkpointDir> <outDir> [edgeThreshold]")
     val (input, ckptDir, outDir) = (args(0), args(1), args(2))
-    val edgeThreshold = args.lift(3).map(_.toDouble).getOrElse(-6.0)
+    val edgeThreshold = args.lift(3).map(_.toDouble).getOrElse(Pipeline.Config().edgeThreshold)
 
     // spark-submit's master and confs win; without a master the run is
     // local[SPARK_GRAFT_CPUS] (runtime.Session)

@@ -35,7 +35,7 @@ object Evaluate {
     val categorized = CategoryBounds.zipWithIndex.foldLeft(
       when(col("match_count") === 1, "01: one match only")
         .when(col("distinguishability").isNull,
-          f"${CategoryBounds.length + 2}%02d: nan (last match in group)")) {
+          f"${CategoryBounds.length + 3}%02d: nan (last match in group)")) {
       case (acc, (t, i)) =>
         acc.when(col("distinguishability") > t, f"${i + 2}%02d: distinguishability > $t")
     }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
@@ -42,6 +42,26 @@ object DedupQueries {
         concat((0 until bits).map(i =>
           when(element_at(v, b * bits + i + 1) > 0, lit("1")).otherwise(lit("0"))): _*))
     }: _*)
+
+  /** MinHash-LSH candidate pairs (doc_id_l < doc_id_r, each once) over a
+    * materialised (doc_id, `sh`) shingle table: k-hash portable signatures,
+    * `bands` band keys of `rows` rows, band-key self-join. Both sides of
+    * the self-join read the SAME band table; as a plain subplan each side
+    * re-derives the minhash aggregation (2 scans, 2 minhash aggregations in
+    * the r5 plan), so it is materialised once per invocation (lazy stage
+    * boundary, no cross-rep reuse).
+    */
+  private def lshCandidates(
+      withSh: DataFrame, sh: String, k: Int, bands: Int, rows: Int): DataFrame = {
+    val sig = minhashAggregate(withSh, "doc_id", col(sh), k, portable = true)
+      .select(col("doc_id"), minhashBandKeys(col("minhash_sig"), bands, rows).as("bands"))
+    val exploded = sig.select(col("doc_id"), explode(col("bands")).as("band_key"))
+      .localCheckpoint(false)
+    exploded.as("l").join(exploded.as("r"),
+        col("l.band_key") === col("r.band_key") && col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("doc_id_l"), col("r.doc_id").as("doc_id_r"))
+      .distinct()
+  }
 
   /** q19: n-gram Jaccard near-dup pairs within (lang, length-band) blocks —
     * composite-key blocking + set-similarity verify. Standalone so q29 can
@@ -95,11 +115,12 @@ object DedupQueries {
   )
 
   /** q19b: the 100-TB scale path for q19 — MinHash-LSH candidate
-    * generation (q17 kernel, k=16 / 8 bands x 2 rows for better recall at
-    * the 0.2 threshold: P(candidate | s) = 1-(1-s^2)^8, ~0.90 at s=0.5,
-    * ~1.0 at s>=0.8) followed by exact-Jaccard verification on candidates
-    * ONLY. Candidate volume scales with true near-dup density instead of
-    * block-size^2. Standalone so q29 uses it as its edge generator.
+    * generation (`lshCandidates`, k=16 / 8 bands x 2 rows for better
+    * recall at the 0.2 threshold: P(candidate | s) = 1-(1-s^2)^8, ~0.90 at
+    * s=0.5, ~1.0 at s>=0.8) followed by exact-Jaccard verification on
+    * candidates ONLY. Candidate volume scales with true near-dup density
+    * instead of block-size^2. Standalone so q29 uses it as its edge
+    * generator.
     */
   val LshK = 16
   val LshBands = 8
@@ -121,14 +142,7 @@ object DedupQueries {
       val withSh = d.select(col("doc_id"),
         array_distinct(wordNgrams(tokens(col("text")), 3)).as("shingles"))
         .localCheckpoint(false)
-      val sig = minhashAggregate(withSh, "doc_id", col("shingles"), LshK, portable = true)
-        .select(col("doc_id"), minhashBandKeys(col("minhash_sig"), LshBands, LshRows).as("bands"))
-      val exploded = sig.select(col("doc_id"), explode(col("bands")).as("band_key"))
-        .localCheckpoint(false)
-      val cand = exploded.as("l").join(exploded.as("r"),
-          col("l.band_key") === col("r.band_key") && col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_id_l"), col("r.doc_id").as("doc_id_r"))
-        .distinct()
+      val cand = lshCandidates(withSh, "shingles", LshK, LshBands, LshRows)
       val shL = withSh.select(col("doc_id").as("doc_id_l"), col("shingles").as("sh_l"))
       val shR = withSh.select(col("doc_id").as("doc_id_r"), col("shingles").as("sh_r"))
       cand.join(shL, Seq("doc_id_l")).join(shR, Seq("doc_id_r"))
@@ -206,21 +220,7 @@ object DedupQueries {
         // runs once, post-fan-out. Fresh RDD per invocation — no
         // cross-rep caching.
         val withSh = d.select(col("doc_id"), shingles.as("__sh")).localCheckpoint(false)
-        val sig = minhashAggregate(
-          withSh,
-          "doc_id", col("__sh"), MinhashK, portable = true)
-          .select(col("doc_id"),
-            minhashBandKeys(col("minhash_sig"), Bands, RowsPerBand).as("bands"))
-        // both sides of the band self-join read the SAME band table; as a
-        // plain subplan each side re-derives shingles+minhash (2 scans, 2
-        // minhash aggregations in the r5 plan) — materialise once per
-        // invocation (lazy stage boundary, no cross-rep reuse)
-        val exploded = sig.select(col("doc_id"), explode(col("bands")).as("band_key"))
-          .localCheckpoint(false)
-        exploded.as("l").join(exploded.as("r"),
-            col("l.band_key") === col("r.band_key") && col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("doc_id_l"), col("r.doc_id").as("doc_id_r"))
-          .distinct()
+        lshCandidates(withSh, "__sh", MinhashK, Bands, RowsPerBand)
       },
       Some {
         val sigElems = (0 until MinhashK)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.blocking.{Blocking, BlockingRule}
@@ -41,8 +41,8 @@ object ErQueries {
     FROM documents"""
 
   /** Materialised feature table: every query in this family references the
-    * feature subplan several times (both sides of up to three rule
-    * self-joins, plus labels in q36/q37 and the cascade in q35) — as a
+    * feature subplan several times (the blocking keys, both sides' text
+    * joins, plus labels in q36/q37 and the cascade in q35) — as a
     * plain subplan each reference re-derives the tokenise-regex chain from
     * the scan (8 scans in the r5 q35 physical plan), and the duplicated
     * subtree multiplies Catalyst/AQE planning and codegen work. A lazy
@@ -54,37 +54,50 @@ object ErQueries {
   private def featuresM(s: SparkSession, dir: String): DataFrame =
     features(s, dir).localCheckpoint(false)
 
-  /** Union-of-equi-join blocking with Splink-style earlier-rule exclusion:
-    * rule i only emits pairs NOT matched by any rule j < i, so each pair
-    * appears exactly once, tagged with its first matching rule.
+  // ---- union-of-rules blocking: the pipeline's operator, `Blocking` ----
+  /** The three rules, over the keyed frame's k0 = head3, k1 = lang#n_chars
+    * and k2 = tail3 (null keys never join).
     */
-  private def blockedPairs(s: SparkSession, dir: String): DataFrame =
-    blockedPairsFrom(featuresM(s, dir))
+  private val rules: Seq[BlockingRule] = Seq("head3", "lang_n_chars", "tail3")
+    .zipWithIndex.map { case (name, i) => BlockingRule(name, col(s"k${i}_l"), col(s"k${i}_r")) }
 
-  /** Same, over an already-materialised feature table (so queries that also
-    * need features elsewhere share ONE materialisation).
+  /** No key is ever over cap × `Int.MaxValue` rows, so no key reaches
+    * sorted-neighbourhood salvage: salting keeps every key-equal pair, and
+    * the pairs are the oracle's plain rule joins at any scale factor.
     */
-  private def blockedPairsFrom(f: DataFrame): DataFrame = {
-    // rule keys (null keys never join)
-    val keyed = f.select(col("doc_id"),
-      col("norm_text"), col("toks"), col("lang"), col("n_chars"),
-      col("head3").as("k0"),
-      concat_ws("#", col("lang"), col("n_chars")).as("k1"),
-      col("tail3").as("k2"))
-    val l = keyed.toDF(keyed.columns.map(_ + "_l"): _*)
-    val r = keyed.toDF(keyed.columns.map(_ + "_r"): _*)
-    def pairsFor(i: Int): DataFrame = {
-      val joined = l.join(r,
-        col(s"k${i}_l") === col(s"k${i}_r") && col("doc_id_l") < col("doc_id_r"))
-      val excluded = (0 until i).foldLeft(joined) { (df, j) =>
-        df.filter(not(coalesce(col(s"k${j}_l") === col(s"k${j}_r"), lit(false))))
-      }
-      excluded.withColumn("match_key", lit(i))
-    }
-    (0 until 3).map(pairsFor).reduce(_ unionByName _)
-      .select(col("doc_id_l"), col("doc_id_r"), col("match_key"),
-        col("norm_text_l"), col("norm_text_r"), col("toks_l"), col("toks_r"))
+  private val skew = Blocking.SkewConfig(maxSaltFactor = Int.MaxValue)
+
+  private def keyed(f: DataFrame): DataFrame = f.select(col("doc_id"),
+    col("head3").as("k0"), concat_ws("#", col("lang"), col("n_chars")).as("k1"),
+    col("tail3").as("k2"))
+
+  /** Self-mode pairs (doc_id_l, doc_id_r, match_key): each pair once,
+    * tagged with its first matching rule.
+    */
+  private def blockedPairs(f: DataFrame): DataFrame =
+    Blocking.candidatePairsSelfWithStats(keyed(f), "doc_id", rules, skew).pairs
+
+  /** The score inputs norm_text and toks, joined to each side by id (the
+    * shape of `Pipeline.attachScoreCols`).
+    */
+  private def withTexts(pairs: DataFrame, l: DataFrame, r: DataFrame): DataFrame = {
+    def side(df: DataFrame, sfx: String) = df.select(col("doc_id").as(s"doc_id$sfx"),
+      col("norm_text").as(s"norm_text$sfx"), col("toks").as(s"toks$sfx"))
+    pairs.join(side(l, "_l"), Seq("doc_id_l")).join(side(r, "_r"), Seq("doc_id_r"))
   }
+
+  /** Scored self-mode pairs over one materialised feature table. */
+  private def scoredPairs(f: DataFrame): DataFrame =
+    scoreCols(withTexts(blockedPairs(f), f, f))
+
+  /** The top candidate per doc_id_r (weight descending, then doc_id_l
+    * ascending) as `Evaluate.bestMatches`' (conv_id_r, conv_id_l,
+    * match_weight), the weight e6-scaled.
+    */
+  private def bestOf(scored: DataFrame): DataFrame =
+    graft.evaluate.Evaluate.bestMatches(scored.select(
+      col("doc_id_l").as("conv_id_l"), col("doc_id_r").as("conv_id_r"),
+      col("match_weight_e6").as("match_weight")))
 
   private val duckBlockedPairs: String = s"""
     WITH f AS ($duckFeatures),
@@ -197,7 +210,7 @@ object ErQueries {
     // --- q26: blocking pair generation with match_key.
     QueryDef(
       "q26_blocking_pairs",
-      (s, dir) => blockedPairs(s, dir).select("doc_id_l", "doc_id_r", "match_key"),
+      (s, dir) => blockedPairs(featuresM(s, dir)),
       Some(s"""
         WITH base AS ($duckBlockedPairs)
         SELECT doc_id_l, doc_id_r, match_key FROM base
@@ -207,7 +220,7 @@ object ErQueries {
     // --- q27: Fellegi-Sunter match weights on blocked pairs.
     QueryDef(
       "q27_fs_scores",
-      (s, dir) => scoreCols(blockedPairs(s, dir))
+      (s, dir) => scoredPairs(featuresM(s, dir))
         .select(col("doc_id_l"), col("doc_id_r"), col("match_key"),
           col("match_weight_e6"), col("match_probability_e8")),
       Some(s"""
@@ -224,7 +237,7 @@ object ErQueries {
     QueryDef(
       "q28_best_match",
       (s, dir) => {
-        val scored = scoreCols(blockedPairs(s, dir))
+        val scored = scoredPairs(featuresM(s, dir))
           .select(col("doc_id_l"), col("doc_id_r"), col("match_weight_e6"))
         val w = Window.partitionBy(col("doc_id_r"))
           .orderBy(col("match_weight_e6").desc, col("doc_id_l").asc)
@@ -327,29 +340,14 @@ object ErQueries {
             col("lang").as("block_key")),
           idCol = "doc_id").localCheckpoint(false)
         val remaining = messyF.join(det.select("doc_id"), Seq("doc_id"), "left_anti")
-        def keyed(df: DataFrame, sfx: String) = df.select(
-          col("doc_id").as(s"doc_id$sfx"),
-          col("norm_text").as(s"norm_text$sfx"), col("toks").as(s"toks$sfx"),
-          col("head3").as(s"k0$sfx"),
-          concat_ws("#", col("lang"), col("n_chars")).as(s"k1$sfx"),
-          col("tail3").as(s"k2$sfx"))
-        val l = keyed(canonF, "_l")
-        val r = keyed(remaining, "_r")
-        val pairs = (0 until 3).map { i =>
-          val joined = l.join(r, col(s"k${i}_l") === col(s"k${i}_r"))
-          (0 until i).foldLeft(joined) { (df, j) =>
-            df.filter(not(coalesce(col(s"k${j}_l") === col(s"k${j}_r"), lit(false))))
-          }.withColumn("match_key", lit(i))
-        }.reduce(_ unionByName _)
+        val pairs = Blocking.candidatePairsLinkWithStats(
+          keyed(canonF), keyed(remaining), "doc_id", rules, skew).pairs
         // the e6-scaled weight rides through Evaluate.bestMatches under the
         // generic "match_weight" name (ordering/ties are scale-invariant);
         // mergeMatches upcasts it to DOUBLE alongside the deterministic
         // NULLs, but every value is an integer < 2^53 so the final cast
         // back to BIGINT is exact.
-        val scored = scoreCols(pairs).select(
-          col("doc_id_l").as("conv_id_l"), col("doc_id_r").as("conv_id_r"),
-          col("match_weight_e6").as("match_weight"))
-        val best = graft.evaluate.Evaluate.bestMatches(scored)
+        val best = bestOf(scoreCols(withTexts(pairs, canonF, remaining)))
           .select("conv_id_r", "conv_id_l", "match_weight")
         val merged = graft.evaluate.Evaluate.mergeMatches(
           det.withColumnRenamed("doc_id", "conv_id"), best)
@@ -434,14 +432,8 @@ object ErQueries {
         val labels = f.select(col("doc_id").as("conv_id"),
           min(col("doc_id")).over(Window.partitionBy(col("norm_text")))
             .as("correct_conv_id"))
-        val scored = scoreCols(blockedPairsFrom(f))
-          .select(col("doc_id_l"), col("doc_id_r"), col("match_weight_e6"))
-        val w = Window.partitionBy(col("doc_id_r"))
-          .orderBy(col("match_weight_e6").desc, col("doc_id_l").asc)
-        val matches = scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("doc_id_r").as("conv_id_r"), col("doc_id_l").as("conv_id_l"),
-            when(col("match_weight_e6") > 0, "strong").otherwise("weak").as("match_reason"))
+        val matches = bestOf(scoredPairs(f)).select(col("conv_id_r"), col("conv_id_l"),
+          when(col("match_weight") > 0, "strong").otherwise("weak").as("match_reason"))
         graft.evaluate.Evaluate.accuracyByReason(matches, labels)
           .drop("accuracy_pct") // DOUBLE is human-facing; hash the exact BIGINT
       },
@@ -479,14 +471,8 @@ object ErQueries {
         val labels = f.select(col("doc_id").as("conv_id"),
           min(col("doc_id")).over(Window.partitionBy(col("norm_text")))
             .as("correct_conv_id"))
-        val scored = scoreCols(blockedPairsFrom(f))
-          .select(col("doc_id_l"), col("doc_id_r"), col("match_weight_e6"))
-        val w = Window.partitionBy(col("doc_id_r"))
-          .orderBy(col("match_weight_e6").desc, col("doc_id_l").asc)
-        val matches = scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("doc_id_r").as("conv_id_r"), col("doc_id_l").as("conv_id_l"),
-            lit("best").as("match_reason"))
+        val matches = bestOf(scoredPairs(f)).select(col("conv_id_r"), col("conv_id_l"),
+          lit("best").as("match_reason"))
         graft.evaluate.Evaluate.nthFalsePositive(matches, labels, 5)
           .select(col("conv_id_r").as("doc_id_r"), col("conv_id_l").as("doc_id_l"),
             col("correct_conv_id").as("correct_doc_id"))

@@ -21,9 +21,10 @@ class EvaluateSpec extends AnyFunSuite {
 
   test("bestMatches: tie-break, distinguishability, categories") {
     val scored = Seq(
-      ("a", "r1", 10.0), ("b", "r1", 7.0), ("c", "r1", 7.0), // best a, d=3
-      ("x", "r2", 5.0), // single match
-      ("y", "r3", 4.0), ("z", "r3", 4.0) // tie -> y by id asc, d=0
+      ("a", "r1", Some(10.0)), ("b", "r1", Some(7.0)), ("c", "r1", Some(7.0)), // best a, d=3
+      ("x", "r2", Some(5.0)), // single match
+      ("y", "r3", Some(4.0)), ("z", "r3", Some(4.0)), // tie -> y by id asc, d=0
+      ("p", "r4", Some(3.0)), ("q", "r4", None) // NULL runner-up weight -> nan
     ).toDF("conv_id_l", "conv_id_r", "match_weight")
     val got = Evaluate.bestMatches(scored)
       .select("conv_id_r", "conv_id_l", "distinguishability", "distinguishability_category")
@@ -34,5 +35,6 @@ class EvaluateSpec extends AnyFunSuite {
     assert(got("r2")._1 === "x" && got("r2")._3 === "01: one match only")
     assert(got("r3")._1 === "y" && got("r3")._2 === Some(0.0))
     assert(got("r3")._3 === "06: distinguishability = 0")
+    assert(got("r4") === (("p", None, "07: nan (last match in group)")))
   }
 }
