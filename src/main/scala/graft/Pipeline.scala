@@ -105,13 +105,15 @@ object Pipeline {
     * an expensive layer (signatures, pairs, scored) or the pipeline's
     * output; anything else runs inside the stage that reads it.
     *
-    * With a checkpoint dir a stage commits to parquet, keyed by the config
-    * fingerprint so a config change recomputes instead of serving stale
-    * stages. Without one it is a localCheckpoint(eager = false). That is
-    * not fully lazy under AQE (on in PipelineMain and the bench): the call
-    * plans and compiles the stage's subplan and runs every shuffle map
-    * stage in it at once; only the final stage waits for the first action,
-    * and the result is reused after. Eager barriers (localCheckpoint(true))
+    * A stage's commit is its only materialisation; no reader caches a
+    * second copy on top of it. With a checkpoint dir a stage commits to
+    * parquet, keyed by the config fingerprint so a config change recomputes
+    * instead of serving stale stages. Without one it is a
+    * localCheckpoint(eager = false). That is not fully lazy under AQE (on
+    * in PipelineMain and the bench): the call plans and compiles the
+    * stage's subplan and runs every shuffle map stage in it at once; only
+    * the final stage waits for the first action, and the result is reused
+    * after. Eager barriers (localCheckpoint(true))
     * were measured slower: the serial barriers dominated local wall.
     * Reference analogue: per-stage temp-table materialisation,
     * sql_pipeline/runner.py:471-491.
@@ -214,7 +216,7 @@ object Pipeline {
     val stage = new Stages(spark, cfg)
 
     // 1. signatures (+ TF attach from the corpus itself)
-    val sigs = stage("signatures")(signaturesWithTf(turns)).persist()
+    val sigs = stage("signatures")(signaturesWithTf(turns))
 
     // 2. blocking on everything (cascade edges merge in at the end).
     // The pairs boundary stays NARROW (ids + match_key): materialising
@@ -226,7 +228,7 @@ object Pipeline {
       Blocking.candidatePairsSelfWithStats(sigs, "conv_id", rules, skewConfig(cfg))
     }
 
-    // 3. score (carry features joined in from the persisted signatures)
+    // 3. score (carry features joined in from the committed signatures)
     val scored = stage("scored")(scoreAbove(sigs, sigs, pairs, cfg))
 
     // 4. edges = confident first-pass pairs + deterministic cascade links.
@@ -287,10 +289,10 @@ object Pipeline {
 
     // 1. signatures; one TF table (canonical corpus) applied to both sides
     // so a token's rarity means the same thing on each side of a pair.
-    val canonSigs = stage("link_canon_sigs")(signaturesWithTf(canonicalTurns)).persist()
+    val canonSigs = stage("link_canon_sigs")(signaturesWithTf(canonicalTurns))
     // TF from the already-materialised canonical signatures (tokens col)
     val messySigs = stage("link_messy_sigs")(
-      signaturesWithTf(messyTurns, tfSource = Some(canonSigs))).persist()
+      signaturesWithTf(messyTurns, tfSource = Some(canonSigs)))
 
     // 2. deterministic cascade
     val det = stage("link_cascade") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
@@ -61,6 +61,28 @@ object DedupQueries {
         col("l.band_key") === col("r.band_key") && col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("doc_id_l"), col("r.doc_id").as("doc_id_r"))
       .distinct()
+  }
+
+  /** The embeddings as (vec_id, v, __nrm): vectors cast to doubles, each
+    * L2 norm projected once per vector instead of re-folded per pair
+    * (guide §2.3 "aggregate before you shuffle" applied to per-row work:
+    * the norm depends only on one side). Same fold, same doubles, so
+    * cos_sim_e6 is bit-identical. Each caller places its own barrier.
+    */
+  private def normedEmbeddings(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "embeddings", fanout = true)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("__nrm", l2norm(col("v")))
+
+  /** Top-`k` neighbours per query, (q_id, n_id, cos_sim_e6, rank), over
+    * candidate pairs carrying the query side's (q_id, qv, __qn) and the
+    * neighbour side's (n_id, v, __nrm); ties go to the smaller n_id.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim_e6").desc, col("n_id").asc)
+    pairs.select(col("q_id"), col("n_id"),
+        cosineE6Pre(col("qv"), col("v"), col("__qn"), col("__nrm")).as("cos_sim_e6"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** q19: n-gram Jaccard near-dup pairs within (lang, length-band) blocks —
@@ -277,23 +299,13 @@ object DedupQueries {
     QueryDef(
       "q20_cosine_topk",
       (s, dir) => {
-        // Per-vector L2 norm projected ONCE before the pair join instead of
-        // re-folding both sides' norms per pair (guide §2.3
-        // "aggregate before you shuffle" applied to per-row work: the norm
-        // depends only on one side). Same fold, same doubles — cos_sim_e6
-        // is bit-identical; the materialised e is read by both the query
-        // and candidate sides (lazy stage boundary, fresh per invocation).
-        val e = load(s, dir, "embeddings", fanout = true)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .withColumn("__nrm", l2norm(col("v")))
-          .localCheckpoint(false)
+        // the materialised e is read by both the query and candidate sides
+        // (lazy stage boundary, fresh per invocation)
+        val e = normedEmbeddings(s, dir).localCheckpoint(false)
         val queries = e.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("v").as("qv"), col("__nrm").as("__qn"))
-        val scored = queries.crossJoin(e.filter(col("vec_id") % 50 =!= 0))
-          .select(col("q_id"), col("vec_id").as("n_id"),
-            cosineE6Pre(col("qv"), col("v"), col("__qn"), col("__nrm")).as("cos_sim_e6"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim_e6").desc, col("n_id").asc)
-        scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+        cosineTopK(queries.crossJoin(
+          e.filter(col("vec_id") % 50 =!= 0).withColumnRenamed("vec_id", "n_id")), 5)
       },
       Some("""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -326,28 +338,21 @@ object DedupQueries {
     QueryDef(
       "q20b_ann_lsh",
       (s, dir) => {
-        // norms projected once per vector + one materialisation for the
-        // two join sides — see q20's rationale; cos_sim_e6 bit-identical
-        val e = load(s, dir, "embeddings", fanout = true)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        // one materialisation for the two join sides (see q20)
+        val e = normedEmbeddings(s, dir)
           .withColumn("bucket",
             aggregate(
               zip_with(slice(col("v"), 1, 12),
                 sequence(lit(0), lit(11)).cast("array<double>"),
                 (x, i) => when(x > 0, pow(lit(2.0), i)).otherwise(lit(0.0))),
               lit(0.0), (a, x) => a + x).cast("long"))
-          .withColumn("__nrm", l2norm(col("v")))
           .localCheckpoint(false)
         val q = e.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"),
             col("__nrm").as("__qn"))
         val c = e.filter(col("vec_id") % 50 =!= 0)
           .select(col("vec_id").as("n_id"), col("v"), col("bucket"), col("__nrm"))
-        val scored = q.join(c, Seq("bucket"))
-          .select(col("q_id"), col("n_id"),
-            cosineE6Pre(col("qv"), col("v"), col("__qn"), col("__nrm")).as("cos_sim_e6"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim_e6").desc, col("n_id").asc)
-        scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
+        cosineTopK(q.join(c, Seq("bucket")), 3)
       },
       Some("""
         WITH e AS (
@@ -389,12 +394,8 @@ object DedupQueries {
       "q20c_ann_multiband",
       (s, dir) => {
         // e read by band generation + two attach joins, exploded read by
-        // both candidate sides — each materialised once per invocation;
-        // norms projected per vector (see q20), cos_sim_e6 bit-identical
-        val e = load(s, dir, "embeddings", fanout = true)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .withColumn("__nrm", l2norm(col("v")))
-          .localCheckpoint(false)
+        // both candidate sides — each materialised once per invocation
+        val e = normedEmbeddings(s, dir).localCheckpoint(false)
         val withBands = e.withColumn("bands", annBandKeys(col("v"), AnnBands, AnnBits))
         val exploded = withBands
           .select(col("vec_id"), explode(col("bands")).as("band_key"))
@@ -404,14 +405,10 @@ object DedupQueries {
         val c = exploded.filter(col("vec_id") % 50 =!= 0)
           .select(col("vec_id").as("n_id"), col("band_key"))
         val cand = q.join(c, Seq("band_key")).select("q_id", "n_id").distinct()
-        val scored = cand
+        cosineTopK(cand
           .join(e.select(col("vec_id").as("q_id"), col("v").as("qv"),
             col("__nrm").as("__qn")), Seq("q_id"))
-          .join(e.select(col("vec_id").as("n_id"), col("v"), col("__nrm")), Seq("n_id"))
-          .select(col("q_id"), col("n_id"),
-            cosineE6Pre(col("qv"), col("v"), col("__qn"), col("__nrm")).as("cos_sim_e6"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim_e6").desc, col("n_id").asc)
-        scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
+          .join(e.select(col("vec_id").as("n_id"), col("v"), col("__nrm")), Seq("n_id")), 3)
       },
       Some {
         val bandKeys = (0 until AnnBands).map { b =>

@@ -1,9 +1,8 @@
 package graft.resolve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.SparkOrder
 
 /** Transitive closure of match edges into entity clusters via alternating
@@ -18,19 +17,14 @@ import graft.functions.SparkOrder
   * Iterate until the edge multiset reaches a fixpoint; result is a forest
   * of depth 1 rooted at each component's minimum node.
   *
-  * Scale: each round is two groupBy shuffles on node id. Convergence is
-  * checked via a cheap aggregate (count + sum of hashes). Every iteration
-  * is checkpointed (lineage truncation — localCheckpoint by default, or
-  * parquet files under `checkpointDir`, a cut that survives a lost
-  * executor; no rerun reads them back).
+  * Scale: each round is two groupBy shuffles on node id. The entry edge set
+  * and every round are materialised once, as one Spark job: an eager
+  * localCheckpoint, or a parquet write under `checkpointDir` (a cut that
+  * survives a lost executor; no rerun reads it back). Convergence is
+  * checked via the (count, sum of hashes) signature observed on that job.
   */
 object ConnectedComponents {
 
-  /** @param edges two string columns (src, dst); undirected.
-    * @return (conv_id, cluster_id): every node mapped to its component's
-    *         minimum node id. Nodes absent from `edges` are not returned —
-    *         union singletons in the caller.
-    */
   /** Edge sets at or below this size are finished EXACTLY on the driver
     * with union-find instead of iterating: each large/small-star round is
     * four shuffles plus a materialisation barrier, and on a small edge set
@@ -52,6 +46,11 @@ object ConnectedComponents {
   /** Star rounds before giving up on a fixpoint (with a warning). */
   private val MaxIterations = 20
 
+  /** @param edges two columns (src, dst) of string or integral ids; undirected.
+    * @return (conv_id, cluster_id): every node mapped to its component's
+    *         minimum node id. Nodes absent from `edges` are not returned —
+    *         union singletons in the caller.
+    */
   def run(
       spark: SparkSession,
       edges: DataFrame,
@@ -61,7 +60,7 @@ object ConnectedComponents {
     val dstCol = edges.columns(1)
 
     // canonical undirected edge set, self-loops dropped
-    var e = edges
+    val canonical = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("src"),
@@ -69,55 +68,39 @@ object ConnectedComponents {
       .distinct()
     // the driver finish's id order, taken before anything runs so an
     // unsupported id type fails whichever path the edge count selects
-    val idOrder = SparkOrder(e.schema("src").dataType)
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    val idOrder = SparkOrder(canonical.schema("src").dataType)
 
+    // The only materialisation site: one job writes `df` and observes its
     // (count, order-independent hash-sum) signature; decimal sum so the
-    // aggregate cannot overflow under ANSI mode
-    def sigOf(df: DataFrame): (Long, String) = {
-      val row = df.select(
-        count(lit(1)).as("n"),
+    // aggregate cannot overflow under ANSI mode.
+    def materialise(df: DataFrame, name: String): (DataFrame, (Long, String)) = {
+      val sig = Observation()
+      val observed = df.observe(sig, count(lit(1)).as("n"),
         coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO)).cast("string").as("h"))
-        .head()
-      (row.getLong(0), row.getString(1))
+      val out = checkpointDir match {
+        case Some(dir) =>
+          val path = s"$dir/$name"
+          observed.write.mode("overwrite").parquet(path)
+          spark.read.schema(df.schema).parquet(path)
+        case None => observed.localCheckpoint(eager = true)
+      }
+      val m = sig.get
+      (out, (m("n").asInstanceOf[Long], m("h").asInstanceOf[String]))
     }
 
+    // seeded with the INPUT edge set's signature: a round whose output
+    // equals its input is a fixpoint — detected without an extra
+    // confirmation round (VERDICT r2 #7).
+    var (e, prevSig) = materialise(canonical, "cc_edges")
     var converged = false
     var iter = 0
-    // seed with the INPUT edge set's signature: a round whose output equals
-    // its input is a fixpoint — detected without an extra confirmation
-    // round (each round is two shuffles; at 12+ iterations on big graphs
-    // that is a full round saved — VERDICT r2 #7).
-    var prevSig: (Long, String) = sigOf(e)
-
     // the driver-finish gate is part of the loop condition: an edge set at
     // or below it (at entry or after any round) leaves the loop for the
     // exact union-find finish below
     while (!converged && prevSig._1 > driverFinishMaxEdges && iter < MaxIterations) {
-      val small = starRound(e)
-
-      // materialisation: the persist + signature aggregate below runs the
-      // iteration as one job; lineage is truncated via localCheckpoint only
-      // every OTHER iteration (plan growth over 2 cached iterations is
-      // trivial, and skipping the extra eager-checkpoint job halves the
-      // per-iteration barrier count — VERDICT r4 #5 "fewer rounds per
-      // checkpoint"). The parquet path cuts lineage every iteration, read
-      // back with the round's schema (no schema-inference job).
-      val next = checkpointDir match {
-        case Some(dir) =>
-          val path = s"$dir/cc_iter_$iter"
-          small.write.mode("overwrite").parquet(path)
-          spark.read.schema(small.schema).parquet(path)
-        case None if iter % 2 == 1 => small.localCheckpoint(eager = true)
-        case None => small
-      }
-      val nextP = next.persist(StorageLevel.MEMORY_AND_DISK)
-
-      val sig = sigOf(nextP)
-
-      e.unpersist()
-      e = nextP
+      val (next, sig) = materialise(starRound(e), s"cc_iter_$iter")
+      e = next
       converged = sig == prevSig
       prevSig = sig
       iter += 1
@@ -132,9 +115,7 @@ object ConnectedComponents {
     // the same components and min-id roots. prevSig._1 is the edge count the
     // convergence signature already paid for.
     if (!converged && prevSig._1 <= driverFinishMaxEdges) {
-      val assign = driverUnionFind(spark, e, idOrder)
-      e.unpersist()
-      assign
+      driverUnionFind(spark, e, idOrder)
     } else {
       if (!converged) {
         // deriving assignments from a non-fixpoint forest can split

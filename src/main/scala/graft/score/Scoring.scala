@@ -11,9 +11,12 @@ import graft.signature.Signatures
   * semantics, SURVEY.md §3.3). Levels are evaluated first-match-wins, like
   * the reference's CASE cascades.
   *
-  * All levels are pure Column expressions => one whole-stage-codegen'd
-  * projection over the blocked pairs; the only non-built-in is the custom
-  * JaroWinkler Catalyst expression.
+  * All levels are Column expressions in one projection over the blocked
+  * pairs; the only non-built-in is the custom JaroWinkler Catalyst
+  * expression. Not all of it is code-generated: the TF product
+  * (`map_filter` + `aggregate`) and the mean turn JW (`zip_with` +
+  * `aggregate`) are higher-order functions, which Spark evaluates
+  * interpreted (`CodegenFallback`) inside the generated stage.
   */
 private[score] final case class ComparisonLevel(
     name: String,
