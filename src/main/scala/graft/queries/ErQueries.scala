@@ -1,18 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.blocking.{Blocking, BlockingRule}
+import graft.score.{Comparison, ComparisonLevel, ScoreModel, Scoring}
 import graft.functions.GraftFunctions._
 import graft.functions.JaroWinkler.jaroWinkler
 
 /** Entity-resolution pipeline stages expressed as oracle-checkable queries
-  * over `documents` (stand-in records): union-of-rules blocking with
-  * match_key dedup (reference: linking_model/blocking.py + Splink blocking
-  * semantics), Fellegi-Sunter log2-Bayes-factor scoring (reference:
+  * over `documents` (stand-in records), each run by the pipeline's own
+  * operator: union-of-rules blocking with match_key dedup (`Blocking`;
+  * reference: linking_model/blocking.py + Splink blocking semantics),
+  * Fellegi-Sunter log2-Bayes-factor scoring (`Scoring.score`; reference:
   * data/splink_model.json comparison cascades), and best-match selection
-  * with distinguishability (reference: post_linkage/analyse_results.py:48-161).
+  * with distinguishability (`Evaluate.bestMatches`; reference:
+  * post_linkage/analyse_results.py:48-161).
   */
 object ErQueries {
   import Tables.load
@@ -88,16 +91,20 @@ object ErQueries {
 
   /** Scored self-mode pairs over one materialised feature table. */
   private def scoredPairs(f: DataFrame): DataFrame =
-    scoreCols(withTexts(blockedPairs(f), f, f))
+    score(withTexts(blockedPairs(f), f, f))
 
   /** The top candidate per doc_id_r (weight descending, then doc_id_l
     * ascending) as `Evaluate.bestMatches`' (conv_id_r, conv_id_l,
-    * match_weight), the weight e6-scaled.
+    * match_weight, distinguishability, match_count), both weights e6-scaled.
     */
   private def bestOf(scored: DataFrame): DataFrame =
     graft.evaluate.Evaluate.bestMatches(scored.select(
       col("doc_id_l").as("conv_id_l"), col("doc_id_r").as("conv_id_r"),
       col("match_weight_e6").as("match_weight")))
+
+  /** Labels (conv_id, correct_conv_id): the least doc_id of each norm_text. */
+  private def labels(f: DataFrame): DataFrame = f.select(col("doc_id").as("conv_id"),
+    min(col("doc_id")).over(Window.partitionBy(col("norm_text"))).as("correct_conv_id"))
 
   private val duckBlockedPairs: String = s"""
     WITH f AS ($duckFeatures),
@@ -124,51 +131,53 @@ object ErQueries {
       WHERE NOT coalesce(l.k0 = r.k0, FALSE) AND NOT coalesce(l.k1 = r.k1, FALSE))
     SELECT * FROM pairs"""
 
-  // ---- Fellegi-Sunter scoring -----------------------------------------
-  // Every comparison-level Bayes factor is a power of two (1024, 128, …,
-  // 0.0625), so the FS weight decomposes EXACTLY as
-  //   match_weight = log2(prior_odds) + w_int
-  // with w_int an integer (the sum of the per-comparison log2 tiers) and
-  // prior_odds = 0.001/0.999 = 1/999 exactly. We therefore emit
-  //   match_weight_e6      = w_int·10^6 + round(log2(1/999)·10^6)   (BIGINT)
-  //   match_probability_e8 = half-up(p·10^8), p = 2^w/(999 + 2^w)   (BIGINT)
-  // — p is a ratio of exact integers (multiply through by 2^-w when w < 0),
-  // so both columns are pure integer arithmetic on both engines: no
-  // log2/pow double is ever emitted (the r2 ulp hash class). w_int range
-  // is [-9, 24], so 2·2^w·10^8 ≤ 3.4e15 — no overflow.
-  private val PriorE6 = -9964341L // round(log2(1/999) * 1e6); log2(1/999) = -9.964340867792417
+  // ---- Fellegi-Sunter scoring: the pipeline's scorer, `Scoring.score` ----
+  // Every Bayes factor of the model below is a power of two, so the sum of
+  // the bf_* columns' log2s rounds exactly to an integer w_int, and
+  // match_weight = log2(1/999) + w_int (prior 0.001). The emitted BIGINTs are
+  // integer arithmetic on w_int, never on the double match_weight, whose
+  // last ulp may differ between engines:
+  //   match_weight_e6      = w_int·10^6 + round(log2(1/999)·10^6)
+  //   match_probability_e8 = half-up(p·10^8), p = 2^w/(999 + 2^w)
+  // (numerator and denominator times 2^-w when w < 0); w_int ∈ [-9, 24], so
+  // 2·2^w·10^8 ≤ 3.4e15: no overflow.
 
-  /** Spark-side score columns; mirrors the DuckDB SQL in duckScore. */
-  private def scoreCols(df: DataFrame): DataFrame = {
-    val jw = jaroWinkler(substring(col("norm_text_l"), 1, 80), substring(col("norm_text_r"), 1, 80))
-    val wText = when(col("norm_text_l") === col("norm_text_r"), lit(10))
-      .when(jw > 0.95, lit(7))
-      .when(jw > 0.9, lit(5))
-      .when(jw > 0.8, lit(2))
-      .otherwise(lit(-2))
+  /** The ER model over (norm_text, toks)_l/_r, duckScore's CASE ladders:
+    * text exact or JW over the first 80 chars, token-set Jaccard, and the
+    * first number in the text.
+    */
+  private val model: ScoreModel = {
+    def level(name: String, cond: Column, log2Bf: Int) =
+      ComparisonLevel(name, cond, math.pow(2, log2Bf))
+    val (textL, textR) = (col("norm_text_l"), col("norm_text_r"))
+    val jw = jaroWinkler(substring(textL, 1, 80), substring(textR, 1, 80))
     val jac = jaccard(array_distinct(col("toks_l")), array_distinct(col("toks_r")))
-    val wJac = when(jac >= 0.9, lit(8))
-      .when(jac >= 0.7, lit(6))
-      .when(jac >= 0.5, lit(4))
-      .when(jac >= 0.3, lit(1))
-      .otherwise(lit(-3))
-    val num1l = try_element_at(regexp_extract_all(col("norm_text_l"), lit("[0-9]+"), lit(0)), lit(1))
-    val num1r = try_element_at(regexp_extract_all(col("norm_text_r"), lit("[0-9]+"), lit(0)), lit(1))
-    val wNum = when(num1l.isNull || num1r.isNull, lit(0))
-      .when(num1l === num1r, lit(6))
-      .otherwise(lit(-4))
-    df.withColumn("w_int", (wText + wJac + wNum).cast("long"))
+    def firstNumber(t: Column) =
+      try_element_at(regexp_extract_all(t, lit("[0-9]+"), lit(0)), lit(1))
+    val (numL, numR) = (firstNumber(textL), firstNumber(textR))
+    ScoreModel(0.001, Seq(
+      Comparison("text", level("exact", textL === textR, 10) +:
+        Seq(0.95 -> 7, 0.9 -> 5, 0.8 -> 2).map { case (t, k) => level(s"jw_$t", jw > t, k) },
+        elseBf = lit(math.pow(2, -2))),
+      Comparison("token_jaccard", Seq(0.9 -> 8, 0.7 -> 6, 0.5 -> 4, 0.3 -> 1)
+        .map { case (t, k) => level(s"jac_$t", jac >= t, k) }, elseBf = lit(math.pow(2, -3))),
+      Comparison("first_number", Seq(level("null", numL.isNull || numR.isNull, 0),
+        level("exact", numL === numR, 6)), elseBf = lit(math.pow(2, -4)))))
+  }
+
+  /** round(log2(1/999) * 1e6) = -9964341, the literal in duckScore. */
+  private val PriorE6 = math.round(model.priorLog2 * 1e6)
+
+  /** `Scoring.score` under `model`, then duckScore's w_int-derived BIGINTs. */
+  private def score(pairs: DataFrame): DataFrame = {
+    val log2Bfs = model.comparisons.map(c => log2(col(s"bf_${c.name}")))
+    val (pos, neg) = ("shiftleft(1L, CAST(w_int AS INT))", "shiftleft(1L, CAST(-w_int AS INT))")
+    Scoring.score(pairs, model)
+      .withColumn("w_int", round(log2Bfs.reduce(_ + _)).cast("long"))
       .withColumn("match_weight_e6", col("w_int") * lit(1000000L) + lit(PriorE6))
-      .withColumn("match_probability_e8", expr("""
-        CASE WHEN w_int >= 0 THEN
-          (2 * shiftleft(CAST(1 AS BIGINT), CAST(w_int AS INT)) * 100000000
-             + 999 + shiftleft(CAST(1 AS BIGINT), CAST(w_int AS INT)))
-          div (2 * (999 + shiftleft(CAST(1 AS BIGINT), CAST(w_int AS INT))))
-        ELSE
-          (2 * CAST(100000000 AS BIGINT)
-             + 999 * shiftleft(CAST(1 AS BIGINT), CAST(-w_int AS INT)) + 1)
-          div (2 * (999 * shiftleft(CAST(1 AS BIGINT), CAST(-w_int AS INT)) + 1))
-        END"""))
+      .withColumn("match_probability_e8", expr(s"""CASE WHEN w_int >= 0
+        THEN (2 * $pos * 100000000 + 999 + $pos) div (2 * (999 + $pos))
+        ELSE (2 * 100000000L + 999 * $neg + 1) div (2 * (999 * $neg + 1)) END"""))
   }
 
   private val duckScore: String = s"""
@@ -236,30 +245,20 @@ object ErQueries {
     // doc_id_l, LEAD gap, category ladder).
     QueryDef(
       "q28_best_match",
-      (s, dir) => {
-        val scored = scoredPairs(featuresM(s, dir))
-          .select(col("doc_id_l"), col("doc_id_r"), col("match_weight_e6"))
-        val w = Window.partitionBy(col("doc_id_r"))
-          .orderBy(col("match_weight_e6").desc, col("doc_id_l").asc)
-        // distinguishability is a DIFFERENCE of weights, so the log2-prior
-        // term cancels: d_e6 is an exact multiple of 10^6 and the d > 10/5/0
-        // ladder maps 1:1 onto the e6-scaled thresholds.
-        val withWin = scored
-          .withColumn("rn", row_number().over(w))
-          .withColumn("distinguishability_e6",
-            col("match_weight_e6") - lead(col("match_weight_e6"), 1).over(w))
-          .withColumn("match_count", count(lit(1)).over(Window.partitionBy(col("doc_id_r"))))
-        withWin.filter(col("rn") === 1)
-          .withColumn("d_category",
-            when(col("match_count") === 1, "01: one match only")
-              .when(col("distinguishability_e6").isNull, "05: nan")
-              .when(col("distinguishability_e6") > 10000000L, "02: d > 10")
-              .when(col("distinguishability_e6") > 5000000L, "03: d > 5")
-              .when(col("distinguishability_e6") > 0L, "04: d > 0")
-              .otherwise("06: d = 0"))
-          .select(col("doc_id_r"), col("doc_id_l"), col("match_weight_e6"),
-            col("distinguishability_e6"), col("match_count"), col("d_category"))
-      },
+      // distinguishability is a DIFFERENCE of weights, so the log2-prior
+      // term cancels: d_e6 is an exact multiple of 10^6 and the d > 10/5/0
+      // ladder maps 1:1 onto the e6-scaled thresholds.
+      (s, dir) => bestOf(scoredPairs(featuresM(s, dir)))
+        .select(col("conv_id_r").as("doc_id_r"), col("conv_id_l").as("doc_id_l"),
+          col("match_weight").as("match_weight_e6"),
+          col("distinguishability").as("distinguishability_e6"), col("match_count"))
+        .withColumn("d_category",
+          when(col("match_count") === 1, "01: one match only")
+            .when(col("distinguishability_e6").isNull, "05: nan")
+            .when(col("distinguishability_e6") > 10000000L, "02: d > 10")
+            .when(col("distinguishability_e6") > 5000000L, "03: d > 5")
+            .when(col("distinguishability_e6") > 0L, "04: d > 0")
+            .otherwise("06: d = 0")),
       Some(s"""
         WITH pairs AS ($duckBlockedPairs),
         scored AS ($duckScore),
@@ -347,7 +346,7 @@ object ErQueries {
         // mergeMatches upcasts it to DOUBLE alongside the deterministic
         // NULLs, but every value is an integer < 2^53 so the final cast
         // back to BIGINT is exact.
-        val best = bestOf(scoreCols(withTexts(pairs, canonF, remaining)))
+        val best = bestOf(score(withTexts(pairs, canonF, remaining)))
           .select("conv_id_r", "conv_id_l", "match_weight")
         val merged = graft.evaluate.Evaluate.mergeMatches(
           det.withColumnRenamed("doc_id", "conv_id"), best)
@@ -429,12 +428,9 @@ object ErQueries {
       "q36_accuracy_report",
       (s, dir) => {
         val f = featuresM(s, dir)
-        val labels = f.select(col("doc_id").as("conv_id"),
-          min(col("doc_id")).over(Window.partitionBy(col("norm_text")))
-            .as("correct_conv_id"))
         val matches = bestOf(scoredPairs(f)).select(col("conv_id_r"), col("conv_id_l"),
           when(col("match_weight") > 0, "strong").otherwise("weak").as("match_reason"))
-        graft.evaluate.Evaluate.accuracyByReason(matches, labels)
+        graft.evaluate.Evaluate.accuracyByReason(matches, labels(f))
           .drop("accuracy_pct") // DOUBLE is human-facing; hash the exact BIGINT
       },
       Some(s"""
@@ -468,12 +464,9 @@ object ErQueries {
       "q37_nth_fp_example",
       (s, dir) => {
         val f = featuresM(s, dir)
-        val labels = f.select(col("doc_id").as("conv_id"),
-          min(col("doc_id")).over(Window.partitionBy(col("norm_text")))
-            .as("correct_conv_id"))
         val matches = bestOf(scoredPairs(f)).select(col("conv_id_r"), col("conv_id_l"),
           lit("best").as("match_reason"))
-        graft.evaluate.Evaluate.nthFalsePositive(matches, labels, 5)
+        graft.evaluate.Evaluate.nthFalsePositive(matches, labels(f), 5)
           .select(col("conv_id_r").as("doc_id_r"), col("conv_id_l").as("doc_id_l"),
             col("correct_conv_id").as("correct_doc_id"))
       },

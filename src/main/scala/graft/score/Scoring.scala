@@ -11,6 +11,11 @@ import graft.signature.Signatures
   * semantics, SURVEY.md §3.3). Levels are evaluated first-match-wins, like
   * the reference's CASE cascades.
   *
+  * Two models run through `Scoring.score`: the default transcript model
+  * (`scoreDefault`, the pipeline's scorer) and the ER query model over
+  * `documents` (`graft.queries.ErQueries`), whose results the DuckDB oracle
+  * checks.
+  *
   * All levels are Column expressions in one projection over the blocked
   * pairs; the only non-built-in is the custom JaroWinkler Catalyst
   * expression. Not all of it is code-generated: the TF product
@@ -18,7 +23,7 @@ import graft.signature.Signatures
   * `aggregate`) are higher-order functions, which Spark evaluates
   * interpreted (`CodegenFallback`) inside the generated stage.
   */
-private[score] final case class ComparisonLevel(
+private[graft] final case class ComparisonLevel(
     name: String,
     condition: Column,
     bayesFactor: Double,
@@ -37,21 +42,21 @@ private[score] final case class ComparisonLevel(
   }
 }
 
-private[score] object ComparisonLevel {
+private[graft] object ComparisonLevel {
   private val TfAdjustWeight = 0.1
 }
 
 /** A comparison's Bayes factor: the first matching level's, else `elseBf`,
   * which may be a column expression (the banded TF product).
   */
-private[score] final case class Comparison(
+private[graft] final case class Comparison(
     name: String, levels: Seq[ComparisonLevel], elseBf: Column) {
   def bfColumn: Column =
     levels.tail.foldLeft(when(levels.head.condition, levels.head.bfColumn))(
       (c, lv) => c.when(lv.condition, lv.bfColumn)).otherwise(elseBf)
 }
 
-private[score] final case class ScoreModel(
+private[graft] final case class ScoreModel(
     priorMatchProbability: Double, comparisons: Seq[Comparison]) {
   def priorLog2: Double =
     math.log(priorMatchProbability / (1.0 - priorMatchProbability)) / math.log(2.0)
@@ -73,7 +78,7 @@ object Scoring {
     * (the prior's log2 odds plus each log2 BF, in model order) and
     * match_probability.
     */
-  private[score] def score(pairs: DataFrame, model: ScoreModel): DataFrame = {
+  private[graft] def score(pairs: DataFrame, model: ScoreModel): DataFrame = {
     val withBf = model.comparisons.foldLeft(pairs) { (df, cmp) =>
       df.withColumn(s"bf_${cmp.name}", cmp.bfColumn)
     }
